@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 class CatalogDecimal:
@@ -104,18 +104,18 @@ def create_database(spark: SparkSession, database: str) -> None:
     spark.sql(f"CREATE DATABASE IF NOT EXISTS `{database}`")
 
 
-def existing_table_schema(spark: SparkSession, database: str, table: str) -> list[dict]:
-    """Catalog schema as ``[{"Name", "Type"}]`` rows, excluding partition cols."""
-    partition_cols = {
-        col.name
-        for col in spark.catalog.listColumns(tableName=table, dbName=database)
-        if col.isPartition
-    }
-    return [
-        {"Name": col.name, "Type": col.dataType.lower()}
-        for col in spark.catalog.listColumns(tableName=table, dbName=database)
-        if col.name not in partition_cols
-    ]
+def table_columns(spark: SparkSession, database: str, table: str) -> tuple[list[dict], list[str]]:
+    """Catalog schema as ``([{"Name", "Type"}], partition_cols)``; the
+    schema rows exclude the partition columns.
+
+    The JVM ``Catalog.listColumns`` listing is a local relation, so
+    collecting it runs no Spark job.  PySpark's ``spark.catalog.listColumns``
+    returns the same rows but collects them with ``toLocalIterator``, one
+    job per partition of the listing."""
+    listing = spark._jsparkSession.catalog().listColumns(database, table).toDF()
+    rows = DataFrame(listing, spark).collect()
+    schema = [{"Name": r.name, "Type": r.dataType.lower()} for r in rows if not r.isPartition]
+    return schema, [r.name for r in rows if r.isPartition]
 
 
 def enforce_schema_evolution(
@@ -131,17 +131,12 @@ def enforce_schema_evolution(
     if not table_exists(spark, database, table):
         return
     partition_keys = partition_keys or []
-    existing_partition_cols = [
-        col.name
-        for col in spark.catalog.listColumns(tableName=table, dbName=database)
-        if col.isPartition
-    ]
+    existing, existing_partition_cols = table_columns(spark, database, table)
     if existing_partition_cols and sorted(existing_partition_cols) != sorted(partition_keys):
         raise RuntimeError(
             f"Partition key change on {database}.{table} is not allowed: "
             f"{existing_partition_cols} -> {partition_keys}"
         )
-    existing = existing_table_schema(spark, database, table)
     incoming = [row for row in new_schema if row["Name"] not in set(partition_keys)]
     if not check_schema_change(existing, incoming, allow_schema_change):
         raise RuntimeError(

@@ -6,11 +6,17 @@ and writes ``<table>_quarantine_<stage>`` then aborts if *every* row was
 quarantined (:174-263); halt is evaluated last against the pre-quarantine
 DataFrame (:116-142, :311-314) and raises on any failure.
 
-One ``df.agg`` evaluates every aggregate rule of a stage; row-level rules
-fold into a single conjunction for the quarantine split (two filters over
-one cached plan).  CustomSql rules run as their own ``spark.sql`` against a
-``primary`` temp view; row-level CustomSql passes rows by semi-join on the
-selected key column(s).
+One ``df.agg`` per stage, over the pre-quarantine frame, evaluates every
+aggregate warn and halt rule together with the quarantine split's fail and
+pass counts (and, when the caller asks, the lineage numeric audit).  The
+stage's side effects then run in order from that one row: warn log,
+quarantine write, the all-rows-quarantined error, halt.  Row-level
+quarantine rules fold into a single conjunction, so the split is two
+filters over one plan.  Rules that need a join or a sub-aggregation keep
+their own evaluation: ReferentialIntegrity, DatasetMatch, CustomSql (run
+as its own ``spark.sql`` against a ``primary`` temp view; row-level
+CustomSql passes rows by semi-join on the selected key column(s)) and
+``dataset_eval`` rules.
 """
 
 from __future__ import annotations
@@ -47,19 +53,25 @@ class DQStageResult:
     quarantine_df: DataFrame | None = None
 
 
-def _evaluate_rules(
-    df: DataFrame, rules: list[CompiledRule], ctx: RunContext
-) -> list[RuleOutcome]:
-    """Aggregate pass over all rules; CustomSql via temp view."""
-    outcomes: list[RuleOutcome] = []
-    agg_exprs: dict[str, Column] = {}
+def _agg_exprs(rules: list[CompiledRule]) -> dict[str, Column]:
+    exprs: dict[str, Column] = {}
     for rule in rules:
-        agg_exprs.update(rule.agg_exprs)
-    agg_row: dict[str, Any] = {}
-    if agg_exprs:
-        agg_row = (
-            df.agg(*[expr.alias(name) for name, expr in agg_exprs.items()]).collect()[0].asDict()
-        )
+        exprs.update(rule.agg_exprs)
+    return exprs
+
+
+def _aggregate(df: DataFrame, exprs: dict[str, Column]) -> dict[str, Any]:
+    if not exprs:
+        return {}
+    return df.agg(*[expr.alias(name) for name, expr in exprs.items()]).collect()[0].asDict()
+
+
+def _outcomes(
+    df: DataFrame, rules: list[CompiledRule], agg_row: dict[str, Any], ctx: RunContext
+) -> list[RuleOutcome]:
+    """Outcomes of ``rules`` given the values of their aggregates in
+    ``agg_row``; join-based and CustomSql rules evaluate here, over ``df``."""
+    outcomes: list[RuleOutcome] = []
     for rule in rules:
         if rule.ri_keys is not None:
             outcomes.append(_evaluate_ref_integrity(df, rule))
@@ -78,6 +90,13 @@ def _evaluate_rules(
         else:
             outcomes.append(RuleOutcome(rule.text, True))
     return outcomes
+
+
+def _evaluate_rules(
+    df: DataFrame, rules: list[CompiledRule], ctx: RunContext
+) -> list[RuleOutcome]:
+    """Aggregate pass over all rules; CustomSql via temp view."""
+    return _outcomes(df, rules, _aggregate(df, _agg_exprs(rules)), ctx)
 
 
 def _evaluate_ref_integrity(df: DataFrame, rule: CompiledRule) -> RuleOutcome:
@@ -163,10 +182,13 @@ def _evaluate_custom_sql(df: DataFrame, rule: CompiledRule, ctx: RunContext) -> 
     return RuleOutcome(rule.text, bool(passed), {"scalar": scalar})
 
 
-def _quarantine_split(
+def _quarantine_marks(
     df: DataFrame, rules: list[CompiledRule], ctx: RunContext
-) -> tuple[DataFrame, DataFrame]:
-    """Return (passing_rows, failing_rows) across all quarantine rules."""
+) -> tuple[DataFrame, Column | None]:
+    """Return ``(marked, predicate)``: ``df`` with one ``__dq_pass_*``
+    marker column per join-based rule (left joins against distinct key
+    sets, so the rows are ``df``'s), and the conjunction of every rule's
+    row-level pass predicate over it (None when no rule is row-level)."""
     predicate: Column | None = None
     for rule in rules:
         rule_pred = rule.predicate
@@ -187,23 +209,41 @@ def _quarantine_split(
             # Row-level CustomSql: rows pass when their key tuple appears in
             # the result set (left-semi); broadcast keeps it shuffle-free
             # when the key set is small.
+            # The key set is renamed before the join: it derives from df, and
+            # same-named key columns would let the drop take df's own column
+            # (failing rows would lose their keys, passing rows reorder).
             df.createOrReplaceTempView("primary")
             keys_df = ctx.spark.sql(rule.custom_sql).distinct()
             key_cols = keys_df.columns
+            aliases = [f"__dq_key_{i}" for i in range(len(key_cols))]
             marker = f"__dq_pass_{abs(hash(rule.text)) % (10**9)}"
-            marked = keys_df.withColumn(marker, F.lit(True))
-            join_cond = [df[c].eqNullSafe(marked[c]) for c in key_cols]
-            df = df.join(F.broadcast(marked), join_cond, "left").drop(*[marked[c] for c in key_cols])
+            marked = keys_df.toDF(*aliases).withColumn(marker, F.lit(True))
+            join_cond = [df[c].eqNullSafe(F.col(a)) for c, a in zip(key_cols, aliases)]
+            df = df.join(F.broadcast(marked), join_cond, "left").drop(*aliases)
             rule_pred = F.coalesce(F.col(marker), F.lit(False))
         if rule_pred is None:
             continue
         predicate = rule_pred if predicate is None else (predicate & rule_pred)
+    return df, predicate
+
+
+def _split(
+    df: DataFrame, marked: DataFrame, predicate: Column | None
+) -> tuple[DataFrame, DataFrame]:
+    """(passing_rows, failing_rows) of ``df``, from :func:`_quarantine_marks`."""
     if predicate is None:
         return df, df.limit(0)
-    marker_cols = [c for c in df.columns if c.startswith("__dq_pass_")]
-    passing = df.filter(predicate).drop(*marker_cols)
-    failing = df.filter(~F.coalesce(predicate.cast("boolean"), F.lit(False))).drop(*marker_cols)
-    return passing, failing
+    marker_cols = [c for c in marked.columns if c.startswith("__dq_pass_")]
+    passing = marked.filter(predicate).drop(*marker_cols)
+    failing = marked.filter(~F.coalesce(predicate.cast("boolean"), F.lit(False)))
+    return passing, failing.drop(*marker_cols)
+
+
+def _quarantine_split(
+    df: DataFrame, rules: list[CompiledRule], ctx: RunContext
+) -> tuple[DataFrame, DataFrame]:
+    """Return (passing_rows, failing_rows) across all quarantine rules."""
+    return _split(df, *_quarantine_marks(df, rules, ctx))
 
 
 def run_dq_stage(
@@ -213,12 +253,20 @@ def run_dq_stage(
     ctx: RunContext,
     table_name: str = "primary",
     quarantine_writer=None,
+    numeric_audit: bool = False,
 ) -> tuple[DataFrame, DQStageResult]:
     """Apply one stage's warn/quarantine/halt rules; returns the (possibly
-    quarantine-filtered) DataFrame and the stage outcomes."""
+    quarantine-filtered) DataFrame and the stage outcomes.
+
+    ``quarantine_writer(failing, table, rows)`` is called once per stage
+    with quarantine rules, also when no row fails (``rows == 0``), so it
+    can replace what an earlier load of the partition quarantined.
+    ``numeric_audit`` folds the lineage numeric audit of ``df`` into the
+    stage aggregate and logs it before the stage's own events."""
     result = DQStageResult(stage=stage)
     stage_rules: dict = dq_rules.get(stage, {})
-    if not stage_rules:
+    audit = ctx.lineage if numeric_audit else None
+    if not stage_rules and audit is None:
         return df, result
     compiler = RuleCompiler(df)
 
@@ -226,38 +274,51 @@ def run_dq_stage(
     quarantine = [compiler.compile(r) for r in stage_rules.get("quarantine_rules", [])]
     halt = [compiler.compile(r) for r in stage_rules.get("halt_rules", [])]
 
-    pre_quarantine_df = df
-    if warn:
-        for outcome in _evaluate_rules(df, warn, ctx):
-            outcome_kind = "warn"
-            result.outcomes.append(outcome)
-            if not outcome.passed:
-                logger.warning("DQ %s rule failed (%s): %s", outcome_kind, stage, outcome.rule)
-            ctx.log_lineage("dq-warn", rule=outcome.rule, passed=outcome.passed,
-                            observed=outcome.observed)
+    # One aggregate over the pre-quarantine rows: warn and halt aggregates,
+    # the quarantine fail/pass counts and the audit.  The marker joins of
+    # the quarantine split keep df's rows, so every aggregate can run over
+    # the marked frame.
+    frame, predicate = _quarantine_marks(df, quarantine, ctx) if quarantine else (df, None)
+    exprs = _agg_exprs(warn + halt)
+    if predicate is not None:
+        passed = F.coalesce(predicate.cast("boolean"), F.lit(False))
+        exprs["__dq_quarantine_fail"] = F.count_if(~passed)
+        exprs["__dq_quarantine_pass"] = F.count_if(passed)
+    if audit is not None:
+        exprs.update(audit.numeric_audit_exprs(df))
+    agg_row = _aggregate(frame, exprs)
 
+    if audit is not None:
+        audit.log_numeric_audit(df, agg_row)
+
+    for outcome in _outcomes(df, warn, agg_row, ctx):
+        result.outcomes.append(outcome)
+        if not outcome.passed:
+            logger.warning("DQ warn rule failed (%s): %s", stage, outcome.rule)
+        ctx.log_lineage("dq-warn", rule=outcome.rule, passed=outcome.passed,
+                        observed=outcome.observed)
+
+    out = df
     if quarantine:
-        passing, failing = _quarantine_split(df, quarantine, ctx)
+        failing_count = int(agg_row.get("__dq_quarantine_fail", 0))
+        out, failing = _split(df, frame, predicate)
         failing = failing.withColumn("quarantine_timestamp", F.current_timestamp())
-        failing_count = failing.count()
         result.quarantined_count = failing_count
         result.quarantine_df = failing
-        if failing_count:
-            if quarantine_writer is not None:
-                quarantine_writer(failing, f"{table_name}_quarantine_{stage}")
-            if passing.limit(1).count() == 0:
-                raise DataQualityQuarantineAllRowsError(
-                    f"All rows failed quarantine rules in stage {stage}"
-                )
-        df = passing
+        if quarantine_writer is not None:
+            quarantine_writer(failing, f"{table_name}_quarantine_{stage}", failing_count)
+        if failing_count and not agg_row["__dq_quarantine_pass"]:
+            raise DataQualityQuarantineAllRowsError(
+                f"All rows failed quarantine rules in stage {stage}"
+            )
         ctx.log_lineage("dq-quarantine", stage=stage, quarantined=failing_count)
 
     if halt:
-        failures = [o for o in _evaluate_rules(pre_quarantine_df, halt, ctx) if not o.passed]
+        failures = [o for o in _outcomes(df, halt, agg_row, ctx) if not o.passed]
         result.outcomes.extend(failures)
         if failures:
             raise DataQualityHaltError(
                 f"DQ halt rule(s) failed in stage {stage}: "
                 + "; ".join(o.rule for o in failures)
             )
-    return df, result
+    return out, result

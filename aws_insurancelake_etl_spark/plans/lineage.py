@@ -7,8 +7,12 @@ sequence number, dataset, operation name, spec JSON, row/column counts, and a
 events append to a local JSONL file (or stay in memory), i.e. an ordinary
 lake table a cluster deployment would write as Parquet/Delta.
 
-The numeric audit is a single ``df.agg`` over all decimal/double columns —
-one job, map-side partial aggregation, no shuffle of raw data.
+The numeric audit is a row count plus a sum of every numeric column.
+Where the pipeline runs an action over the audited frame anyway, the
+audit's aggregates ride it (the cleanse write through ``df.observe``, the
+consume stage's DQ aggregate).  :meth:`LineageLog.numeric_audit` runs them
+as one ``df.agg`` where no such action exists (the read audit, whose row
+count is also the empty-input check).
 """
 
 from __future__ import annotations
@@ -17,7 +21,7 @@ import json
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,6 +55,24 @@ class LineageLog:
             with open(self.path, "a", encoding="utf-8") as handle:
                 handle.write(json.dumps(event, default=str) + "\n")
 
+    def numeric_audit_exprs(self, df: DataFrame) -> dict[str, Column]:
+        """The audit's aggregates over ``df``, by name: its row count and
+        the sum of every numeric column.  Fold them into an aggregate that
+        runs anyway, then log its result row with :meth:`log_numeric_audit`."""
+        return {
+            "__audit_rows": F.count(F.lit(1)),
+            **{f"__audit_sum_{i}": F.sum(F.col(c)) for i, c in enumerate(_numeric_columns(df))},
+        }
+
+    def log_numeric_audit(
+        self, df: DataFrame, row, operation: str = "numericaudit"
+    ) -> dict[str, Any]:
+        """Log the ``numericaudit`` event from a row holding the values of
+        :meth:`numeric_audit_exprs`."""
+        totals = {c: row[f"__audit_sum_{i}"] for i, c in enumerate(_numeric_columns(df))}
+        self.update(operation, df=df, row_count=row["__audit_rows"], column_sums=totals)
+        return {"row_count": row["__audit_rows"], "column_sums": totals}
+
     def numeric_audit_observed(
         self, df: DataFrame, operation: str = "numericaudit"
     ):
@@ -65,38 +87,22 @@ class LineageLog:
         executor memory)."""
         from pyspark.sql import Observation
 
-        numeric_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.typeName() in ("double", "float", "decimal", "integer", "long", "short")
-        ]
         obs = Observation(f"{operation}-{id(df)}")
         instrumented = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("__row_count"),
-            *[F.sum(F.col(c)).alias(c) for c in numeric_cols],
+            obs, *[expr.alias(name) for name, expr in self.numeric_audit_exprs(df).items()]
         )
-
-        def finish() -> dict[str, Any]:
-            row = obs.get
-            totals = {c: row[c] for c in numeric_cols}
-            self.update(operation, df=df, row_count=row["__row_count"],
-                        column_sums=totals)
-            return {"row_count": row["__row_count"], "column_sums": totals}
-
-        return instrumented, finish
+        return instrumented, lambda: self.log_numeric_audit(df, obs.get, operation)
 
     def numeric_audit(self, df: DataFrame, operation: str = "numericaudit") -> dict[str, Any]:
         """Row count + per-numeric-column sums as one aggregate job."""
-        numeric_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.typeName() in ("double", "float", "decimal", "integer", "long", "short")
-        ]
-        aggs = [F.count(F.lit(1)).alias("__row_count")] + [
-            F.sum(F.col(c)).alias(c) for c in numeric_cols
-        ]
-        row = df.agg(*aggs).collect()[0].asDict()
-        totals = {c: row[c] for c in numeric_cols}
-        self.update(operation, df=df, row_count=row["__row_count"], column_sums=totals)
-        return {"row_count": row["__row_count"], "column_sums": totals}
+        exprs = self.numeric_audit_exprs(df)
+        row = df.agg(*[expr.alias(name) for name, expr in exprs.items()]).collect()[0]
+        return self.log_numeric_audit(df, row, operation)
+
+
+def _numeric_columns(df: DataFrame) -> list[str]:
+    return [
+        f.name
+        for f in df.schema.fields
+        if f.dataType.typeName() in ("double", "float", "decimal", "integer", "long", "short")
+    ]

@@ -5,16 +5,17 @@ Stage order parity:
 
 Collect→Cleanse (``etl_collect_to_cleanse.py:58-353``):
   read (PERMISSIVE, inferred) → lineage read + numeric audit → empty-input
-  abort → schema map (custommapping, else clean names + recommended
-  artifacts) → DQ ``before_transform`` → ordered transform dispatch → inject
-  y/m/d + execution_id → DQ ``after_transform`` → schema-gated partitioned
-  write.
+  abort (from the audit's row count) → schema map (custommapping, else
+  clean names + recommended artifacts) → DQ ``before_transform`` → ordered
+  transform dispatch → inject y/m/d + execution_id → DQ ``after_transform``
+  → schema-gated partitioned write.
 
 Cleanse→Consume (``etl_cleanse_to_consume.py:69-247``):
   Spark SQL (``{var}`` substitution; optional ``CREATE TABLE <t> AS``
-  prefix overrides the target table) → DQ ``after_sparksql`` → full-table
-  rewrite → view DDL (``CREATE OR REPLACE VIEW`` replaces the reference's
-  Athena/Redshift stages).
+  prefix overrides the target table) → numeric audit and DQ
+  ``after_sparksql`` in one aggregate → full-table rewrite → view DDL
+  (``CREATE OR REPLACE VIEW`` replaces the reference's Athena/Redshift
+  stages).
 """
 
 from __future__ import annotations
@@ -75,9 +76,12 @@ def collect_to_cleanse(
     df = read_input(spark, source_path, config.input_spec, config.mapping)
     df = df.cache()
     ctx.log_lineage("read", df=df, source=source_path)
+    # the audit's row count doubles as the empty-input check
     if ctx.lineage is not None:
-        ctx.lineage.numeric_audit(df)
-    if not df.head(1):
+        empty = ctx.lineage.numeric_audit(df)["row_count"] == 0
+    else:
+        empty = not df.head(1)
+    if empty:
         raise RuntimeError(f"Input file {source_path} contained no data")
 
     # Schema mapping: fixed-width input is already mapped by the reader.
@@ -147,13 +151,14 @@ def cleanse_to_consume(
 
     df = sql_over_refs(spark, sql_text).cache()
     ctx.log_lineage("sparksql", df=df, sql=sql_text)
-    if ctx.lineage is not None:
-        ctx.lineage.numeric_audit(df)
 
+    # the numeric audit of the SQL result rides the stage's DQ aggregate
     dq_rules = config.dq_rules if config else {}
     partition = {"year": "0000", "month": "00", "day": "00"}
     qwriter = quarantine_writer(ctx, database, partition, execution_id)
-    df, _ = run_dq_stage(df, dq_rules, "after_sparksql", ctx, target_table, qwriter)
+    df, _ = run_dq_stage(
+        df, dq_rules, "after_sparksql", ctx, target_table, qwriter, numeric_audit=True
+    )
 
     write_consume_table(
         df, database, target_table, ctx, table_format=table_format

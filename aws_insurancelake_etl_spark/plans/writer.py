@@ -266,9 +266,17 @@ def write_consume_table(
 def quarantine_writer(ctx: RunContext, database: str, partition: dict[str, str],
                       execution_id: str):
     """Writer callback for the DQ runner: failing rows land in
-    ``<table>_quarantine_<stage>`` with partition + context columns."""
+    ``<table>_quarantine_<stage>`` with partition + context columns.
 
-    def write(failing: DataFrame, table: str) -> None:
+    Same per-partition reload semantics as the Cleanse write: the partition
+    is cleared first (a catalog operation, no Spark job), so dropping a
+    file again replaces its quarantined rows instead of appending a second
+    copy.  With ``rows == 0`` the clear is all that runs."""
+
+    def write(failing: DataFrame, table: str, rows: int) -> None:
+        clear_partition(ctx.spark, database, table, partition)
+        if not rows:
+            return
         stamped = add_partition_columns(failing, partition, execution_id)
         create_database(ctx.spark, database)
         (

@@ -1,11 +1,17 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Gate-level regression bench: times every query in ``BASELINES`` at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value"
+(total sec), "unit", "queries" {name: sec}, "sf", the calibration samples,
+"queries_normalized", "regressions", "burst_rechecked"}; the same line is
+saved to ``bench_last.json``.
 
 Each query is fully materialized via the no-op sink (all operators execute,
-nothing is collected to the driver).  A warmup run of the first query
-absorbs JVM/codegen startup so per-query numbers reflect steady state.
+nothing is collected back to Python).  One warmup pass over every query
+absorbs JVM/codegen startup, then two timed passes keep the minimum per
+query.  Times are normalized by an md5 calibration probe sampled three
+times through the run; a query slower than its baseline on both the
+normalized and raw axes (see ``compute_regressions``) is re-timed once and,
+if still flagged, makes the run exit with status 1.
 """
 
 from __future__ import annotations
@@ -438,18 +444,6 @@ def compute_regressions(
     return out
 
 
-# New-in-round queries, reported (queries_extended) but NOT yet gated: no
-# baseline exists for them until their first green bench round, after
-# which they move into BASELINES with that round's normalized time.
-# r13 (VERDICT r12 item 2): 64 additional gates promoted into the bench —
-# the stream/sql/docs batteries, the remaining Python-DataSource readers
-# (avro/xlsx/xml/orc — the §4 Arrow-boundary work stays guarded), dq/scd2/
-# pipeline families, and six heavy representatives that were invisible to
-# the perf gate.  They are measured with the same warmup+min-of-2
-# discipline and move into BASELINES with the r13 re-baseline run.
-EXTENDED: list[str] = []  # all 172 gates promoted into BASELINES in r13
-
-
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -526,20 +520,6 @@ def main() -> None:
 
     calib_samples.append(calib_sample())
     calib_shuffle_samples.append(calib_shuffle_sample())
-
-    # Extended set gets the same measurement discipline as the headline
-    # (warmup + min of 2) so the numbers are comparable across rounds.
-    extended: dict[str, float] = {}
-    for name in EXTENDED:
-        materialize(queries[name](spark, sf_dir))
-    for _ in range(2):
-        for name in EXTENDED:
-            start = time.time()
-            materialize(queries[name](spark, sf_dir))
-            elapsed = round(time.time() - start, 3)
-            if name not in extended or elapsed < extended[name]:
-                extended[name] = elapsed
-
     calib_samples.append(calib_sample())
     calib_shuffle_samples.append(calib_shuffle_sample())
     calib_sec = sorted(calib_samples)[1]
@@ -586,10 +566,6 @@ def main() -> None:
         "queries_normalized": normalized,
         "regressions": regressions,
         "burst_rechecked": rechecked,
-        "queries_extended": extended,
-        "queries_extended_normalized": {
-            name: round(sec * scale, 3) for name, sec in extended.items()
-        },
     }
     line = json.dumps(payload)
     # The driver captures only the tail of stdout, which truncated the

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import uuid
 
 import pytest
 
@@ -24,6 +25,24 @@ def spark():
         extra_confs={"spark.ui.enabled": "false"},
     )
     yield session
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` and returns how many Spark jobs it
+    submitted, counted under a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture()

@@ -81,7 +81,3 @@ def test_every_gated_name_is_a_registered_query():
     assert missing == []
     missing_raw = [n for n in bench.BASELINES_RAW if n not in bench.BASELINES]
     assert missing_raw == []
-    missing_ext = [n for n in bench.EXTENDED if n not in names]
-    assert missing_ext == []
-    double_listed = [n for n in bench.EXTENDED if n in bench.BASELINES]
-    assert double_listed == []

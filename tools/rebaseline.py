@@ -6,9 +6,7 @@ Each input is a bench_last.json-style payload (the one-line JSON the
 bench prints).  For every query seen in any run, the MEDIAN raw and
 median normalized seconds across the runs are printed as two dict
 bodies ready to paste into bench.py, plus the median calibration of the
-runs (provenance for the baseline block's comment).  Queries measured
-in ``queries_extended`` (new gates not yet in HEADLINE) are included
-the same way.
+runs (provenance for the baseline block's comment).
 """
 
 from __future__ import annotations
@@ -25,14 +23,10 @@ def main() -> None:
     raw: dict[str, list[float]] = {}
     norm: dict[str, list[float]] = {}
     for run in runs:
-        for src_raw, src_norm in (
-            ("queries", "queries_normalized"),
-            ("queries_extended", "queries_extended_normalized"),
-        ):
-            for name, sec in (run.get(src_raw) or {}).items():
-                raw.setdefault(name, []).append(sec)
-            for name, sec in (run.get(src_norm) or {}).items():
-                norm.setdefault(name, []).append(sec)
+        for name, sec in (run.get("queries") or {}).items():
+            raw.setdefault(name, []).append(sec)
+        for name, sec in (run.get("queries_normalized") or {}).items():
+            norm.setdefault(name, []).append(sec)
     calibs = [r["calib_md5_100k_sec"] for r in runs if "calib_md5_100k_sec" in r]
     print(f"# median calib of {len(runs)} run(s): "
           f"{statistics.median(calibs):.4f} (ref 0.0664)")
