@@ -16,6 +16,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -80,6 +81,9 @@ class RunContext:
     #: token vault rows accumulated by transform_tokenize within a run
     _token_vault: list[DataFrame] = field(default_factory=list)
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
+    #: how to release each frame cached or checkpointed for this run
+    #: (:meth:`cache`, :meth:`checkpoint`); :meth:`release_cached` runs them
+    _release: list[Callable[[], Any]] = field(default_factory=list, repr=False)
 
     def arg(self, key: str, default: Any = None) -> Any:
         return self.args.get(key, default)
@@ -87,6 +91,33 @@ class RunContext:
     def log_lineage(self, operation: str, df: DataFrame | None = None, **info: Any) -> None:
         if self.lineage is not None:
             self.lineage.update(operation, df=df, **info)
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, remembered so :meth:`release_cached` can
+        unpersist it when the run ends."""
+        df = df.cache()
+        with self._lock:
+            self._release.append(df.unpersist)
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df.localCheckpoint(eager=False)``: the first action that reads
+        the frame stores its rows as it computes them and later actions
+        read them back.  Under AQE this costs no job of its own, where a
+        :meth:`cache` is built by one.  Released by :meth:`release_cached`."""
+        df = df.localCheckpoint(eager=False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        with self._lock:
+            self._release.append(lambda: rdd.unpersist(False))
+        return df
+
+    def release_cached(self) -> None:
+        """Free every frame cached or checkpointed through :meth:`cache`
+        and :meth:`checkpoint`."""
+        with self._lock:
+            release, self._release = self._release, []
+        for unpersist in release:
+            unpersist()
 
     def add_token_vault(self, df: DataFrame) -> None:
         with self._lock:

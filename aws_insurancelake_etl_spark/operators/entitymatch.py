@@ -26,6 +26,7 @@ distributed:
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -220,33 +221,34 @@ def entity_match(
     primary: DataFrame,
     spec: dict,
     new_id_column: Column | None = None,
-    persist_intermediates: bool = False,
+    persist_intermediates: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Full match flow: prematched pass-through → exact → fuzzy levels →
     new-id fill → unionByName — the four streams of
     ``etl_consume_entity_match.py:404-431``.
 
-    ``persist_intermediates`` caches each level's shrinking ``unmatched``
-    frame (the reference's own inter-stage ``cache()`` discipline,
+    ``persist_intermediates`` (e.g. ``DataFrame.cache``) caches each
+    level's shrinking ``unmatched`` frame (the reference's own
+    inter-stage ``cache()`` discipline,
     ``etl_consume_entity_match.py:404,425``): every union branch embeds
     its full upstream, so an L-level spec otherwise re-derives the
     match joins O(L²) times.  Left off for one-level/ad-hoc calls where
     plan-level exchange reuse already covers it; the orchestrator's
-    long-lived flow turns it on.  Cached blocks are LRU-evicted; callers
-    running many flows in one session can ``spark.catalog.clearCache()``."""
+    long-lived flow passes :meth:`RunContext.cache`, which releases the
+    frames when the run ends."""
     global_id = spec["global_id_field"]
     if global_id not in incoming.columns:
         incoming = incoming.withColumn(global_id, F.lit(None).cast("string"))
 
     prematched, to_match = split_by_null(incoming, global_id)
     if persist_intermediates:
-        to_match = to_match.cache()
+        to_match = persist_intermediates(to_match)
     exact_matched, unmatched = exact_match(to_match, primary, spec)
 
     fuzzy_matched_parts: list[DataFrame] = []
     for level in spec.get("levels", []):
         if persist_intermediates:
-            unmatched = unmatched.cache()
+            unmatched = persist_intermediates(unmatched)
         matched, unmatched = fuzzy_match_level(unmatched, primary, level, spec)
         fuzzy_matched_parts.append(matched)
 

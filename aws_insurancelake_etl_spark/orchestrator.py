@@ -86,98 +86,104 @@ def run_pipeline(
     summary: dict = {"execution_id": execution_id, "database": database, "table": table,
                      "partition": args["partition"], "stages": []}
 
-    result = collect_to_cleanse(
-        ctx, dropped_file, database, table, config, args["partition"],
-        allow_schema_change, table_format=table_format,
-    )
-    summary["stages"].append("collect_to_cleanse")
-    # The row count was observed inside the cleanse write job itself
-    # (df.observe) — re-counting here would scan the stage output a
-    # second time.  Fall back to count() only when lineage was disabled.
-    summary["cleanse_row_count"] = (
-        result.row_count if result.row_count is not None else result.df.count()
-    )
-    if result.recommendations:
-        summary["recommendations"] = result.recommendations
-
-    if config.spark_sql:
-        consume = cleanse_to_consume(
-            ctx,
-            config.spark_sql,
-            database=f"{database}_consume",
-            table=table,
-            config=config,
-            substitutions={"database": database, "table": table, **args["partition"]},
-            table_format=table_format,
+    # frames the stages and the entity match cache are this load's
+    # alone: release them when it ends, or a long-lived session keeps
+    # every load's cached blocks
+    try:
+        result = collect_to_cleanse(
+            ctx, dropped_file, database, table, config, args["partition"],
+            allow_schema_change, table_format=table_format,
         )
-        summary["stages"].append("cleanse_to_consume")
-        if entitymatch_spec:
-            from pyspark.sql import functions as F  # noqa: PLC0415
+        summary["stages"].append("collect_to_cleanse")
+        # The row count was observed inside the cleanse write job itself
+        # (df.observe) — re-counting here would scan the stage output a
+        # second time.  Fall back to count() only when lineage was disabled.
+        summary["cleanse_row_count"] = (
+            result.row_count if result.row_count is not None else result.df.count()
+        )
+        if result.recommendations:
+            summary["recommendations"] = result.recommendations
 
-            gid = entitymatch_spec["global_id_field"]
-            primary_name = entitymatch_spec["primary_entity_table"]
-            if table_format in ("delta", "iceberg"):
-                # lakehouse primary: a transactional path table upserted
-                # through the SQL front-end's MERGE (one commit)
-                from .plans.writer import lakehouse_table_path  # noqa: PLC0415
-                from .sources import delta_lite, iceberg_lite  # noqa: PLC0415
+        if config.spark_sql:
+            consume = cleanse_to_consume(
+                ctx,
+                config.spark_sql,
+                database=f"{database}_consume",
+                table=table,
+                config=config,
+                substitutions={"database": database, "table": table, **args["partition"]},
+                table_format=table_format,
+            )
+            summary["stages"].append("cleanse_to_consume")
+            if entitymatch_spec:
+                from pyspark.sql import functions as F  # noqa: PLC0415
 
-                ppath = lakehouse_table_path(
-                    spark, f"{database}_consume", primary_name
-                )
-                exists = (
-                    delta_lite.is_delta_table(ppath)
-                    if table_format == "delta"
-                    else iceberg_lite.is_iceberg_table(ppath)
-                )
-                if exists:
-                    primary = (
-                        delta_lite.read_delta(spark, ppath)
+                gid = entitymatch_spec["global_id_field"]
+                primary_name = entitymatch_spec["primary_entity_table"]
+                if table_format in ("delta", "iceberg"):
+                    # lakehouse primary: a transactional path table upserted
+                    # through the SQL front-end's MERGE (one commit)
+                    from .plans.writer import lakehouse_table_path  # noqa: PLC0415
+                    from .sources import delta_lite, iceberg_lite  # noqa: PLC0415
+
+                    ppath = lakehouse_table_path(
+                        spark, f"{database}_consume", primary_name
+                    )
+                    exists = (
+                        delta_lite.is_delta_table(ppath)
                         if table_format == "delta"
-                        else iceberg_lite.read_iceberg(spark, ppath)
+                        else iceberg_lite.is_iceberg_table(ppath)
                     )
-                    matched = entity_match(
-                        consume.df, primary, entitymatch_spec,
-                        persist_intermediates=True,
-                    )
-                    merge_into_primary(
-                        spark, matched,
-                        f"{table_format}.`{ppath}`", gid,
-                    )
-                else:
-                    first = consume.df.withColumn(
-                        gid,
-                        F.coalesce(
-                            F.col(gid) if gid in consume.df.columns
-                            else F.lit(None),
-                            F.expr("uuid()"),
-                        ),
-                    )
-                    if table_format == "delta":
-                        delta_lite.write_delta(first, ppath)
+                    if exists:
+                        primary = (
+                            delta_lite.read_delta(spark, ppath)
+                            if table_format == "delta"
+                            else iceberg_lite.read_iceberg(spark, ppath)
+                        )
+                        matched = entity_match(
+                            consume.df, primary, entitymatch_spec,
+                            persist_intermediates=ctx.cache,
+                        )
+                        merge_into_primary(
+                            spark, matched,
+                            f"{table_format}.`{ppath}`", gid,
+                        )
                     else:
-                        import os as _os  # noqa: PLC0415
+                        first = consume.df.withColumn(
+                            gid,
+                            F.coalesce(
+                                F.col(gid) if gid in consume.df.columns
+                                else F.lit(None),
+                                F.expr("uuid()"),
+                            ),
+                        )
+                        if table_format == "delta":
+                            delta_lite.write_delta(first, ppath)
+                        else:
+                            import os as _os  # noqa: PLC0415
 
-                        _os.makedirs(ppath, exist_ok=True)
-                        iceberg_lite.write_iceberg(spark, first, ppath)
-            else:
-                primary_table = f"{database}_consume.{primary_name}"
-                if spark.catalog.tableExists(primary_table):
-                    primary = spark.table(primary_table)
-                    matched = entity_match(consume.df, primary, entitymatch_spec,
-                                           persist_intermediates=True)
-                    merge_into_primary(
-                        spark, matched, primary_table, gid
-                    )
+                            _os.makedirs(ppath, exist_ok=True)
+                            iceberg_lite.write_iceberg(spark, first, ppath)
                 else:
-                    first = consume.df.withColumn(
-                        gid,
-                        F.coalesce(
-                            F.col(gid) if gid in consume.df.columns else F.lit(None), F.expr("uuid()")
-                        ),
-                    )
-                    first.write.mode("overwrite").format("parquet").saveAsTable(primary_table)
-            summary["stages"].append("entity_match")
+                    primary_table = f"{database}_consume.{primary_name}"
+                    if spark.catalog.tableExists(primary_table):
+                        primary = spark.table(primary_table)
+                        matched = entity_match(consume.df, primary, entitymatch_spec,
+                                               persist_intermediates=ctx.cache)
+                        merge_into_primary(
+                            spark, matched, primary_table, gid
+                        )
+                    else:
+                        first = consume.df.withColumn(
+                            gid,
+                            F.coalesce(
+                                F.col(gid) if gid in consume.df.columns else F.lit(None), F.expr("uuid()")
+                            ),
+                        )
+                        first.write.mode("overwrite").format("parquet").saveAsTable(primary_table)
+                summary["stages"].append("entity_match")
+    finally:
+        ctx.release_cached()
 
     if audit_log:
         with open(audit_log, "a", encoding="utf-8") as fh:

@@ -73,8 +73,9 @@ def collect_to_cleanse(
     execution_id = str(ctx.arg("execution_id", "local-run"))
     recommendations: dict = {}
 
-    df = read_input(spark, source_path, config.input_spec, config.mapping)
-    df = df.cache()
+    # Parsed once: the audit's job stores the rows that the
+    # before_transform DQ aggregate and the transformed frame read back.
+    df = ctx.checkpoint(read_input(spark, source_path, config.input_spec, config.mapping))
     ctx.log_lineage("read", df=df, source=source_path)
     # the audit's row count doubles as the empty-input check
     if ctx.lineage is not None:
@@ -100,7 +101,7 @@ def collect_to_cleanse(
     df = apply_transform_spec(df, config.transform_spec, ctx)
     df = add_partition_columns(df, partition, execution_id)
 
-    df = df.cache()
+    df = ctx.cache(df)
     df, _ = run_dq_stage(df, config.dq_rules, "after_transform", ctx, table, qwriter)
 
     # Numeric audit rides the write job itself (df.observe) — zero extra
@@ -149,7 +150,7 @@ def cleanse_to_consume(
     # plain-catalog SQL file costs nothing extra
     from ..sources.lakehouse_sql import sql_over_refs
 
-    df = sql_over_refs(spark, sql_text).cache()
+    df = ctx.cache(sql_over_refs(spark, sql_text))
     ctx.log_lineage("sparksql", df=df, sql=sql_text)
 
     # the numeric audit of the SQL result rides the stage's DQ aggregate

@@ -42,6 +42,13 @@ multi-part checkpoints).  Reads go through one parquet scan node with
 ``basePath``-derived partition columns when the layout is Hive-style
 (our writer's layout); non-Hive third-party layouts fall back to
 per-partition literal unions.
+
+Row-level DML shared with ``iceberg_lite`` lives in :mod:`.dml_core`:
+the MERGE prologue (source checkpoint, duplicate-key check, first-key
+bounds computed in Spark), the conflict-retry loop, the file-statistics
+range test (:func:`~.dml_core.may_overlap`) and the O(files) metadata
+frame builder.  This module keeps what is Delta's own: log replay, the
+touched-file search over ``add`` stats and the commit encoding.
 """
 
 from __future__ import annotations
@@ -53,6 +60,7 @@ import tempfile
 import time
 import uuid
 from dataclasses import dataclass, field
+from dataclasses import replace as _dc_replace
 from functools import reduce
 from urllib.parse import quote, unquote
 
@@ -64,6 +72,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
+)
+
+from .dml_core import (
+    discard_files, may_overlap, merge_prologue, meta_df, retry_on_conflict,
 )
 
 CHECKPOINT_INTERVAL = 10
@@ -963,22 +975,6 @@ def _to_physical(df: DataFrame, phys, schema: StructType | None = None) -> DataF
     return df.select(*cols)
 
 
-def _meta_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-side metadata list -> DataFrame on an explicitly sized
-    RDD.  ``spark.createDataFrame(list)`` parallelizes into
-    defaultParallelism slices (32 on the bench session), so every
-    broadcast build of an O(files) map — row-id bases, DV descriptors,
-    partition tuples — scheduled a 32-task stage for a handful of rows.
-    Sizing the slice count from the row count (one slice per 64k
-    entries, minimum one) makes those builds one task without changing
-    a single row; the maps are O(files) driver state either way."""
-    rows = list(rows)
-    slices = max(1, len(rows) // 65536)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, slices), schema
-    )
-
-
 def _resolve_dv_path(table_path: str, dv: dict) -> tuple[str, str]:
     """Resolve a deletionVector descriptor to ('file', absolute path) or
     ('inline', z85 payload) per PROTOCOL.md storage types: 'u' = table-
@@ -1026,7 +1022,7 @@ def _dv_positions_df(spark: SparkSession, snap: Snapshot, files) -> DataFrame:
                 int(f.deletion_vector.get("cardinality", -1)),
             )
         )
-    desc = _meta_df(
+    desc = meta_df(
         spark,
         rows,
         "__dv_file string, kind string, payload string, "
@@ -1279,7 +1275,7 @@ def _read_snapshot(
             )
             rt_base, rt_dcv = rt_lookup["b"], rt_lookup["d"]
         else:
-            rt_map = _meta_df(
+            rt_map = meta_df(
                 spark, rt_rows, "__rt_file string, __rt_base long, __rt_dcv long"
             )
             df = df.join(
@@ -1472,11 +1468,7 @@ def _discard_staged(table_path: str, adds: list) -> None:
     that then LOST its race: they are referenced by no add action, so
     vacuum (which walks remove tombstones) could never reclaim them
     (review finding r6)."""
-    for a in adds:
-        try:
-            os.remove(os.path.join(table_path, a.path))
-        except OSError:
-            pass
+    discard_files(table_path, [a.path for a in adds])
 
 
 def _stage_from(df, table_path, partition_by, staging_root) -> list:
@@ -3597,72 +3589,26 @@ def merge_delta(
     # when they landed) — MERGE must honor the same writer contracts
     # as write_delta
     _snap0 = snapshot(path)
-    source = _apply_generated(source, _snap0.schema)
-    # The source plan is re-used by every downstream pass (duplicate
-    # check, key bounds, touched-file search, survivor rewrite, CDC);
-    # for SQL-front-end merges it is itself a multi-join over the
-    # TARGET, so re-evaluating it per pass multiplied the whole merge's
-    # scan work.  localCheckpoint materializes it exactly once and
-    # truncates the plan (guide §3.3 / §5): every later pass reads the
-    # materialized blocks.  O(|source|) executor storage — the merge
-    # already stages the full source as new data files, so this does
-    # not change the cost class.
-    source = source.localCheckpoint(eager=True)
-    if delete_keys is not None:
-        delete_keys = delete_keys.localCheckpoint(eager=True)
-    # Duplicate-key check and first-key bounds (for footer-stats file
-    # skipping in _merge_once) in ONE aggregate job over the
-    # checkpointed source: dup ⇔ count(*) > count(distinct key tuple).
-    key0 = keys[0]
-    agg = source.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.count_distinct(F.struct(*keys)).alias("__nd"),
-        F.min(key0).alias("__lo"),
-        F.max(key0).alias("__hi"),
-    ).collect()[0]
-    if agg["__n"] != agg["__nd"]:
-        dup = (
-            source.groupBy(*keys).count()
-            .where(F.col("count") > 1).limit(1).collect()
-        )
-        raise DeltaLiteError(
-            f"MERGE source has duplicate key {tuple(dup[0][k] for k in keys)}; "
-            "a target row may match at most one source row"
-        )
-    key_bounds = (agg["__lo"], agg["__hi"])
-    if delete_keys is not None:
-        # Combined bounds computed IN SPARK over the unioned key sets:
-        # merging per-frame bounds with Python's min/max could diverge
-        # from Spark's binary UTF-8 string ordering on exotic data and
-        # mis-shape the skip bounds (ADVICE r12) — one union aggregate
-        # is the same job count and ordering-exact.
-        db = (
-            source.select(F.col(key0).alias("__k"))
-            .unionByName(delete_keys.select(F.col(key0).alias("__k")))
-            .agg(F.min("__k").alias("lo"), F.max("__k").alias("hi"))
-            .collect()[0]
-        )
-        key_bounds = (db["lo"], db["hi"])
+    source, delete_keys, key_bounds = merge_prologue(
+        _apply_generated(source, _snap0.schema), delete_keys, keys,
+        DeltaLiteError, "; a target row may match at most one source row",
+    )
     _enforce_constraints(source, _snap0.configuration)
-    attempt = 0
-    while True:
-        try:
-            return _merge_once(
-                spark, source, path, keys, attempt,
-                use_deletion_vectors=use_deletion_vectors,
-                delete_keys=delete_keys, key_bounds=key_bounds,
-            )
-        except ConcurrentWriteError:
-            if attempt >= max_retries:
-                raise
-            attempt += 1
+    return retry_on_conflict(
+        lambda attempt: _merge_once(
+            spark, source, path, keys, attempt, key_bounds,
+            use_deletion_vectors=use_deletion_vectors,
+            delete_keys=delete_keys,
+        ),
+        ConcurrentWriteError, max_retries,
+    )
 
 
 def _merge_once(
     spark: SparkSession, source: DataFrame, path: str, keys: list,
-    attempt: int, use_deletion_vectors: bool | None = None,
+    attempt: int, key_bounds: tuple,
+    use_deletion_vectors: bool | None = None,
     delete_keys: DataFrame | None = None,
-    key_bounds: tuple | None = None,
 ) -> dict:
     """One optimistic MERGE attempt against the CURRENT snapshot; raises
     ``ConcurrentWriteError`` (after discarding staged files) if another
@@ -3709,25 +3655,17 @@ def _merge_once(
             tuple(_pv_str(row[c]) for c in part_cols)
             for row in tomb_keys.select(*part_cols).distinct().collect()
         }
-        search_snap = Snapshot(
-            table_path=snap.table_path,
-            version=snap.version,
-            schema_string=snap.schema_string,
-            partition_columns=snap.partition_columns,
-            configuration=snap.configuration,
-            protocol=snap.protocol,
-            files=[
-                f
-                for f in snap.files
-                if tuple(
-                    f.partition_values.get(
-                        phys.get(c, c), f.partition_values.get(c)
-                    )
-                    for c in part_cols
+        search_snap = _dc_replace(snap, files=[
+            f
+            for f in snap.files
+            if tuple(
+                f.partition_values.get(
+                    phys.get(c, c), f.partition_values.get(c)
                 )
-                in src_parts
-            ],
-        )
+                for c in part_cols
+            )
+            in src_parts
+        ])
     # DATA SKIPPING on the first merge key via the add actions' footer
     # stats: a file whose [min, max] range cannot contain any source key
     # is never opened during the touched-file search.  With the table
@@ -3735,36 +3673,25 @@ def _merge_once(
     # upsert scans a handful of files instead of the table.  Files
     # without stats (or with a cross-type comparison) are never skipped.
     key0 = keys[0]
-    if key_bounds is None:  # direct _merge_once callers (none today)
-        kb_row = tomb_keys.agg(
-            F.min(key0).alias("lo"), F.max(key0).alias("hi")
-        ).collect()[0]
-        key_bounds = (kb_row["lo"], kb_row["hi"])
     if key_bounds[0] is not None:
+        # footer stats are keyed by the ON-DISK (physical) name, and the
+        # JSON stats carry no type: a stat whose Python type differs
+        # from the key's (int vs float, str vs date) is never compared
+        k = phys.get(key0, key0)
+        lo, hi = key_bounds
 
-        def _overlaps(f, lo=key_bounds[0], hi=key_bounds[1]):
+        def _overlaps(f):
             st = f.stats or {}
-            # footer stats are keyed by the ON-DISK (physical) name
-            k = phys.get(key0, key0)
             fmin = (st.get("minValues") or {}).get(k)
             fmax = (st.get("maxValues") or {}).get(k)
-            if fmin is None or fmax is None:
+            if fmin is not None and not (
+                isinstance(fmin, type(lo)) or isinstance(lo, type(fmin))
+            ):
                 return True
-            if not (isinstance(fmin, type(lo)) or isinstance(lo, type(fmin))):
-                return True
-            try:
-                return not (fmax < lo or fmin > hi)
-            except TypeError:
-                return True
+            return may_overlap(fmin, fmax, lo, hi)
 
-        search_snap = Snapshot(
-            table_path=search_snap.table_path,
-            version=search_snap.version,
-            schema_string=search_snap.schema_string,
-            partition_columns=search_snap.partition_columns,
-            configuration=search_snap.configuration,
-            protocol=search_snap.protocol,
-            files=[f for f in search_snap.files if _overlaps(f)],
+        search_snap = _dc_replace(
+            search_snap, files=[f for f in search_snap.files if _overlaps(f)]
         )
     # COW moves survivor rows to new files, so a row-tracked read also
     # carries _row_id/_row_commit_version for materialization; the DV
@@ -3794,7 +3721,6 @@ def _merge_once(
     # __dl_path, so the rewrite scan opens |touched| files, not |table|
     # (guide §2.4/§6: the filter-on-metadata-column shape does not
     # prune the file list).
-    from dataclasses import replace as _dc_replace
 
     touched_target = (
         _read_snapshot(
@@ -4461,7 +4387,7 @@ def _delete_partition_metadata_only(
     if not tuples:
         return None
     rows = [(i, *t) for i, t in enumerate(tuples)]
-    raw = _meta_df(
+    raw = meta_df(
         spark,
         rows,
         StructType(
@@ -4623,7 +4549,6 @@ def delete_delta(
     touched_rel = {_uri_to_rel(u, path) for u in touched_uris}
     # rewrite reads ONLY the touched files via a subset snapshot (the
     # __dl_path filter shape scans every file of the table)
-    from dataclasses import replace as _dc_replace
 
     touched_df = _read_snapshot(
         spark,
@@ -4777,7 +4702,6 @@ def update_delta(
     touched_rel = {_uri_to_rel(u, path) for u in touched_uris}
     # every later pass reads ONLY the touched files via a subset
     # snapshot (matched rows live there by definition)
-    from dataclasses import replace as _dc_replace
 
     touched_target = _read_snapshot(
         spark,
@@ -4980,23 +4904,18 @@ def _stage_dvs(
 def _discard_dvs(path: str, descriptors: list) -> None:
     """Reclaim staged DV sidecars referenced by no committed add action
     (lost commit race), as ``_discard_staged`` does for data files."""
-    import uuid as _uuid_mod
-
     from .roaring import z85_decode
 
-    for r in descriptors:
-        u = _uuid_mod.UUID(bytes=z85_decode(r["dv_path"]))
-        try:
-            os.remove(os.path.join(path, f"deletion_vector_{u}.bin"))
-        except OSError:
-            pass
+    discard_files(path, [
+        f"deletion_vector_{uuid.UUID(bytes=z85_decode(r['dv_path']))}.bin"
+        for r in descriptors
+    ])
 
 
 def _dv_readds(snap: Snapshot, path: str, descriptors: list) -> list:
     """remove + re-add actions swapping each touched file's DV
     descriptor for its freshly staged one (the file's bytes are
     untouched — write amplification stays O(|changed rows|))."""
-    from dataclasses import replace as _dc_replace
 
     now_ms = int(time.time() * 1000)
     by_rel = {_uri_to_rel(r["uri"], path): r for r in descriptors}
@@ -5151,11 +5070,7 @@ def _stage_cdc_files(df: DataFrame, table_path: str) -> list:
 
 
 def _discard_cdc(table_path: str, cdc_actions: list) -> None:
-    for action in cdc_actions:
-        try:
-            os.remove(os.path.join(table_path, action["cdc"]["path"]))
-        except OSError:
-            pass
+    discard_files(table_path, [a["cdc"]["path"] for a in cdc_actions])
 
 
 def read_change_feed(

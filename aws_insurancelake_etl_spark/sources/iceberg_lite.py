@@ -38,6 +38,15 @@ stdlib Avro) — one row per data file, the same O(files) metadata cost
 the real reader pays; the DATA path is a normal distributed parquet
 scan, and delete application is one distributed anti-join (only the
 O(files) path/sequence mappings are broadcast, never delete rows).
+
+Row-level DML shared with ``delta_lite`` lives in :mod:`.dml_core`:
+the MERGE prologue (source checkpoint, duplicate-key check, first-key
+bounds computed in Spark), the conflict-retry loop, the manifest-bounds
+range test (:func:`~.dml_core.may_overlap`) and the metadata frame /
+literal-map builders.  The writers here stage delete files through one
+stager (:func:`_stage_delete_files`) and commit through one
+commit-or-discard (:func:`_commit_or_discard`), so a commit that loses
+the race never leaves its staged files behind.
 """
 
 from __future__ import annotations
@@ -51,6 +60,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_lite
+from .dml_core import (
+    LIT_MAP_MAX, discard_files, lit_lookup, may_overlap, merge_prologue,
+    meta_df, retry_on_conflict,
+)
 from .iceberg_transforms import (
     PartitionField,
     apply_transform,
@@ -70,6 +83,11 @@ class IcebergLiteError(RuntimeError):
 #: presence check hits this instead of re-reading footers every scan
 _FOOTER_COLS_CACHE: dict = {}
 _FOOTER_SCHEMA_CACHE: dict = {}
+#: hidden per-row columns a ``_row_refs`` / ``row_lineage`` read adds
+#: next to the table's own columns
+_ROW_REF_COLS = (
+    "__ice_file", "__ice_pos", "_row_id", "_last_updated_sequence_number",
+)
 
 
 def _footer_schema(path: str):
@@ -576,55 +594,6 @@ def _coerce_partition_value(value):
     return i if str(i) == s else s
 
 
-def _meta_df(spark, rows, schema):
-    """Driver-side metadata list -> DataFrame on an explicitly sized
-    RDD.  ``spark.createDataFrame(list)`` parallelizes into
-    defaultParallelism slices (32 on the bench session), so every
-    broadcast build of an O(files) map — file/sequence maps, DV plans,
-    equality-delete scopes — scheduled a 32-task stage for a handful of
-    rows.  One slice per 64k entries (minimum one) makes those builds
-    one task without changing a single row; the maps are O(files)
-    driver state either way."""
-    rows = list(rows)
-    slices = max(1, len(rows) // 65536)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, slices), schema
-    )
-
-
-#: largest metadata map embedded in the plan as a literal; bigger maps
-#: fall back to a broadcast-join DataFrame (plan size stays bounded)
-_LIT_MAP_MAX = 1024
-
-
-def _lit_lookup(rows, key_col, fields):
-    """O(files) metadata map as a LITERAL plan expression instead of a
-    broadcast-join DataFrame: ``element_at(map<key, struct<...>>, key)``.
-    Each broadcast build costs one Spark job (the exchange materializes
-    eagerly) plus a join; for the small maps the planner holds anyway
-    (file -> sequence/row-id-base/DV descriptors) a literal map is pure
-    codegen — zero jobs, zero exchanges.  A missing key yields null,
-    matching a left-join miss (callers relying on inner-join semantics
-    filter on a non-null field, which a null struct fails).
-
-    ``rows``: [(key, v1, v2, ...)]; ``fields``: [(name, ddl_type), ...]
-    aligned with v1.. — returns the struct Column."""
-    from pyspark.sql import functions as F
-
-    entries = []
-    for key, *vals in rows:
-        entries.append(F.lit(key))
-        entries.append(
-            F.struct(
-                *[
-                    F.lit(v).cast(ddl).alias(name)
-                    for (name, ddl), v in zip(fields, vals)
-                ]
-            )
-        )
-    return F.element_at(F.create_map(*entries), key_col)
-
-
 def _attach_orig(spark, df, files):
     """Attach each planned row's as-written path (``orig``) from its
     local ``__ice_file`` — literal lookup when the file set is small
@@ -634,14 +603,14 @@ def _attach_orig(spark, df, files):
     from pyspark.sql import functions as F
 
     rows = [(f.path, f.orig_path) for f in files]
-    if len(rows) <= _LIT_MAP_MAX:
+    if len(rows) <= LIT_MAP_MAX:
         return df.withColumn(
             "orig",
-            _lit_lookup(rows, F.col("__ice_file"), [("orig", "string")])[
+            lit_lookup(rows, F.col("__ice_file"), [("orig", "string")])[
                 "orig"
             ],
         )
-    fm = _meta_df(spark, rows, "__ice_file string, orig string")
+    fm = meta_df(spark, rows, "__ice_file string, orig string")
     return df.join(F.broadcast(fm), "__ice_file")
 
 
@@ -916,15 +885,8 @@ def plan_scan(
                 fhi = _single_value_decode(
                     (entry.upper_bounds or {}).get(fid), ice_type
                 )
-                if flo is None or fhi is None:
-                    continue  # no usable bounds: never prune
-                try:
-                    if (hi is not None and flo > hi) or (
-                        lo is not None and fhi < lo
-                    ):
-                        return False
-                except TypeError:
-                    continue
+                if not may_overlap(flo, fhi, lo, hi):
+                    return False
             return True
 
         data = [e for e in data if survives(e)]
@@ -981,8 +943,7 @@ def create_ref(
     refs[name] = {"snapshot-id": int(snapshot_id), "type": ref_type}
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "
@@ -1003,8 +964,7 @@ def drop_ref(table_path: str, name: str) -> None:
     del refs[name]
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "
@@ -1059,8 +1019,7 @@ def fast_forward(
     new_meta["refs"] = refs
     if to == "main":
         new_meta["current-snapshot-id"] = src_head
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "
@@ -1297,7 +1256,7 @@ def read_iceberg_changelog(
                         pos_files.append(d)
                 del_rows = None
                 if pos_files:
-                    fmap = _meta_df(
+                    fmap = meta_df(
                         spark,
                         [(f.orig_path, f.path) for f in files_prev],
                         "orig string, __del_file string",
@@ -1312,7 +1271,7 @@ def read_iceberg_changelog(
                         .select("__del_file", "__del_pos")
                     )
                 if dv_plan:
-                    dv_df = _meta_df(
+                    dv_df = meta_df(
                         spark,
                         dv_plan,
                         "dfile string, off long, size long, "
@@ -1416,7 +1375,7 @@ def read_iceberg_changelog(
                                 field.source if field is not None else pcol
                             )
                         scope_exprs.append(expr.cast("string"))
-                    eq_map = _meta_df(
+                    eq_map = meta_df(
                         spark,
                         [
                             (d.path, *[
@@ -1504,7 +1463,7 @@ def inspect_snapshots(spark: SparkSession, table_path: str) -> DataFrame:
         )
         for s in meta.get("snapshots") or []
     ]
-    return _meta_df(
+    return meta_df(
         spark,
         rows,
         "snapshot_id long, sequence_number long, committed_at_ms long, "
@@ -1526,7 +1485,7 @@ def inspect_history(spark: SparkSession, table_path: str) -> DataFrame:
         )
         for s in meta.get("snapshots") or []
     ]
-    return _meta_df(
+    return meta_df(
         spark,
         rows,
         "made_current_at_ms long, snapshot_id long, "
@@ -1550,7 +1509,7 @@ def inspect_files(
         )
         for f in files
     ]
-    return _meta_df(
+    return meta_df(
         spark,
         rows,
         "file_path string, partition map<string,string>, "
@@ -1581,7 +1540,7 @@ def inspect_delete_files(
         )
         for d in deletes
     ]
-    return _meta_df(
+    return meta_df(
         spark,
         rows,
         "file_path string, file_format string, content int, "
@@ -1621,7 +1580,7 @@ def inspect_manifests(
                     len(entries),
                 )
             )
-    return _meta_df(
+    return meta_df(
         spark,
         rows,
         "path string, length long, partition_spec_id int, content int, "
@@ -1666,7 +1625,7 @@ def inspect_entries(
                         int(df_rec.get("file_size_in_bytes") or 0),
                     )
                 )
-    return _meta_df(
+    return meta_df(
         spark,
         rows,
         "status int, snapshot_id long, sequence_number long, "
@@ -1681,7 +1640,7 @@ def inspect_refs(spark: SparkSession, table_path: str) -> DataFrame:
         (name, r.get("type"), int(r.get("snapshot-id")))
         for name, r in sorted(list_refs(table_path).items())
     ]
-    return _meta_df(
+    return meta_df(
         spark,
         rows, "name string, type string, snapshot_id long"
     )
@@ -1704,7 +1663,7 @@ def inspect_partitions(
     rows = [
         (dict(key), rec, cnt) for key, (rec, cnt) in sorted(agg.items())
     ]
-    return _meta_df(
+    return meta_df(
         spark,
         rows,
         "partition map<string,string>, record_count long, file_count long",
@@ -2491,14 +2450,7 @@ def read_iceberg(
         return residual(reader)
 
     data = reader
-    base_cols = [
-        c
-        for c in data.columns
-        if c not in (
-            "__ice_file", "__ice_pos",
-            "_row_id", "_last_updated_sequence_number",
-        )
-    ]
+    base_cols = [c for c in data.columns if c not in _ROW_REF_COLS]
     pos_deletes = [
         d for d in deletes if d.content == 1 and d.file_format != "PUFFIN"
     ]
@@ -2525,16 +2477,16 @@ def read_iceberg(
     # O(data files) mapping: as-written path -> (local path, data seq,
     # DV-covered flag for the supersede rule).  Small tables embed it
     # as a literal plan expression (zero broadcast-build jobs,
-    # _lit_lookup); only large file sets build the DataFrame form.
+    # lit_lookup); only large file sets build the DataFrame form.
     file_rows = [
         (f.orig_path, f.path, f.sequence_number, f.path in dv_covered)
         for f in files
     ]
-    lit_meta = len(file_rows) <= _LIT_MAP_MAX
+    lit_meta = len(file_rows) <= LIT_MAP_MAX
     file_map = (
         None
         if lit_meta
-        else _meta_df(
+        else meta_df(
             spark, file_rows,
             "orig string, local string, data_seq long, has_dv boolean",
         )
@@ -2580,7 +2532,7 @@ def read_iceberg(
         untouched_bypass = data.where(~in_touched)
         data = data.where(in_touched)
     if dv_plan:
-        dv_df = _meta_df(
+        dv_df = meta_df(
             spark, dv_plan,
             "dfile string, off long, size long, __ice_file string",
         )
@@ -2615,15 +2567,15 @@ def read_iceberg(
             F.col("pos").cast("long").alias("__ice_pos"),
             _norm(F.col("_metadata.file_path")).alias("dfile"),
         )
-        if lit_meta and len(pos_deletes) <= _LIT_MAP_MAX:
+        if lit_meta and len(pos_deletes) <= LIT_MAP_MAX:
             # both maps as literal lookups: a delete row referencing a
             # file outside the plan reads a null struct and fails the
             # non-null seq comparison — same rows the inner join kept
-            dsq = _lit_lookup(
+            dsq = lit_lookup(
                 [(d.path, d.sequence_number) for d in pos_deletes],
                 F.col("dfile"), [("delete_seq", "long")],
             )
-            fm = _lit_lookup(
+            fm = lit_lookup(
                 file_rows, F.col("orig"),
                 [("local", "string"), ("data_seq", "long"),
                  ("has_dv", "boolean")],
@@ -2638,11 +2590,11 @@ def read_iceberg(
             )
         else:
             if file_map is None:  # small file set but huge delete set
-                file_map = _meta_df(
+                file_map = meta_df(
                     spark, file_rows,
                     "orig string, local string, data_seq long, has_dv boolean",
                 )
-            del_map = _meta_df(
+            del_map = meta_df(
                 spark,
                 [(d.path, d.sequence_number) for d in pos_deletes],
                 "dfile string, delete_seq long",
@@ -2694,7 +2646,7 @@ def read_iceberg(
             # the literal lookup never misses (== the old inner join)
             data = data.withColumn(
                 "data_seq",
-                _lit_lookup(
+                lit_lookup(
                     [(local, seq) for _o, local, seq, _dv in file_rows],
                     F.col("__ice_file"), [("data_seq", "long")],
                 )["data_seq"],
@@ -2775,10 +2727,10 @@ def read_iceberg(
                 *[F.col(c).alias(f"__eq_{c}") for c in cols],
                 _norm(F.col("_metadata.file_path")).alias("dfile"),
             )
-            if len(eq_rows) <= _LIT_MAP_MAX:
+            if len(eq_rows) <= LIT_MAP_MAX:
                 # literal lookup never misses: dfile ranges over
                 # exactly this group's delete files
-                eqm = _lit_lookup(
+                eqm = lit_lookup(
                     eq_rows, F.col("dfile"),
                     [("delete_seq", "long")]
                     + [(f"__eq_scope_{i}", "string")
@@ -2793,7 +2745,7 @@ def read_iceberg(
                     ],
                 ).drop("dfile")
             else:
-                eq_map = _meta_df(
+                eq_map = meta_df(
                     spark,
                     eq_rows,
                     ", ".join(
@@ -2836,10 +2788,10 @@ def read_iceberg(
             if "_last_updated_sequence_number" in data.columns
             else F.lit(None).cast("long")
         )
-        if len(lin_rows) <= _LIT_MAP_MAX:
+        if len(lin_rows) <= LIT_MAP_MAX:
             # literal lookup never misses: __ice_file ranges over the
             # plan's own file set (== the old inner join)
-            linm = _lit_lookup(
+            linm = lit_lookup(
                 lin_rows, F.col("__ice_file"),
                 [("__ice_fri", "long"), ("__ice_seq", "long")],
             )
@@ -2847,7 +2799,7 @@ def read_iceberg(
                 "__ice_fri", linm["__ice_fri"]
             ).withColumn("__ice_seq", linm["__ice_seq"])
         else:
-            lin = _meta_df(
+            lin = meta_df(
                 spark, lin_rows,
                 "__ice_file string, __ice_fri long, __ice_seq long",
             )
@@ -4114,12 +4066,107 @@ def _try_commit_metadata(table_path: str, version: int, meta: dict) -> bool:
     return True
 
 
-def _discard_staged_iceberg(table_path: str, rels: list) -> None:
-    for rel in rels:
-        try:
-            os.remove(os.path.join(table_path, rel))
-        except OSError:
-            pass
+def _head_version(table_path: str) -> int:
+    """The table's current metadata version: what a snapshot commit
+    plans against (``expect_version`` fails fast if the table moved);
+    a metadata-only commit claims the next one."""
+    meta_dir = os.path.join(table_path, "metadata")
+    return (_metadata_versions(meta_dir) or [0])[-1]
+
+
+def _commit_or_discard(
+    table_path: str, part_cols: list, data_entries: list,
+    delete_entries: list, **commit_kw,
+) -> int:
+    """:func:`_commit_snapshot` of files staged for THIS commit: losing
+    the race discards every staged data, delete and DV file before the
+    conflict propagates — no later snapshot can reference them, and a
+    re-executed attempt stages its own."""
+    try:
+        return _commit_snapshot(
+            table_path, part_cols, data_entries=data_entries,
+            delete_entries=delete_entries, **commit_kw,
+        )
+    except ConcurrentIcebergWrite:
+        discard_files(
+            table_path, [e[0] for e in (*delete_entries, *data_entries)]
+        )
+        raise
+
+
+def _stage_delete_files(
+    table_path: str, rows: DataFrame, n_files: int = 1,
+    equality_ids: list | None = None,
+) -> list:
+    """Stage the delete files of one commit; returns their
+    :func:`_commit_snapshot` delete entries (global scope: an empty
+    partition tuple).
+
+    POSITION deletes (``equality_ids`` None): ``rows`` carries each
+    matched row's data file as written (``orig``, see
+    :func:`_attach_orig`) and its ``__ice_pos``; the entries are sorted
+    by ``file_path`` then ``pos`` (spec) and range-split into
+    ``n_files`` parts — callers pass the TARGET's file count, not the
+    session's shuffle width: every later MOR read opens each delete
+    file, so 32 near-empty files from a default shuffle is pure read
+    amplification.  EQUALITY deletes: ``rows`` are the key tuples,
+    written as they come.  Spark writes into a temp directory; its
+    non-empty parts move under ``data/`` with fresh uuid names."""
+    import glob as _glob
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    if equality_ids is None:
+        kind, content = "delete", 1
+        rows = rows.select(
+            F.col("orig").alias("file_path"),
+            F.col("__ice_pos").alias("pos"),
+        ).repartitionByRange(
+            max(1, n_files), "file_path", "pos"
+        ).sortWithinPartitions("file_path", "pos")
+    else:
+        kind, content = "eqdelete", 2
+    stage = tempfile.mkdtemp(prefix="_ice_del_", dir=table_path)
+    entries = []
+    try:
+        out = os.path.join(stage, "out")
+        rows.write.mode("overwrite").parquet(out)
+        for src_file in sorted(_glob.glob(os.path.join(out, "*.parquet"))):
+            count = _footer_rows(src_file)
+            if count == 0:
+                continue  # Spark writes empty parts for empty splits
+            rel = f"data/{kind}-{_uuid.uuid4().hex}.parquet"
+            dest = os.path.join(table_path, rel)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            size = os.path.getsize(src_file)
+            shutil.move(src_file, dest)
+            entries.append((rel, {}, count, size, content, equality_ids))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return entries
+
+
+def _stage_row_deletes(
+    spark: SparkSession, table_path: str, matched: DataFrame, fv: int,
+    files: list, deletes: list, orig_files: list | None = None,
+) -> tuple[list, frozenset, int]:
+    """Tombstone the ``matched`` rows (``__ice_file`` / ``__ice_pos``)
+    the way format version ``fv`` requires: v3 as DELETION VECTORS (one
+    puffin sidecar per touched file, superseding that file's prior DV
+    and folding any v2 position deletes in), v2 as position-delete files
+    naming each row's data file as written (``orig``, looked up in
+    ``orig_files``, default ``files``).  Returns ``(delete_entries,
+    drop_dv_refs, rows)``."""
+    if fv >= 3:
+        return _stage_iceberg_dvs(
+            spark, table_path, matched.select("__ice_file", "__ice_pos"),
+            files, deletes,
+        )
+    matched = _attach_orig(spark, matched, orig_files or files)
+    entries = _stage_delete_files(table_path, matched, len(files))
+    return entries, frozenset(), sum(e[2] for e in entries)
 
 
 def is_iceberg_table(table_path: str) -> bool:
@@ -4270,30 +4317,28 @@ def write_iceberg(
     # in the footer machinery with files already on disk
     _ice_schema_fields(df)
     staged = _stage_iceberg_data(df, table_path, partition_by)
-    attempt = 0
-    while True:
-        try:
-            # appends evolve the schema (id-preserving: new columns mint
-            # the next field ids, widened columns promote in place —
-            # spec §Schema Evolution); creates start at schema 0
-            fields = (
-                _evolve_schema_fields(_load_metadata(table_path), df)
-                if existing
-                else _ice_schema_fields(df)
-            )
-            return _commit_snapshot(
-                table_path, partition_by,
-                data_entries=staged, delete_entries=[],
-                schema_fields=fields,
-                evolve_schema=existing,
-                branch=branch,
-                format_version=format_version,
-            )
-        except ConcurrentIcebergWrite:
-            if attempt >= max_retries:
-                _discard_staged_iceberg(table_path, [r for r, *_ in staged])
-                raise
-            attempt += 1
+
+    def attempt(n):
+        # appends evolve the schema (id-preserving: new columns mint
+        # the next field ids, widened columns promote in place — spec
+        # §Schema Evolution); creates start at schema 0
+        fields = (
+            _evolve_schema_fields(_load_metadata(table_path), df)
+            if existing
+            else _ice_schema_fields(df)
+        )
+        # the staged files serve every attempt: discard only after the last
+        commit = _commit_or_discard if n == max_retries else _commit_snapshot
+        return commit(
+            table_path, partition_by,
+            data_entries=staged, delete_entries=[],
+            schema_fields=fields,
+            evolve_schema=existing,
+            branch=branch,
+            format_version=format_version,
+        )
+
+    return retry_on_conflict(attempt, ConcurrentIcebergWrite, max_retries)
 
 
 def _dv_kv_list(raw):
@@ -4924,19 +4969,15 @@ def add_files(
             )
     if not entries:
         raise IcebergLiteError(f"no parquet files under {source_dir}")
-    attempt = 0
-    while True:
-        try:
-            snap = _commit_snapshot(
-                table_path, part_fields,
-                data_entries=entries, delete_entries=[],
-            )
-            return {"snapshot_id": snap, "files": len(entries)}
-        except ConcurrentIcebergWrite:
-            # imported files are external — nothing staged to discard
-            if attempt >= max_retries:
-                raise
-            attempt += 1
+    # imported files are external — nothing staged to discard
+    snap = retry_on_conflict(
+        lambda _n: _commit_snapshot(
+            table_path, part_fields,
+            data_entries=entries, delete_entries=[],
+        ),
+        ConcurrentIcebergWrite, max_retries,
+    )
+    return {"snapshot_id": snap, "files": len(entries)}
 
 
 def _stage_iceberg_dvs(
@@ -4975,12 +5016,12 @@ def _stage_iceberg_dvs(
     if pos_parquet:
         # fold still-applicable v2 position deletes for TOUCHED files
         # into their new DVs (upgraded-table case)
-        del_map = _meta_df(
+        del_map = meta_df(
             spark,
             [(d.path, d.sequence_number) for d in pos_parquet],
             "dfile string, delete_seq long",
         )
-        file_map = _meta_df(
+        file_map = meta_df(
             spark,
             [(f.path, f.orig_path, f.sequence_number) for f in files],
             "__ice_file string, orig string, data_seq long",
@@ -5101,93 +5142,67 @@ def merge_iceberg(
     lowering): target rows whose keys appear in this frame are
     tombstoned in the SAME snapshot with no replacement row.  Its key
     set must be disjoint from the source's."""
-    from pyspark.sql import functions as F
-
     keys = [keys] if isinstance(keys, str) else list(keys)
-    # The source plan is re-evaluated by every downstream pass (dup
-    # check, key bounds, touched search, DV/delete staging, data
-    # staging) — and SQL-front-end merge sources are themselves
-    # multi-join plans over the target.  Materialize it exactly once
-    # (guide §3.3 plan truncation); O(|source|) executor storage, the
-    # same cost class as the data files the merge stages anyway.
-    source = source.localCheckpoint(eager=True)
-    if delete_keys is not None:
-        delete_keys = delete_keys.localCheckpoint(eager=True)
-    # duplicate-key check + first-key bounds (for manifest-bounds file
-    # skipping in _merge_once_iceberg) in ONE aggregate job:
-    # dup ⇔ count(*) > count(distinct key tuple)
-    key0 = keys[0]
-    agg = source.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.count_distinct(F.struct(*keys)).alias("__nd"),
-        F.min(key0).alias("__lo"),
-        F.max(key0).alias("__hi"),
-    ).collect()[0]
-    if agg["__n"] != agg["__nd"]:
-        dup = (
-            source.groupBy(*keys).count().where(F.col("count") > 1)
-            .limit(1).collect()
-        )
-        raise IcebergLiteError(
-            f"MERGE source has duplicate key "
-            f"{tuple(dup[0][k] for k in keys)}"
-        )
-    key_bounds = (agg["__lo"], agg["__hi"])
-    if delete_keys is not None:
-        db = delete_keys.agg(
-            F.min(key0).alias("lo"), F.max(key0).alias("hi")
-        ).collect()[0]
-        lo, hi = key_bounds
-        if db["lo"] is not None:
-            lo = db["lo"] if lo is None else min(lo, db["lo"])
-            hi = db["hi"] if hi is None else max(hi, db["hi"])
-        key_bounds = (lo, hi)
-    attempt = 0
-    while True:
-        try:
-            return _merge_once_iceberg(
-                spark, source, table_path, keys, attempt,
-                delete_keys=delete_keys, key_bounds=key_bounds,
-            )
-        except ConcurrentIcebergWrite:
-            if attempt >= max_retries:
-                raise
-            attempt += 1
+    source, delete_keys, key_bounds = merge_prologue(
+        source, delete_keys, keys, IcebergLiteError
+    )
+    return retry_on_conflict(
+        lambda attempt: _merge_once_iceberg(
+            spark, source, table_path, keys, attempt, key_bounds,
+            delete_keys=delete_keys,
+        ),
+        ConcurrentIcebergWrite, max_retries,
+    )
 
 
 def _merge_once_iceberg(
     spark: SparkSession, source: DataFrame, table_path: str, keys: list,
-    attempt: int, delete_keys: DataFrame | None = None,
-    key_bounds: tuple | None = None,
+    attempt: int, key_bounds: tuple, delete_keys: DataFrame | None = None,
 ) -> dict:
-    import shutil
-    import tempfile
-    import uuid
     from pyspark.sql import functions as F
 
-    meta_dir = os.path.join(table_path, "metadata")
-    planned_version = (_metadata_versions(meta_dir) or [0])[-1]
+    planned_version = _head_version(table_path)
     meta = _load_metadata(table_path)
     part_cols = _partition_spec_fields(meta)
     files, _deletes = plan_scan(table_path)
-    if not files:
-        # empty table: MERGE degenerates to a pure append of the source
+    # MANIFEST-BOUNDS SKIPPING for the touched-file search: a data file
+    # whose [lower, upper] range on the first merge key cannot contain
+    # any source key is never opened — the Iceberg twin of delta_lite's
+    # footer-stats skipping (finding 42).  With the table clustered on
+    # the key, a narrow upsert scans a handful of files, not the table.
+    # Pruned files cannot contain matches, so skipping them never
+    # changes the delete set.
+    search_files = files
+    bounds = None
+    if files and key_bounds[0] is not None:
+        bounds = {keys[0]: key_bounds}
+        search_files = plan_scan(table_path, bounds_filter=bounds)[0]
+        if len(search_files) == len(files):
+            bounds = None
+    if not search_files:
+        # nothing can match, so the MERGE degenerates to a pure append.
+        # An empty table takes the source as it is.  When NO live
+        # file's [lower, upper] can contain any tombstone key (the
+        # insert-only upsert on a key-clustered table), the append
+        # projects to the TABLE schema, same as the main path: a missing
+        # column is a named error, an extra column never leaks into
+        # data files.
+        scan = {}
+        if files:
+            tbl_schema = _spark_schema_from_meta(meta)
+            if tbl_schema is not None:
+                source = source.select(*[f.name for f in tbl_schema.fields])
+            scan = {"files_scanned": 0, "files_total": len(files)}
         data_entries = _stage_iceberg_data(source, table_path, part_cols)
-        try:
-            snap_id = _commit_snapshot(
-                table_path, part_cols,
-                data_entries=data_entries, delete_entries=[],
-                expect_version=planned_version,
-                schema_fields=_ice_schema_fields(source),
-            )
-        except ConcurrentIcebergWrite:
-            _discard_staged_iceberg(
-                table_path, [r for r, *_ in data_entries]
-            )
-            raise
+        snap_id = _commit_or_discard(
+            table_path, part_cols, data_entries, [],
+            expect_version=planned_version,
+            schema_fields=_ice_schema_fields(source),
+        )
         return {
             "snapshot_id": snap_id, "deleted_rows": 0, "delete_files": 0,
-            "appended_files": len(data_entries), "retries": attempt,
+            "appended_files": len(data_entries), **scan,
+            "retries": attempt,
         }
     src_keys = source.select(*keys).distinct()
     # the TOMBSTONE key set: matched rows replaced by the source, plus
@@ -5202,61 +5217,6 @@ def _merge_once_iceberg(
     tomb_hint = (
         F.broadcast(tomb_keys) if delete_keys is None else tomb_keys
     )
-    # MANIFEST-BOUNDS SKIPPING for the touched-file search: a data file
-    # whose [lower, upper] range on the first merge key cannot contain
-    # any source key is never opened — the Iceberg twin of delta_lite's
-    # footer-stats skipping (finding 42).  With the table clustered on
-    # the key, a narrow upsert scans a handful of files, not the table.
-    # Pruned files cannot contain matches, so skipping them never
-    # changes the delete set.
-    search_files = files
-    key0 = keys[0]
-    if key_bounds is None:  # direct _merge_once callers (none today)
-        kb_row = tomb_keys.agg(
-            F.min(key0).alias("lo"), F.max(key0).alias("hi")
-        ).collect()[0]
-        key_bounds = (kb_row["lo"], kb_row["hi"])
-    bounds = None
-    if key_bounds[0] is not None:
-        bounds = {key0: (key_bounds[0], key_bounds[1])}
-        bounded = plan_scan(table_path, bounds_filter=bounds)[0]
-        if not bounded:
-            # NO live file's [lower, upper] can contain any tombstone
-            # key — nothing can match, so the MERGE degenerates to a
-            # pure append (the insert-only upsert on a key-clustered
-            # table; previously this crashed the bounded live read).
-            # The append still projects to the TABLE schema, same as
-            # the main path: a missing column is a named error, an
-            # extra column never leaks into data files.
-            tbl_schema = _spark_schema_from_meta(meta)
-            if tbl_schema is not None:
-                source = source.select(
-                    *[f.name for f in tbl_schema.fields]
-                )
-            data_entries = _stage_iceberg_data(source, table_path, part_cols)
-            try:
-                snap_id = _commit_snapshot(
-                    table_path, part_cols,
-                    data_entries=data_entries, delete_entries=[],
-                    expect_version=planned_version,
-                    schema_fields=_ice_schema_fields(source),
-                )
-            except ConcurrentIcebergWrite:
-                _discard_staged_iceberg(
-                    table_path, [r for r, *_ in data_entries]
-                )
-                raise
-            return {
-                "snapshot_id": snap_id, "deleted_rows": 0,
-                "delete_files": 0,
-                "appended_files": len(data_entries),
-                "files_scanned": 0, "files_total": len(files),
-                "retries": attempt,
-            }
-        if len(bounded) < len(files):
-            search_files = bounded
-        else:
-            bounds = None
     files_scanned = len(search_files)
     # Match against LIVE rows — the full reader (metadata schema,
     # position/equality/DV deletes applied), not raw parquet: matching
@@ -5271,20 +5231,13 @@ def _merge_once_iceberg(
         spark, table_path, bounds_filter=bounds, _row_refs=True,
         row_lineage=fv >= 3,
     )
-    schema_cols = [
-        c
-        for c in live.columns
-        if c not in (
-            "__ice_file", "__ice_pos",
-            "_row_id", "_last_updated_sequence_number",
-        )
-    ]
+    schema_cols = [c for c in live.columns if c not in _ROW_REF_COLS]
     source = source.select(*schema_cols)
     target = live.select(
         *keys, "__ice_file", "__ice_pos",
         *(["_row_id"] if fv >= 3 else []),
     )
-    drop_dv_refs: frozenset = frozenset()
+    matched_tomb = target.join(tomb_hint, keys, "left_semi")
     if fv >= 3:
         # v3: matched rows become DELETION VECTORS, never new
         # position-delete parquet (forbidden by the spec's v3 rules).
@@ -5293,13 +5246,11 @@ def _merge_once_iceberg(
         # which would otherwise replay the whole MOR read (deletes
         # applied).  Materialize it once: O(|matched|) narrow rows,
         # never the data payload.
-        matched_tomb = target.join(
-            tomb_hint, keys, "left_semi"
-        ).localCheckpoint(eager=True)
-        matched_local = matched_tomb.select("__ice_file", "__ice_pos")
-        delete_entries, drop_dv_refs, deleted_rows = _stage_iceberg_dvs(
-            spark, table_path, matched_local, files, _deletes
-        )
+        matched_tomb = matched_tomb.localCheckpoint(eager=True)
+    delete_entries, drop_dv_refs, deleted_rows = _stage_row_deletes(
+        spark, table_path, matched_tomb, fv, files, _deletes, search_files
+    )
+    if fv >= 3:
         # spec §Row Lineage: an UPDATED row keeps its _row_id — carry
         # the matched target row's id onto its source twin,
         # MATERIALIZED into the new file (nulls on pure inserts resolve
@@ -5319,66 +5270,16 @@ def _merge_once_iceberg(
             .agg(F.min("_row_id").alias("_row_id"))
         )
         source = source.join(id_map, keys, "left")
-    else:
-        matched = _attach_orig(
-            spark, target.join(tomb_hint, keys, "left_semi"), search_files
-        ).select(
-            F.col("orig").alias("file_path"),
-            F.col("__ice_pos").alias("pos"),
-        )
-        # spec: position delete files sorted by file_path then pos
-        stage = tempfile.mkdtemp(prefix="_ice_del_", dir=table_path)
-        delete_entries = []
-        deleted_rows = 0
-        try:
-            out = os.path.join(stage, "out")
-            (
-                # delete-file count scales with the TARGET's file count,
-                # not the session's shuffle width: every later MOR read
-                # opens each delete file, so 32 near-empty files from a
-                # default shuffle is pure read amplification
-                matched.repartitionByRange(
-                    max(1, len(files)), "file_path", "pos"
-                )
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("overwrite").parquet(out)
-            )
-            import glob as _glob
-
-            for src_file in sorted(
-                _glob.glob(os.path.join(out, "*.parquet"))
-            ):
-                count = _footer_rows(src_file)
-                if count == 0:
-                    continue  # Spark writes empty parts for empty splits
-                rel = f"data/delete-{uuid.uuid4().hex}.parquet"
-                dest = os.path.join(table_path, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                size = os.path.getsize(src_file)
-                shutil.move(src_file, dest)
-                delete_entries.append((rel, {}, count, size, 1, None))
-                deleted_rows += count
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
     data_entries = _stage_iceberg_data(source, table_path, part_cols)
-    try:
-        snap_id = _commit_snapshot(
-            table_path, part_cols,
-            data_entries=data_entries,
-            delete_entries=delete_entries,
-            expect_version=planned_version,
-            # schema from the TABLE columns only — the v3 path's
-            # materialized _row_id is a file-level lineage column,
-            # never part of the table schema
-            schema_fields=_ice_schema_fields(source.select(*schema_cols)),
-            drop_dv_refs=drop_dv_refs,
-        )
-    except ConcurrentIcebergWrite:
-        _discard_staged_iceberg(
-            table_path,
-            [r for r, *_ in delete_entries] + [r for r, *_ in data_entries],
-        )
-        raise
+    snap_id = _commit_or_discard(
+        table_path, part_cols, data_entries, delete_entries,
+        expect_version=planned_version,
+        # schema from the TABLE columns only — the v3 path's
+        # materialized _row_id is a file-level lineage column, never
+        # part of the table schema
+        schema_fields=_ice_schema_fields(source.select(*schema_cols)),
+        drop_dv_refs=drop_dv_refs,
+    )
     return {
         "snapshot_id": snap_id,
         "deleted_rows": deleted_rows,
@@ -5416,8 +5317,6 @@ def upsert_iceberg_equality(
     (``etl_consume_entity_match.py:449-455``) — this is its
     write-amplification-free variant.
     """
-    from pyspark.sql import functions as F
-
     keys = [keys] if isinstance(keys, str) else list(keys)
     if not is_iceberg_table(table_path):
         snap_id = write_iceberg(spark, source, table_path)
@@ -5426,29 +5325,19 @@ def upsert_iceberg_equality(
     # the source is evaluated twice (distinct-key delete file + data
     # append) — materialize it once, same rationale as merge_iceberg
     source = source.localCheckpoint(eager=True)
-    attempt = 0
-    while True:
-        try:
-            return _upsert_equality_once(
-                spark, source, table_path, keys, attempt
-            )
-        except ConcurrentIcebergWrite:
-            if attempt >= max_retries:
-                raise
-            attempt += 1
+    return retry_on_conflict(
+        lambda attempt: _upsert_equality_once(
+            spark, source, table_path, keys, attempt
+        ),
+        ConcurrentIcebergWrite, max_retries,
+    )
 
 
 def _upsert_equality_once(
     spark: SparkSession, source: DataFrame, table_path: str, keys: list,
     attempt: int,
 ) -> dict:
-    import glob as _glob
-    import shutil
-    import tempfile
-    import uuid
-
-    meta_dir = os.path.join(table_path, "metadata")
-    planned_version = (_metadata_versions(meta_dir) or [0])[-1]
+    planned_version = _head_version(table_path)
     meta = _load_metadata(table_path)
     part_cols = _partition_spec_fields(meta)
     names_by_id = _field_names_by_id(meta)
@@ -5468,7 +5357,6 @@ def _upsert_equality_once(
     # anti-join it against that partition's data — and partition-level
     # maintenance (compaction of one partition) can drop exactly the
     # deletes that apply to it.
-    delete_entries = []
     distinct_keys = source.select(*keys).distinct()
     if part_cols and {f.source for f in part_cols} <= set(keys):
         staged = _stage_iceberg_data(distinct_keys, table_path, part_cols)
@@ -5477,42 +5365,18 @@ def _upsert_equality_once(
             for rel, pvals, count, size, _minmax in staged
         ]
     else:
-        stage = tempfile.mkdtemp(prefix="_ice_eqdel_", dir=table_path)
-        try:
-            out = os.path.join(stage, "out")
-            distinct_keys.write.mode("overwrite").parquet(out)
-            for src_file in sorted(
-                _glob.glob(os.path.join(out, "*.parquet"))
-            ):
-                count = _footer_rows(src_file)
-                if count == 0:
-                    continue
-                rel = f"data/eqdelete-{uuid.uuid4().hex}.parquet"
-                dest = os.path.join(table_path, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                size = os.path.getsize(src_file)
-                shutil.move(src_file, dest)
-                # global scope: an all-null partition tuple (the key set
-                # is table-wide unique, not partition-local)
-                delete_entries.append((rel, {}, count, size, 2, eq_ids))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        # global scope: an empty partition tuple (the key set is
+        # table-wide unique, not partition-local)
+        delete_entries = _stage_delete_files(
+            table_path, distinct_keys, equality_ids=eq_ids
+        )
     # (b) the source appends as new data files
     data_entries = _stage_iceberg_data(source, table_path, part_cols)
-    try:
-        snap_id = _commit_snapshot(
-            table_path, part_cols,
-            data_entries=data_entries,
-            delete_entries=delete_entries,
-            expect_version=planned_version,
-            schema_fields=_ice_schema_fields(source),
-        )
-    except ConcurrentIcebergWrite:
-        _discard_staged_iceberg(
-            table_path,
-            [r for r, *_ in delete_entries] + [r for r, *_ in data_entries],
-        )
-        raise
+    snap_id = _commit_or_discard(
+        table_path, part_cols, data_entries, delete_entries,
+        expect_version=planned_version,
+        schema_fields=_ice_schema_fields(source),
+    )
     return {
         "snapshot_id": snap_id,
         "delete_files": len(delete_entries),
@@ -5594,8 +5458,7 @@ def rewrite_data_files(
             "files_after": len(files),
             "rewritten": False,
         }
-    meta_dir = os.path.join(table_path, "metadata")
-    planned_version = (_metadata_versions(meta_dir) or [0])[-1]
+    planned_version = _head_version(table_path)
     meta = _load_metadata(table_path)
     part_cols = _partition_spec_fields(meta)
     fv = max(2, int(meta.get("format-version", 2)))
@@ -5637,23 +5500,18 @@ def rewrite_data_files(
     elif target_files:
         df = df.coalesce(target_files)
     data_entries = _stage_iceberg_data(df, table_path, part_cols)
-    try:
-        snap_id = _commit_snapshot(
-            table_path, part_cols,
-            data_entries=data_entries, delete_entries=[],
-            expect_version=planned_version,
-            replace=True,
-            # spec field 140: files written under the declared default
-            # order carry its id (zorder is not a declared order)
-            sort_order_id=(
-                int(meta.get("default-sort-order-id") or 0) or None
-                if (sort_cols and not zorder_by)
-                else None
-            ),
-        )
-    except ConcurrentIcebergWrite:
-        _discard_staged_iceberg(table_path, [r for r, *_ in data_entries])
-        raise
+    snap_id = _commit_or_discard(
+        table_path, part_cols, data_entries, [],
+        expect_version=planned_version,
+        replace=True,
+        # spec field 140: files written under the declared default
+        # order carry its id (zorder is not a declared order)
+        sort_order_id=(
+            int(meta.get("default-sort-order-id") or 0) or None
+            if (sort_cols and not zorder_by)
+            else None
+        ),
+    )
     return {
         "snapshot_id": snap_id,
         "files_before": len(files),
@@ -5673,8 +5531,7 @@ def truncate_iceberg(table_path: str) -> dict:
     files, deletes = plan_scan(table_path)
     meta = _load_metadata(table_path)
     part_cols = _partition_spec_fields(meta)
-    meta_dir = os.path.join(table_path, "metadata")
-    planned_version = (_metadata_versions(meta_dir) or [0])[-1]
+    planned_version = _head_version(table_path)
     snap_id = _commit_snapshot(
         table_path, part_cols,
         data_entries=[], delete_entries=[],
@@ -5702,8 +5559,7 @@ def overwrite_iceberg(
     overwrite.  Returns the new snapshot id."""
     meta = _load_metadata(table_path)
     part_cols = _partition_spec_fields(meta)
-    meta_dir = os.path.join(table_path, "metadata")
-    planned_version = (_metadata_versions(meta_dir) or [0])[-1]
+    planned_version = _head_version(table_path)
     tbl_schema = _spark_schema_from_meta(meta)
     if tbl_schema is not None:
         names = [f.name for f in tbl_schema.fields]
@@ -5714,16 +5570,11 @@ def overwrite_iceberg(
             )
         df = df.select(*names)
     data_entries = _stage_iceberg_data(df, table_path, part_cols)
-    try:
-        return _commit_snapshot(
-            table_path, part_cols,
-            data_entries=data_entries, delete_entries=[],
-            expect_version=planned_version,
-            replace=True,
-        )
-    except ConcurrentIcebergWrite:
-        _discard_staged_iceberg(table_path, [r for r, *_ in data_entries])
-        raise
+    return _commit_or_discard(
+        table_path, part_cols, data_entries, [],
+        expect_version=planned_version,
+        replace=True,
+    )
 
 
 def _mapped_ice_fields(schema) -> list[dict]:
@@ -6021,8 +5872,7 @@ def set_iceberg_properties(table_path: str, properties: dict) -> int:
             props[k] = str(v)
     new_meta = dict(meta)
     new_meta["properties"] = props
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "
@@ -6095,8 +5945,7 @@ def set_sort_order(table_path: str, order: list) -> dict:
     new_meta = dict(meta)
     new_meta["sort-orders"] = orders
     new_meta["default-sort-order-id"] = new_id
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "
@@ -6249,8 +6098,7 @@ def _carry_commit(
     if before <= len(groups) and not force:
         return {"manifests_before": before, "manifests_after": before,
                 "snapshot_id": None, "rewritten": False}
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     snap_id = version
     new_manifests = []
     for (mf_content, spec_id), rows in sorted(groups.items()):
@@ -6331,10 +6179,6 @@ def delete_iceberg(
       debt away later.
 
     Returns {"snapshot_id", "rows_deleted", "metadata_only", ...}."""
-    import glob as _glob
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     meta = _load_metadata(table_path)
@@ -6393,7 +6237,7 @@ def delete_iceberg(
                     "" if v is None else str(v) for v in t
                 ),
             )
-            raw = _meta_df(
+            raw = meta_df(
                 spark,
                 [(i, *t) for i, t in enumerate(tuples)],
                 StructType(
@@ -6468,8 +6312,7 @@ def delete_iceberg(
                     "files_removed": len(removed),
                 }
     # ---- merge-on-read row path ------------------------------------
-    meta_dir = os.path.join(table_path, "metadata")
-    planned_version = (_metadata_versions(meta_dir) or [0])[-1]
+    planned_version = _head_version(table_path)
     part_cols = part_fields
 
     # Match against LIVE rows — the full reader (metadata schema,
@@ -6479,57 +6322,14 @@ def delete_iceberg(
     # (ADVICE r9).
     live = read_iceberg(spark, table_path, _row_refs=True)
     fv = max(2, int(meta.get("format-version", 2)))
-    drop_dv_refs: frozenset = frozenset()
-    if fv >= 3:
-        # v3: the matched rows tombstone into DELETION VECTORS (one
-        # puffin sidecar per touched file, superseding that file's
-        # prior DV and folding any v2 position deletes in)
-        delete_entries, drop_dv_refs, deleted_rows = _stage_iceberg_dvs(
-            spark, table_path,
-            live.where(F.expr(predicate)).select("__ice_file", "__ice_pos"),
-            files, _dels,
-        )
-    else:
-        matched = _attach_orig(
-            spark, live.where(F.expr(predicate)), files
-        ).select(
-            F.col("orig").alias("file_path"),
-            F.col("__ice_pos").alias("pos"),
-        )
-        stage = tempfile.mkdtemp(prefix="_ice_del_", dir=table_path)
-        delete_entries = []
-        deleted_rows = 0
-        try:
-            out = os.path.join(stage, "out")
-            (
-                matched.repartitionByRange(
-                    max(1, len(files)), "file_path", "pos"
-                )
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-            for src_file in sorted(
-                _glob.glob(os.path.join(out, "*.parquet"))
-            ):
-                count = _footer_rows(src_file)
-                if count == 0:
-                    continue
-                rel = f"data/delete-{_uuid.uuid4().hex}.parquet"
-                dest = os.path.join(table_path, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                size = os.path.getsize(src_file)
-                shutil.move(src_file, dest)
-                delete_entries.append((rel, {}, count, size, 1, None))
-                deleted_rows += count
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+    delete_entries, drop_dv_refs, deleted_rows = _stage_row_deletes(
+        spark, table_path, live.where(F.expr(predicate)), fv, files, _dels
+    )
     if not delete_entries:
         return {"snapshot_id": None, "rows_deleted": 0,
                 "metadata_only": False, "delete_files": 0}
-    snap_id = _commit_snapshot(
-        table_path, part_cols,
-        data_entries=[], delete_entries=delete_entries,
+    snap_id = _commit_or_discard(
+        table_path, part_cols, [], delete_entries,
         expect_version=planned_version,
         drop_dv_refs=drop_dv_refs,
     )
@@ -6551,10 +6351,6 @@ def update_iceberg(
     as :func:`merge_iceberg`).  SET expressions evaluate against the
     OLD row (one-shot SQL UPDATE semantics).  Returns {"snapshot_id",
     "rows_updated", "delete_files", "appended_files"}."""
-    import glob as _glob
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     meta = _load_metadata(table_path)
@@ -6564,8 +6360,7 @@ def update_iceberg(
     if not files:
         return {"snapshot_id": None, "rows_updated": 0,
                 "delete_files": 0, "appended_files": 0}
-    meta_dir = os.path.join(table_path, "metadata")
-    planned_version = (_metadata_versions(meta_dir) or [0])[-1]
+    planned_version = _head_version(table_path)
     part_cols = _partition_spec_fields(meta)
 
     fv = max(2, int(meta.get("format-version", 2)))
@@ -6581,23 +6376,15 @@ def update_iceberg(
     live = read_iceberg(
         spark, table_path, _row_refs=True, row_lineage=fv >= 3
     )
-    schema_cols = [
-        c
-        for c in live.columns
-        if c not in (
-            "__ice_file", "__ice_pos",
-            "_row_id", "_last_updated_sequence_number",
-        )
-    ]
+    schema_cols = [c for c in live.columns if c not in _ROW_REF_COLS]
     unknown = set(set_exprs) - set(schema_cols)
     if unknown:
         raise IcebergLiteError(f"unknown SET columns {sorted(unknown)}")
-    matched = _attach_orig(spark, live.where(F.expr(predicate)), files)
     # matched feeds BOTH the position/DV staging pass and the
     # transformed-copy append — materialize the (predicate-pruned) MOR
     # read once instead of paying the full read (incl. delete
     # anti-joins) twice
-    matched = matched.localCheckpoint(eager=True)
+    matched = live.where(F.expr(predicate)).localCheckpoint(eager=True)
     dtypes = dict(live.dtypes)
     updated = matched.select(
         *[
@@ -6612,61 +6399,18 @@ def update_iceberg(
         # it resolves to the new commit's sequence number
         *([F.col("_row_id")] if fv >= 3 else []),
     )
-    drop_dv_refs: frozenset = frozenset()
-    if fv >= 3:
-        delete_entries, drop_dv_refs, rows_updated = _stage_iceberg_dvs(
-            spark, table_path,
-            matched.select("__ice_file", "__ice_pos"),
-            files, _dels,
-        )
-    else:
-        positions = matched.select(
-            F.col("orig").alias("file_path"),
-            F.col("__ice_pos").alias("pos"),
-        )
-        stage = tempfile.mkdtemp(prefix="_ice_upd_", dir=table_path)
-        delete_entries = []
-        rows_updated = 0
-        try:
-            out = os.path.join(stage, "out")
-            (
-                positions.repartitionByRange(
-                    max(1, len(files)), "file_path", "pos"
-                )
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-            for src_file in sorted(
-                _glob.glob(os.path.join(out, "*.parquet"))
-            ):
-                count = _footer_rows(src_file)
-                if count == 0:
-                    continue
-                rel = f"data/delete-{_uuid.uuid4().hex}.parquet"
-                dest = os.path.join(table_path, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                size = os.path.getsize(src_file)
-                shutil.move(src_file, dest)
-                delete_entries.append((rel, {}, count, size, 1, None))
-                rows_updated += count
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+    delete_entries, drop_dv_refs, rows_updated = _stage_row_deletes(
+        spark, table_path, matched, fv, files, _dels
+    )
     if not delete_entries:
         return {"snapshot_id": None, "rows_updated": 0,
                 "delete_files": 0, "appended_files": 0}
     data_entries = _stage_iceberg_data(updated, table_path, part_cols)
-    try:
-        snap_id = _commit_snapshot(
-            table_path, part_cols,
-            data_entries=data_entries,
-            delete_entries=delete_entries,
-            expect_version=planned_version,
-            drop_dv_refs=drop_dv_refs,
-        )
-    except ConcurrentIcebergWrite:
-        _discard_staged_iceberg(table_path, [r for r, *_ in data_entries])
-        raise
+    snap_id = _commit_or_discard(
+        table_path, part_cols, data_entries, delete_entries,
+        expect_version=planned_version,
+        drop_dv_refs=drop_dv_refs,
+    )
     return {
         "snapshot_id": snap_id,
         "rows_updated": rows_updated,
@@ -7042,8 +6786,7 @@ def alter_iceberg_schema(
     new_meta["current-schema-id"] = new_sid
     new_meta["last-column-id"] = max(_last_column_id(meta), next_id)
     new_meta.pop("schema", None)  # the v1 single-schema form is stale now
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "
@@ -7081,8 +6824,7 @@ def upgrade_iceberg_format(table_path: str, to_version: int = 3) -> dict:
     new_meta["format-version"] = to_version
     if "next-row-id" not in new_meta:
         new_meta["next-row-id"] = 0
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "
@@ -7113,8 +6855,7 @@ def rollback_to_snapshot(table_path: str, snapshot_id) -> dict:
     refs = dict(meta.get("refs") or {})
     refs["main"] = {"snapshot-id": int(target), "type": "branch"}
     new_meta["refs"] = refs
-    meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
+    version = _head_version(table_path) + 1
     if not _try_commit_metadata(table_path, version, new_meta):
         raise ConcurrentIcebergWrite(
             f"metadata v{version} was committed concurrently; re-run "

@@ -50,6 +50,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dml_core import meta_df
+
 
 class LakehouseSqlError(Exception):
     pass
@@ -579,10 +581,8 @@ def _lakehouse_sql(spark: SparkSession, sql: str) -> DataFrame:
 
 
 def _metrics_df(spark: SparkSession, d: dict) -> DataFrame:
-    from .delta_lite import _meta_df
-
     rows = [(k, "" if d[k] is None else str(d[k])) for k in sorted(d)]
-    return _meta_df(spark, rows, "metric string, value string")
+    return meta_df(spark, rows, "metric string, value string")
 
 
 def _validate_ref(ref: _TableRef) -> None:
@@ -2084,9 +2084,8 @@ def _exec_describe(spark: SparkSession, p: _P) -> DataFrame:
         _validate_ref(ref)
         if ref.fmt == "delta":
             rows = delta_lite.history(ref.path)
-            from .delta_lite import _meta_df
 
-            return _meta_df(
+            return meta_df(
                 spark,
                 [
                     (
@@ -2128,9 +2127,8 @@ def _exec_describe(spark: SparkSession, p: _P) -> DataFrame:
     if part:
         rows.append(("# Partition Information", "", ""))
         rows.extend((c, "", "") for c in part)
-    from .delta_lite import _meta_df
 
-    return _meta_df(
+    return meta_df(
         spark, rows, "col_name string, data_type string, comment string"
     )
 
@@ -2167,10 +2165,9 @@ def _exec_show(spark: SparkSession, p: _P) -> DataFrame:
             from .iceberg_lite import _load_metadata
 
             props = dict(_load_metadata(ref.path).get("properties") or {})
-        from .delta_lite import _meta_df
 
         rows = [(k, str(v)) for k, v in sorted(props.items())]
-        return _meta_df(spark, rows, "key string, value string")
+        return meta_df(spark, rows, "key string, value string")
     if p.take_words("PARTITIONS"):
         ref = p.expect_table_ref()
         _validate_ref(ref)
@@ -2194,10 +2191,9 @@ def _exec_show(spark: SparkSession, p: _P) -> DataFrame:
             tuples,
             key=lambda t: tuple("" if v is None else str(v) for v in t),
         )
-        from .delta_lite import _meta_df
 
         schema = ", ".join(f"`{c}` string" for c in part_cols)
-        return _meta_df(spark, rows, schema)
+        return meta_df(spark, rows, schema)
     raise LakehouseSqlError("SHOW supports TBLPROPERTIES and PARTITIONS")
 
 

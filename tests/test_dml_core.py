@@ -1,0 +1,248 @@
+"""dml_core: the row-level DML pieces both table formats share — the
+MERGE prologue's key bounds, the conflict-retry loop and (Iceberg)
+commit-or-discard of staged files — checked through the public
+``delta_lite`` / ``iceberg_lite`` entry points."""
+
+import json
+import os
+from urllib.parse import unquote
+
+import pytest
+from pyspark.sql import Row
+
+from aws_insurancelake_etl_spark.sources import delta_lite as dl
+from aws_insurancelake_etl_spark.sources import dml_core
+from aws_insurancelake_etl_spark.sources import iceberg_lite as il
+
+
+def _tree(path):
+    """Every file under ``path``, relative to it."""
+    return {
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path)
+        for f in fs
+    }
+
+
+def _kv_rows(df):
+    return sorted((str(r["k"]), r["v"]) for r in df.collect())
+
+
+class _Fmt:
+    """One table format behind the calls these tests make."""
+
+    def __init__(self, name):
+        self.name = name
+
+    def append(self, spark, df, path):
+        if self.name == "delta":
+            dl.write_delta(df, path)
+        else:
+            il.write_iceberg(spark, df, path)
+
+    def merge(self, spark, source, path, keys, **kw):
+        fn = dl.merge_delta if self.name == "delta" else il.merge_iceberg
+        return fn(spark, source, path, keys, **kw)
+
+    def read(self, spark, path):
+        if self.name == "delta":
+            return dl.read_delta(spark, path)
+        return il.read_iceberg(spark, path)
+
+
+@pytest.fixture(params=["delta", "iceberg"])
+def fmt(request):
+    return _Fmt(request.param)
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k double, v string")
+
+
+def test_delete_key_bounds_follow_spark_nan_ordering(spark, tmp_path, fmt):
+    """A NaN delete key lies above every number in Spark's ordering, so
+    the merged skip range must reach it: Python's ``max(5.0, nan)`` is
+    5.0, which would skip the NaN row's file and keep the row."""
+    path = str(tmp_path / "t")
+    nan = float("nan")
+    fmt.append(spark, _kv(spark, [(1.0, "a"), (5.0, "b")]), path)
+    fmt.append(spark, _kv(spark, [(nan, "n")]), path)
+    fmt.append(spark, _kv(spark, [(100.0, "z")]), path)
+    fmt.merge(
+        spark, _kv(spark, [(1.0, "a2"), (5.0, "b2")]), path, ["k"],
+        delete_keys=_kv(spark, [(nan, "")]).select("k"),
+    )
+    assert _kv_rows(fmt.read(spark, path)) == [
+        ("1.0", "a2"), ("100.0", "z"), ("5.0", "b2"),
+    ]
+
+
+def test_lost_commit_leaves_no_iceberg_files(spark, tmp_path, monkeypatch):
+    """DELETE, UPDATE and MERGE that lose the commit race discard every
+    file they staged, and the table reads as before."""
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [Row(k=i, v=f"v{i}") for i in range(8)]
+    ).select("k", "v")
+    il.write_iceberg(spark, base.repartition(2), path)
+    before_rows = sorted(map(tuple, il.read_iceberg(spark, path).collect()))
+    before = _tree(path)
+
+    def lose(*_a, **_k):
+        raise il.ConcurrentIcebergWrite("table moved (forced)")
+
+    monkeypatch.setattr(il, "_commit_snapshot", lose)
+    with pytest.raises(il.ConcurrentIcebergWrite):
+        il.delete_iceberg(spark, path, "k < 3")
+    assert _tree(path) == before
+    with pytest.raises(il.ConcurrentIcebergWrite):
+        il.update_iceberg(spark, path, {"v": "'x'"}, "k < 3")
+    assert _tree(path) == before
+    src = spark.createDataFrame(
+        [Row(k=1, v="m1"), Row(k=20, v="m20")]
+    ).select("k", "v")
+    with pytest.raises(il.ConcurrentIcebergWrite):
+        il.merge_iceberg(spark, src, path, ["k"], max_retries=0)
+    assert _tree(path) == before
+    monkeypatch.undo()
+    assert sorted(map(tuple, il.read_iceberg(spark, path).collect())) == (
+        before_rows
+    )
+
+
+def test_append_keeps_staged_files_until_its_last_lost_commit(
+        spark, tmp_path, monkeypatch):
+    """An append stages its data files once for every attempt: a lost
+    commit that is retried keeps them, the last lost commit discards
+    them."""
+    path = str(tmp_path / "t")
+    il.write_iceberg(spark, _kv(spark, [(1.0, "a")]), path)
+    real, losses = il._commit_snapshot, []
+
+    def lose_once(*a, **k):
+        if not losses:
+            losses.append(1)
+            raise il.ConcurrentIcebergWrite("table moved (forced)")
+        return real(*a, **k)
+
+    monkeypatch.setattr(il, "_commit_snapshot", lose_once)
+    il.write_iceberg(spark, _kv(spark, [(2.0, "b")]), path, max_retries=1)
+    assert _kv_rows(il.read_iceberg(spark, path)) == [("1.0", "a"), ("2.0", "b")]
+    before = _tree(path)
+
+    def lose(*_a, **_k):
+        raise il.ConcurrentIcebergWrite("table moved (forced)")
+
+    monkeypatch.setattr(il, "_commit_snapshot", lose)
+    with pytest.raises(il.ConcurrentIcebergWrite):
+        il.write_iceberg(spark, _kv(spark, [(3.0, "c")]), path, max_retries=1)
+    assert _tree(path) == before
+
+
+@pytest.mark.parametrize("columns, row", [
+    ("k int, v string, extra string", (1, "x", "e")),
+    ("k int", (1,)),
+])
+def test_merge_into_truncated_iceberg_table_appends_the_source(
+        spark, tmp_path, columns, row):
+    """A table with no data file has nothing to match: MERGE appends the
+    source as it is, whether it carries a column more or one less than
+    the table."""
+    path = str(tmp_path / "t")
+    il.write_iceberg(spark, spark.createDataFrame([(9, "old")], "k int, v string"), path)
+    il.truncate_iceberg(path)
+    res = il.merge_iceberg(spark, spark.createDataFrame([row], columns), path, ["k"])
+    assert res["deleted_rows"] == 0 and res["retries"] == 0
+    assert "files_scanned" not in res
+    out = il.read_iceberg(spark, path)
+    assert out.columns == ["k", "v"]
+    assert [tuple(r) for r in out.collect()] == [(1, row[1] if len(row) > 1 else None)]
+
+
+def _delta_logged_files(path):
+    """Every data file any committed Delta version added."""
+    log = os.path.join(path, "_delta_log")
+    added = set()
+    for name in os.listdir(log):
+        if not name.endswith(".json"):
+            continue
+        with open(os.path.join(log, name), encoding="utf-8") as fh:
+            for line in fh:
+                action = json.loads(line)
+                if "add" in action:
+                    added.add(unquote(action["add"]["path"]))
+    return added
+
+
+def test_merge_retries_once_after_a_lost_commit(spark, tmp_path, monkeypatch,
+                                                 fmt):
+    """Another writer lands an append between the merge's snapshot and
+    its commit: the first attempt loses, discards what it staged and
+    re-executes on the new snapshot, which carries the append."""
+    path = str(tmp_path / "t")
+    fmt.append(spark, _kv(spark, [(1.0, "a"), (2.0, "b")]), path)
+    other = _kv(spark, [(7.0, "o")])
+    source = _kv(spark, [(2.0, "b2"), (3.0, "c")])
+    calls = []
+    if fmt.name == "delta":
+        real = dl._try_commit
+
+        def commit(log_dir, version, actions, *a, **k):
+            if not calls:
+                calls.append(version)
+                dl.write_delta(other, path)  # lands at `version` first
+            return real(log_dir, version, actions, *a, **k)
+
+        monkeypatch.setattr(dl, "_try_commit", commit)
+    else:
+        real = il._commit_snapshot
+
+        def commit(*a, **k):
+            if not calls:
+                calls.append(1)
+                il.write_iceberg(spark, other, path)
+            return real(*a, **k)
+
+        monkeypatch.setattr(il, "_commit_snapshot", commit)
+    res = fmt.merge(spark, source, path, ["k"])
+    assert res["retries"] == 1
+    assert _kv_rows(fmt.read(spark, path)) == [
+        ("1.0", "a"), ("2.0", "b2"), ("3.0", "c"), ("7.0", "o"),
+    ]
+    if fmt.name == "delta":
+        on_disk = {
+            f for f in _tree(path)
+            if not f.startswith("_delta_log") and f.endswith(".parquet")
+        }
+        assert on_disk <= _delta_logged_files(path)
+    else:
+        data, deletes = il.plan_scan(path)
+        live = {os.path.relpath(e.path, path) for e in (*data, *deletes)}
+        assert {f for f in _tree(path) if f.startswith("data")} == live
+
+
+def test_may_overlap_only_skips_a_provable_miss():
+    assert dml_core.may_overlap(1, 5, 6, 9) is False
+    assert dml_core.may_overlap(6, 9, 1, 5) is False
+    assert dml_core.may_overlap(1, 5, 5, 9) is True
+    assert dml_core.may_overlap(1, 5, None, 0) is False
+    assert dml_core.may_overlap(1, 5, 6, None) is False
+    # missing statistics or values that do not compare never skip
+    assert dml_core.may_overlap(None, 5, 6, 9) is True
+    assert dml_core.may_overlap("a", "c", 6, 9) is True
+
+
+def test_retry_on_conflict_gives_up_after_the_budget():
+    class Lost(Exception):
+        pass
+
+    attempts = []
+
+    def attempt(n):
+        attempts.append(n)
+        raise Lost()
+
+    with pytest.raises(Lost):
+        dml_core.retry_on_conflict(attempt, Lost, 2)
+    assert attempts == [0, 1, 2]
+    assert dml_core.retry_on_conflict(lambda n: n, Lost, 0) == 0

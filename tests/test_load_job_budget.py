@@ -15,6 +15,7 @@ import random
 import pytest
 
 from aws_insurancelake_etl_spark.catalog import enforce_schema_evolution
+from aws_insurancelake_etl_spark.operators.entitymatch import entity_match
 from aws_insurancelake_etl_spark.operators.lookup import transform_lookup
 from aws_insurancelake_etl_spark.orchestrator import run_pipeline
 from aws_insurancelake_etl_spark.plans.writer import quarantine_writer
@@ -78,10 +79,9 @@ def _drop_csv(rng: random.Random) -> tuple[str, int]:
     return "\n".join(lines) + "\n", negatives
 
 
-@pytest.fixture(scope="module")
-def loads(spark, count_jobs, tmp_path_factory):
-    """Load one drop twice; return (jobs of the second load, negatives)."""
-    root = tmp_path_factory.mktemp("jobbudget")
+def _loader(spark, root):
+    """Write the drop, its config and lookup under ``root``; return
+    (a function loading the drop, its number of negative-premium rows)."""
     config_dir, lookup_dir = root / "config", root / "lookups"
     config_dir.mkdir()
     lookup_dir.mkdir()
@@ -101,6 +101,13 @@ def loads(spark, count_jobs, tmp_path_factory):
                             landing_root=str(root / "landing"),
                             config_dir=str(config_dir), lookup_dir=str(lookup_dir))
 
+    return load, negatives
+
+
+@pytest.fixture(scope="module")
+def loads(spark, count_jobs, tmp_path_factory):
+    """Load one drop twice; return (jobs of the second load, negatives)."""
+    load, negatives = _loader(spark, tmp_path_factory.mktemp("jobbudget"))
     load()
     return count_jobs(load), negatives
 
@@ -152,3 +159,63 @@ def test_lookup_side_table_is_a_local_relation(spark, count_jobs, ctx):
     assert "LocalRelation" in plan and "ExistingRDD" not in plan and "LogicalRDD" not in plan
     assert sorted(out.collect()) == [("CA", "California"), ("NY", "New York"),
                                      ("TX", "Texas"), ("ZZ", "N/A")]
+
+
+def test_loads_release_their_cached_frames(spark, tmp_path):
+    """The frames a load caches (read, transformed, consume SQL result)
+    are released when it ends, so a long-lived session does not hold
+    every load's blocks."""
+    load, _ = _loader(spark, tmp_path)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    load()
+    after_first = len(persisted())
+    load()
+    assert len(persisted()) <= after_first
+
+
+def test_entity_match_frames_are_released_with_the_run(spark, ctx):
+    """The orchestrator's entity match caches through the run's context
+    (to_match, then the unmatched frame of each level); releasing the
+    context unpersists them."""
+    spec = {
+        "global_id_field": "gid",
+        "exact_match_fields": {"source_primary_key": "k", "source_system_key": "src"},
+        "levels": [{"id": "1", "blocks": ["name[:1]"], "threshold": 0.85,
+                    "fields": [{"fieldname": "name", "type": "string", "weight": 1.0,
+                                "method": "jarowinkler", "threshold": 0.85}]}],
+    }
+    cols = "k string, src string, name string, gid string"
+    primary = spark.createDataFrame([("1", "a", "ann", "g1")], cols)
+    incoming = spark.createDataFrame([("1", "a", "ann", None), ("2", "a", "anne", None)], cols)
+    frames = []
+
+    def persist(df):
+        frames.append(ctx.cache(df))
+        return frames[-1]
+
+    matched = entity_match(incoming, primary, spec, persist_intermediates=persist)
+    assert sorted(r["gid"] == "g1" for r in matched.collect()) == [True, True]
+    assert len(frames) == 2 and all(df.is_cached for df in frames)
+    ctx.release_cached()
+    assert not any(df.is_cached for df in frames)
+
+
+def test_redropped_file_loads_its_new_content(spark, tmp_path):
+    """A file dropped again at the same path with new rows loads the new
+    rows, not frames an earlier load of that path left cached."""
+    config_dir = tmp_path / "config"
+    config_dir.mkdir()
+    (config_dir / "redrop-policies.json").write_text(
+        json.dumps({"input_spec": {"csv": {"header": True}}, "transform_spec": {}}))
+    drop_dir = tmp_path / "landing" / "redrop" / "policies" / "2024" / "01" / "02"
+    drop_dir.mkdir(parents=True)
+    drop = drop_dir / "policies.csv"
+
+    def load(text):
+        drop.write_text(text)
+        run_pipeline(spark, str(drop), landing_root=str(tmp_path / "landing"),
+                     config_dir=str(config_dir))
+        return sorted(tuple(r) for r in spark.table("redrop.policies").select("id", "amt").collect())
+
+    assert load("Id,Amt\n1,10\n2,20\n") == [(1, 10), (2, 20)]
+    assert load("Id,Amt\n7,70\n8,80\n9,90\n") == [(7, 70), (8, 80), (9, 90)]
