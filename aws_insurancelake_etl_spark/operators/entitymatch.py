@@ -21,12 +21,19 @@ distributed:
    deterministic, unlike the reference's last-assignment-wins loop;
 5. matched rows adopt the primary's global id; later levels only see rows
    still unmatched.
+
+The whole flow is **one linear plan**: each step fills the global id of
+the rows still missing one and passes every other row through, so the
+exact join, each level's candidate join and scoring, and the new-id fill
+appear once in the plan, and each candidate pair is scored once.  The
+reference's four streams (prematched, exact, fuzzy, new) are never split
+and re-unioned.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+import uuid
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -75,13 +82,10 @@ def split_by_null(df: DataFrame, field: str) -> tuple[DataFrame, DataFrame]:
     return df.filter(F.col(field).isNotNull()), df.filter(F.col(field).isNull())
 
 
-def exact_match(
-    incoming: DataFrame,
-    primary: DataFrame,
-    spec: dict,
-) -> tuple[DataFrame, DataFrame]:
-    """Left-outer join on (source_primary_key, source_system_key); matched
-    rows adopt the primary global id.  Returns (matched, unmatched)."""
+def _exact_step(incoming: DataFrame, primary: DataFrame, spec: dict) -> DataFrame:
+    """Rows with no global id adopt the primary's id for their
+    (source_primary_key, source_system_key); every other row passes
+    through unchanged."""
     global_id = spec["global_id_field"]
     pk = spec["exact_match_fields"]["source_primary_key"]
     sk = spec["exact_match_fields"]["source_system_key"]
@@ -90,13 +94,24 @@ def exact_match(
     ).dropDuplicates(["__pk", "__sk"])
     joined = incoming.join(
         F.broadcast(primary_ids),
-        (incoming[pk] == F.col("__pk")) & (incoming[sk] == F.col("__sk")),
+        (incoming[pk] == F.col("__pk"))
+        & (incoming[sk] == F.col("__sk"))
+        & incoming[global_id].isNull(),
         "leftouter",
     )
-    joined = joined.withColumn(global_id, F.coalesce(F.col(global_id), F.col("__gid"))).drop(
+    return joined.withColumn(global_id, F.coalesce(F.col(global_id), F.col("__gid"))).drop(
         "__pk", "__sk", "__gid"
     )
-    return split_by_null(joined, global_id)
+
+
+def exact_match(
+    incoming: DataFrame,
+    primary: DataFrame,
+    spec: dict,
+) -> tuple[DataFrame, DataFrame]:
+    """Left-outer join on (source_primary_key, source_system_key); matched
+    rows adopt the primary global id.  Returns (matched, unmatched)."""
+    return split_by_null(_exact_step(incoming, primary, spec), spec["global_id_field"])
 
 
 def _field_score(field: dict) -> Column:
@@ -126,6 +141,89 @@ def _field_score(field: dict) -> Column:
     raise ValueError(f"Unsupported comparator type: {kind}")
 
 
+def _fuzzy_level_step(
+    incoming: DataFrame,
+    primary: DataFrame,
+    level: dict,
+    spec: dict,
+    truncation_observation=None,
+) -> DataFrame:
+    """One blocking level over every row: rows with no global id adopt
+    their best passing candidate's id, all other rows pass through
+    unchanged.  Same columns, same rows.
+
+    Each row is left-joined with the primary rows of its block (no
+    candidate when its global id is already set or its blocking key is
+    null), ``__score`` is computed once per pair in a projection, and one
+    ``row_number`` window per row keeps its best candidate: passing
+    candidates first, then score desc, primary sort-field desc, primary
+    global id asc.  The winner's id is adopted only when it passes the
+    level threshold."""
+    global_id = spec["global_id_field"]
+    sort_field = spec.get("sort_field")
+    key = blocking_key(level["blocks"])
+
+    incoming_b = incoming.withColumn("__block", key).withColumn(
+        "__row_id", F.monotonically_increasing_id()
+    )
+    score_fields = {f["fieldname"] for f in level["fields"]}
+    primary_cols = [F.col(global_id).alias("__p_gid"), key.alias("__p_block")] + [
+        F.col(name).alias(f"__p_{name}") for name in score_fields
+    ]
+    if sort_field:
+        primary_cols.append(F.col(sort_field).alias("__p_sort"))
+    primary_b = primary.select(*primary_cols)
+
+    block_cap = level.get("block_cap", DEFAULT_BLOCK_CAP)
+    if not block_cap:  # explicit null/0/false in the spec opts out
+        block_cap = None
+    if block_cap is not None:
+        cap_order = (
+            [F.desc_nulls_last("__p_sort")] if sort_field else []
+        ) + [F.asc("__p_gid")]
+        w_cap = Window.partitionBy("__p_block").orderBy(*cap_order)
+        primary_b = primary_b.withColumn(
+            "__cap_rn", F.row_number().over(w_cap)
+        )
+        if truncation_observation is not None:
+            primary_b = primary_b.observe(
+                truncation_observation,
+                F.sum(
+                    (F.col("__cap_rn") > int(block_cap)).cast("long")
+                ).alias("truncated_candidates"),
+            )
+        primary_b = primary_b.filter(
+            F.col("__cap_rn") <= int(block_cap)
+        ).drop("__cap_rn")
+
+    weights = [float(f["weight"]) for f in level["fields"]]
+    total_weight = sum(weights)
+    score = reduce(
+        lambda a, b: a + b,
+        [_field_score(f) * w for f, w in zip(level["fields"], weights)],
+    ) / F.lit(total_weight)
+    passes = F.col("__score") >= float(level["threshold"])
+
+    candidates = incoming_b.join(
+        primary_b,
+        (F.col("__block") == F.col("__p_block")) & F.col(global_id).isNull(),
+        "leftouter",
+    ).withColumn("__score", score)
+    order = [passes.desc(), F.desc("__score")] + (
+        [F.desc("__p_sort")] if sort_field else []
+    ) + [F.asc("__p_gid")]
+    # __block is a function of the row, so adding it to the partition
+    # keys keeps one window per __row_id and lets the window reuse the
+    # candidate join's shuffle on the blocking key
+    w = Window.partitionBy("__block", "__row_id").orderBy(*order)
+    return (
+        candidates.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .withColumn(global_id, F.coalesce(F.col(global_id), F.when(passes, F.col("__p_gid"))))
+        .select(*incoming.columns)
+    )
+
+
 def fuzzy_match_level(
     unmatched: DataFrame,
     primary: DataFrame,
@@ -152,68 +250,8 @@ def fuzzy_match_level(
     after an action, mirroring ``dedup._observe_truncation``.  The
     cap's window is one shuffle of the PRIMARY side only — the small
     dimension — never of the incoming feed."""
-    global_id = spec["global_id_field"]
-    sort_field = spec.get("sort_field")
-    key = blocking_key(level["blocks"])
-
-    incoming_b = unmatched.withColumn("__block", key).withColumn(
-        "__row_id", F.monotonically_increasing_id()
-    )
-    score_fields = {f["fieldname"] for f in level["fields"]}
-    primary_cols = [F.col(global_id).alias("__p_gid"), key.alias("__block")] + [
-        F.col(name).alias(f"__p_{name}") for name in score_fields
-    ]
-    if sort_field:
-        primary_cols.append(F.col(sort_field).alias("__p_sort"))
-    primary_b = primary.select(*primary_cols)
-
-    block_cap = level.get("block_cap", DEFAULT_BLOCK_CAP)
-    if not block_cap:  # explicit null/0/false in the spec opts out
-        block_cap = None
-    if block_cap is not None:
-        cap_order = (
-            [F.desc_nulls_last("__p_sort")] if sort_field else []
-        ) + [F.asc("__p_gid")]
-        w_cap = Window.partitionBy("__block").orderBy(*cap_order)
-        primary_b = primary_b.withColumn(
-            "__cap_rn", F.row_number().over(w_cap)
-        )
-        if truncation_observation is not None:
-            primary_b = primary_b.observe(
-                truncation_observation,
-                F.sum(
-                    (F.col("__cap_rn") > int(block_cap)).cast("long")
-                ).alias("truncated_candidates"),
-            )
-        primary_b = primary_b.filter(
-            F.col("__cap_rn") <= int(block_cap)
-        ).drop("__cap_rn")
-
-    weights = [float(f["weight"]) for f in level["fields"]]
-    total_weight = sum(weights)
-    score = reduce(
-        lambda a, b: a + b,
-        [_field_score(f) * w for f, w in zip(level["fields"], weights)],
-    ) / F.lit(total_weight)
-
-    candidates = (
-        incoming_b.join(primary_b, "__block")
-        .withColumn("__score", score)
-        .filter(F.col("__score") >= float(level["threshold"]))
-    )
-    order = [F.desc("__score")] + ([F.desc("__p_sort")] if sort_field else []) + [F.asc("__p_gid")]
-    w = Window.partitionBy("__row_id").orderBy(*order)
-    best = (
-        candidates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("__row_id", "__p_gid")
-    )
-    out = (
-        incoming_b.join(best, "__row_id", "leftouter")
-        .withColumn(global_id, F.coalesce(F.col(global_id), F.col("__p_gid")))
-        .drop("__row_id", "__block", "__p_gid")
-    )
-    return split_by_null(out, global_id)
+    out = _fuzzy_level_step(unmatched, primary, level, spec, truncation_observation)
+    return split_by_null(out, spec["global_id_field"])
 
 
 def entity_match(
@@ -221,44 +259,25 @@ def entity_match(
     primary: DataFrame,
     spec: dict,
     new_id_column: Column | None = None,
-    persist_intermediates: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Full match flow: prematched pass-through → exact → fuzzy levels →
-    new-id fill → unionByName — the four streams of
-    ``etl_consume_entity_match.py:404-431``.
+    """Full match flow of ``etl_consume_entity_match.py:404-431``:
+    prematched rows keep their id, then exact match, then each fuzzy
+    level, then new ids for the rows still unmatched.
 
-    ``persist_intermediates`` (e.g. ``DataFrame.cache``) caches each
-    level's shrinking ``unmatched`` frame (the reference's own
-    inter-stage ``cache()`` discipline,
-    ``etl_consume_entity_match.py:404,425``): every union branch embeds
-    its full upstream, so an L-level spec otherwise re-derives the
-    match joins O(L²) times.  Left off for one-level/ad-hoc calls where
-    plan-level exchange reuse already covers it; the orchestrator's
-    long-lived flow passes :meth:`RunContext.cache`, which releases the
-    frames when the run ends."""
+    One linear plan with no union: each step fills only the rows whose
+    global id is still null and passes the others through, so every
+    step's join (and each level's scoring) runs once, and the new-id
+    fill is a final ``coalesce(global_id, new_id_column)``
+    (``uuid()`` when ``new_id_column`` is None)."""
     global_id = spec["global_id_field"]
     if global_id not in incoming.columns:
         incoming = incoming.withColumn(global_id, F.lit(None).cast("string"))
 
-    prematched, to_match = split_by_null(incoming, global_id)
-    if persist_intermediates:
-        to_match = persist_intermediates(to_match)
-    exact_matched, unmatched = exact_match(to_match, primary, spec)
-
-    fuzzy_matched_parts: list[DataFrame] = []
+    out = _exact_step(incoming, primary, spec)
     for level in spec.get("levels", []):
-        if persist_intermediates:
-            unmatched = persist_intermediates(unmatched)
-        matched, unmatched = fuzzy_match_level(unmatched, primary, level, spec)
-        fuzzy_matched_parts.append(matched)
-
-    filled_new = unmatched.withColumn(
-        global_id, new_id_column if new_id_column is not None else F.expr("uuid()")
-    )
-    out = prematched
-    for part in [exact_matched, *fuzzy_matched_parts, filled_new]:
-        out = out.unionByName(part)
-    return out
+        out = _fuzzy_level_step(out, primary, level, spec)
+    new_id = new_id_column if new_id_column is not None else F.expr("uuid()")
+    return out.withColumn(global_id, F.coalesce(F.col(global_id), new_id))
 
 
 def merge_into_delta(
@@ -292,37 +311,37 @@ def merge_into_primary(
     route through the jar-less SQL front-end
     (:mod:`..sources.lakehouse_sql`) and commit the same one-snapshot
     MERGE the reference's catalog would."""
-    import re as _re
-
-    if _re.match(r"^(delta|iceberg)\.`", primary_table.strip(), _re.I):
-        from ..sources.lakehouse_sql import lakehouse_sql
-
-        matched.createOrReplaceTempView("__em_incoming")
-        lakehouse_sql(
-            spark,
-            f"MERGE INTO {primary_table} t USING __em_incoming s "
-            f"ON t.{global_id} = s.{global_id} "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *",
-        )
-        return
+    view = f"__em_incoming_{uuid.uuid4().hex}"
+    merge = (
+        f"MERGE INTO {primary_table} t USING {view} s "
+        f"ON t.{global_id} = s.{global_id} "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    # a per-call view name, dropped on every exit: concurrent upserts
+    # never share a source, and no load's match plan outlives its MERGE
+    matched.createOrReplaceTempView(view)
     try:
-        matched.createOrReplaceTempView("__em_incoming")
-        spark.sql(
-            f"MERGE INTO {primary_table} t USING __em_incoming s ON t.{global_id} = s.{global_id} "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-    except Exception as exc:
-        # Fall back ONLY when the catalog can't run MERGE (plain parquet
-        # tables).  A genuine MERGE failure on a Delta/Iceberg table must
-        # surface — silently rewriting a transactional table as parquet
-        # would destroy its history.
-        message = str(exc)
-        if not ("MERGE" in message or "not supported" in message.lower()):
-            raise
-        current = spark.table(primary_table)
-        keep = current.join(
-            matched.select(global_id).distinct(), on=global_id, how="left_anti"
-        )
-        merged = keep.unionByName(matched, allowMissingColumns=True).localCheckpoint()
-        merged.write.mode("overwrite").format("parquet").saveAsTable(primary_table)
+        if re.match(r"^(delta|iceberg)\.`", primary_table.strip(), re.I):
+            from ..sources.lakehouse_sql import lakehouse_sql
+
+            lakehouse_sql(spark, merge)
+            return
+        try:
+            spark.sql(merge)
+        except Exception as exc:
+            # Fall back ONLY when the catalog can't run MERGE (plain parquet
+            # tables).  A genuine MERGE failure on a Delta/Iceberg table must
+            # surface — silently rewriting a transactional table as parquet
+            # would destroy its history.
+            message = str(exc)
+            if not ("MERGE" in message or "not supported" in message.lower()):
+                raise
+            current = spark.table(primary_table)
+            keep = current.join(
+                matched.select(global_id).distinct(), on=global_id, how="left_anti"
+            )
+            merged = keep.unionByName(matched, allowMissingColumns=True).localCheckpoint()
+            merged.write.mode("overwrite").format("parquet").saveAsTable(primary_table)
+    finally:
+        spark.catalog.dropTempView(view)

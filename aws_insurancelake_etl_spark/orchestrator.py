@@ -140,10 +140,7 @@ def run_pipeline(
                             if table_format == "delta"
                             else iceberg_lite.read_iceberg(spark, ppath)
                         )
-                        matched = entity_match(
-                            consume.df, primary, entitymatch_spec,
-                            persist_intermediates=ctx.cache,
-                        )
+                        matched = entity_match(consume.df, primary, entitymatch_spec)
                         merge_into_primary(
                             spark, matched,
                             f"{table_format}.`{ppath}`", gid,
@@ -168,8 +165,7 @@ def run_pipeline(
                     primary_table = f"{database}_consume.{primary_name}"
                     if spark.catalog.tableExists(primary_table):
                         primary = spark.table(primary_table)
-                        matched = entity_match(consume.df, primary, entitymatch_spec,
-                                               persist_intermediates=ctx.cache)
+                        matched = entity_match(consume.df, primary, entitymatch_spec)
                         merge_into_primary(
                             spark, matched, primary_table, gid
                         )

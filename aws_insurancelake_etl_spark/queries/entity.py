@@ -271,9 +271,10 @@ def em_full_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``entity_match`` operator: prematched pass-through → exact
     (pk, source-system) match → one blocked fuzzy level (levenshtein
     comparator, threshold-gated, best-match window, gid tie-break) →
-    deterministic new-id fill → unionByName of the four streams.  The
-    oracle restates all four streams in SQL; ids are md5-derived instead
-    of uuid() so both engines agree."""
+    deterministic new-id fill, built as one linear plan with no union
+    (7 Spark jobs at sf0.01).  The oracle restates the four streams in
+    SQL and unions them; ids are md5-derived instead of uuid() so both
+    engines agree."""
     from ..operators.entitymatch import entity_match
 
     cust = t(spark, sf_dir, "customer")

@@ -3589,19 +3589,19 @@ def merge_delta(
     # when they landed) — MERGE must honor the same writer contracts
     # as write_delta
     _snap0 = snapshot(path)
-    source, delete_keys, key_bounds = merge_prologue(
+    with merge_prologue(
         _apply_generated(source, _snap0.schema), delete_keys, keys,
         DeltaLiteError, "; a target row may match at most one source row",
-    )
-    _enforce_constraints(source, _snap0.configuration)
-    return retry_on_conflict(
-        lambda attempt: _merge_once(
-            spark, source, path, keys, attempt, key_bounds,
-            use_deletion_vectors=use_deletion_vectors,
-            delete_keys=delete_keys,
-        ),
-        ConcurrentWriteError, max_retries,
-    )
+    ) as (source, delete_keys, key_bounds):
+        _enforce_constraints(source, _snap0.configuration)
+        return retry_on_conflict(
+            lambda attempt: _merge_once(
+                spark, source, path, keys, attempt, key_bounds,
+                use_deletion_vectors=use_deletion_vectors,
+                delete_keys=delete_keys,
+            ),
+            ConcurrentWriteError, max_retries,
+        )
 
 
 def _merge_once(

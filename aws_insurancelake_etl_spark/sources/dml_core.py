@@ -10,8 +10,8 @@ against the current snapshot and re-execute it whenever another writer
 wins the commit race.  Nothing here reads a Delta log or an Iceberg
 manifest; each format keeps its snapshot decoding and commit encoding.
 
-- :func:`merge_prologue`: source / delete-key checkpoint, duplicate-key
-  check and first-key bounds;
+- :func:`merge_prologue`: source / delete-key checkpoint (freed when
+  the merge ends), duplicate-key check and first-key bounds;
 - :func:`retry_on_conflict`: the optimistic-concurrency attempt loop,
   and :func:`discard_files` for what a lost attempt staged;
 - :func:`may_overlap`: the file-statistics range test behind file
@@ -23,6 +23,8 @@ manifest; each format keeps its snapshot decoding and commit encoding.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,11 +91,14 @@ def may_overlap(fmin, fmax, lo, hi) -> bool:
         return True
 
 
+@contextmanager
 def merge_prologue(
     source: DataFrame, delete_keys: DataFrame | None, keys: list,
     error_cls: type, dup_hint: str = "",
-) -> tuple[DataFrame, DataFrame | None, tuple]:
-    """Materialize the MERGE inputs and check the source once.
+) -> Iterator[tuple[DataFrame, DataFrame | None, tuple]]:
+    """Materialize the MERGE inputs and check the source once; a context
+    manager around the merge that frees the materialized blocks when it
+    exits, so no merge leaves its source in executor storage.
 
     The source plan is re-used by every downstream pass (duplicate
     check, key bounds, touched-file search, survivor rewrite or
@@ -113,37 +118,42 @@ def merge_prologue(
     Spark's ordering (NaN sorts above every number in Spark, UTF-8
     binary string order) and mis-shapes the skip range.
 
-    Returns ``(source, delete_keys, (lo, hi))``; raises ``error_cls``
+    Yields ``(source, delete_keys, (lo, hi))``; raises ``error_cls``
     naming a duplicate key (``dup_hint`` is appended to the message)."""
     source = source.localCheckpoint(eager=True)
     if delete_keys is not None:
         delete_keys = delete_keys.localCheckpoint(eager=True)
-    key0 = keys[0]
-    agg = source.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.count_distinct(F.struct(*keys)).alias("__nd"),
-        F.min(key0).alias("__lo"),
-        F.max(key0).alias("__hi"),
-    ).collect()[0]
-    if agg["__n"] != agg["__nd"]:
-        dup = (
-            source.groupBy(*keys).count().where(F.col("count") > 1)
-            .limit(1).collect()
-        )
-        raise error_cls(
-            f"MERGE source has duplicate key "
-            f"{tuple(dup[0][k] for k in keys)}{dup_hint}"
-        )
-    key_bounds = (agg["__lo"], agg["__hi"])
-    if delete_keys is not None:
-        db = (
-            source.select(F.col(key0).alias("__k"))
-            .unionByName(delete_keys.select(F.col(key0).alias("__k")))
-            .agg(F.min("__k").alias("lo"), F.max("__k").alias("hi"))
-            .collect()[0]
-        )
-        key_bounds = (db["lo"], db["hi"])
-    return source, delete_keys, key_bounds
+    try:
+        key0 = keys[0]
+        agg = source.agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.count_distinct(F.struct(*keys)).alias("__nd"),
+            F.min(key0).alias("__lo"),
+            F.max(key0).alias("__hi"),
+        ).collect()[0]
+        if agg["__n"] != agg["__nd"]:
+            dup = (
+                source.groupBy(*keys).count().where(F.col("count") > 1)
+                .limit(1).collect()
+            )
+            raise error_cls(
+                f"MERGE source has duplicate key "
+                f"{tuple(dup[0][k] for k in keys)}{dup_hint}"
+            )
+        key_bounds = (agg["__lo"], agg["__hi"])
+        if delete_keys is not None:
+            db = (
+                source.select(F.col(key0).alias("__k"))
+                .unionByName(delete_keys.select(F.col(key0).alias("__k")))
+                .agg(F.min("__k").alias("lo"), F.max("__k").alias("hi"))
+                .collect()[0]
+            )
+            key_bounds = (db["lo"], db["hi"])
+        yield source, delete_keys, key_bounds
+    finally:
+        for df in (source, delete_keys):
+            if df is not None:
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def discard_files(table_path: str, rels) -> None:

@@ -5143,16 +5143,16 @@ def merge_iceberg(
     tombstoned in the SAME snapshot with no replacement row.  Its key
     set must be disjoint from the source's."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    source, delete_keys, key_bounds = merge_prologue(
+    with merge_prologue(
         source, delete_keys, keys, IcebergLiteError
-    )
-    return retry_on_conflict(
-        lambda attempt: _merge_once_iceberg(
-            spark, source, table_path, keys, attempt, key_bounds,
-            delete_keys=delete_keys,
-        ),
-        ConcurrentIcebergWrite, max_retries,
-    )
+    ) as (source, delete_keys, key_bounds):
+        return retry_on_conflict(
+            lambda attempt: _merge_once_iceberg(
+                spark, source, table_path, keys, attempt, key_bounds,
+                delete_keys=delete_keys,
+            ),
+            ConcurrentIcebergWrite, max_retries,
+        )
 
 
 def _merge_once_iceberg(

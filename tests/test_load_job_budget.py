@@ -15,7 +15,6 @@ import random
 import pytest
 
 from aws_insurancelake_etl_spark.catalog import enforce_schema_evolution
-from aws_insurancelake_etl_spark.operators.entitymatch import entity_match
 from aws_insurancelake_etl_spark.operators.lookup import transform_lookup
 from aws_insurancelake_etl_spark.orchestrator import run_pipeline
 from aws_insurancelake_etl_spark.plans.writer import quarantine_writer
@@ -173,31 +172,64 @@ def test_loads_release_their_cached_frames(spark, tmp_path):
     assert len(persisted()) <= after_first
 
 
-def test_entity_match_frames_are_released_with_the_run(spark, ctx):
-    """The orchestrator's entity match caches through the run's context
-    (to_match, then the unmatched frame of each level); releasing the
-    context unpersists them."""
+@pytest.fixture(scope="module", params=["iceberg", "delta"])
+def upsert_load(request, spark, tmp_path_factory):
+    """Seed a lakehouse primary with one drop, then upsert a second drop
+    into it (entity match + MERGE); return (persistent RDD ids before the
+    upsert load, after it, temp views after it)."""
+    from aws_insurancelake_etl_spark.sources.lakehouse_sql import unregister_table
+
+    fmt = request.param
+    root = tmp_path_factory.mktemp(f"upsert-{fmt}")
+    database = f"emupsert{fmt}"
+    config_dir = root / "config"
+    config_dir.mkdir()
+    (config_dir / f"{database}-cust.json").write_text(
+        json.dumps({"input_spec": {"csv": {"header": True}}, "transform_spec": {}}))
+    (config_dir / f"spark-{database}-cust.sql").write_text(
+        "SELECT custid, src, name FROM {database}.{table} WHERE day = '{day}'")
     spec = {
+        "primary_entity_table": "cust_primary",
         "global_id_field": "gid",
-        "exact_match_fields": {"source_primary_key": "k", "source_system_key": "src"},
-        "levels": [{"id": "1", "blocks": ["name[:1]"], "threshold": 0.85,
+        "exact_match_fields": {"source_primary_key": "custid", "source_system_key": "src"},
+        "levels": [{"blocks": ["name[:1]"], "threshold": 0.85,
                     "fields": [{"fieldname": "name", "type": "string", "weight": 1.0,
                                 "method": "jarowinkler", "threshold": 0.85}]}],
     }
-    cols = "k string, src string, name string, gid string"
-    primary = spark.createDataFrame([("1", "a", "ann", "g1")], cols)
-    incoming = spark.createDataFrame([("1", "a", "ann", None), ("2", "a", "anne", None)], cols)
-    frames = []
+    landing = root / "landing"
 
-    def persist(df):
-        frames.append(ctx.cache(df))
-        return frames[-1]
+    def load(day, text):
+        drop_dir = landing / database / "cust" / "2024" / "03" / day
+        drop_dir.mkdir(parents=True)
+        (drop_dir / "cust.csv").write_text(text)
+        run_pipeline(spark, str(drop_dir / "cust.csv"), landing_root=str(landing),
+                     config_dir=str(config_dir), entitymatch_spec=spec, table_format=fmt)
 
-    matched = entity_match(incoming, primary, spec, persist_intermediates=persist)
-    assert sorted(r["gid"] == "g1" for r in matched.collect()) == [True, True]
-    assert len(frames) == 2 and all(df.is_cached for df in frames)
-    ctx.release_cached()
-    assert not any(df.is_cached for df in frames)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    try:
+        load("01", "CustId,Src,Name\n1,a,ann\n2,a,bob\n")
+        before = set(persisted().keys())
+        load("02", "CustId,Src,Name\n1,a,ann\n3,b,bobby\n4,b,zed\n")
+        after = set(persisted().keys())
+        views = [t.name for t in spark.catalog.listTables() if t.isTemporary]
+    finally:
+        unregister_table(f"{database}.cust")
+        unregister_table(f"{database}_consume.cust")
+    return before, after, views
+
+
+def test_upsert_load_leaves_persisted_rdds_as_it_found_them(upsert_load):
+    """Nothing an upsert load caches or checkpoints (the drop's read, the
+    transformed and consume frames, the MERGE source) outlives it.  RDDs
+    that earlier tests in the session left persisted may be cleaned up by
+    the garbage collector while the load runs, so only additions count."""
+    before, after, _ = upsert_load
+    assert after - before == set()
+
+
+def test_upsert_load_leaves_no_merge_source_view(upsert_load):
+    _, _, views = upsert_load
+    assert not [v for v in views if v.startswith("__em_incoming")], views
 
 
 def test_redropped_file_loads_its_new_content(spark, tmp_path):
