@@ -3544,11 +3544,7 @@ def add_deletion_vector(
         },
         delta_lite._add_json(_dc_replace(add, deletion_vector=dv)),
     ]
-    version = snap.version + 1
-    if not delta_lite._try_commit(
-        delta_lite._log_dir(table_path), version, actions
-    ):
-        raise RuntimeError(f"fixture commit {version} lost a race")
+    delta_lite._commit(table_path, snap.version + 1, actions)
 
 
 def build_column_mapped_table(
@@ -3616,8 +3612,7 @@ def build_column_mapped_table(
         },
     ]
     actions += [delta_lite._add_json(a) for a in adds]
-    if not delta_lite._try_commit(delta_lite._log_dir(table_path), 0, actions):
-        raise RuntimeError("fixture commit 0 lost a race")
+    delta_lite._commit(table_path, 0, actions)
 
 
 def build_nested_mapped_table(spark, df, table_path: str) -> dict:
@@ -3718,8 +3713,7 @@ def build_nested_mapped_table(spark, df, table_path: str) -> dict:
         },
     ]
     actions += [delta_lite._add_json(a) for a in adds]
-    if not delta_lite._try_commit(delta_lite._log_dir(table_path), 0, actions):
-        raise RuntimeError("fixture commit 0 lost a race")
+    delta_lite._commit(table_path, 0, actions)
     return {f.name: pn(f.name) for f in df.schema.fields}
 
 
@@ -4397,8 +4391,7 @@ def src_delta_row_tracking_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         },
     ]
-    if not delta_lite._try_commit(delta_lite._log_dir(tbl), 0, actions):
-        raise RuntimeError("fixture commit 0 lost a race")
+    delta_lite._commit(tbl, 0, actions)
     if n1 < 10 or n2 < 10:
         raise RuntimeError(f"fixture too small: {n1}/{n2}")
     return delta_lite.read_delta(spark, tbl, row_tracking=True)
@@ -4750,8 +4743,7 @@ def src_delta_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         },
     ] + [delta_lite._add_json(a) for a in adds]
-    if not delta_lite._try_commit(delta_lite._log_dir(tbl), 1, actions):
-        raise RuntimeError("widening fixture commit lost a race")
+    delta_lite._commit(tbl, 1, actions)
     out = delta_lite.read_delta(spark, tbl)
     if [f.dataType.simpleString() for f in out.schema.fields] != [
         "bigint", "bigint",

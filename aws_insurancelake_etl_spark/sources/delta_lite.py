@@ -18,9 +18,15 @@ with the protocol's own commit mechanics rather than a parquet rewrite:
   ``partitionValues`` (pruned files are never opened — at 100 TB the
   log IS the index) and **time travel** via ``version=``.
 - **Writers.**  ``append`` / ``overwrite`` with optimistic-concurrency
-  atomic commits (``O_EXCL`` create of the next ``<v>.json`` — losers
-  re-read the log and retry), data files written BY SPARK (distributed;
-  the driver only moves/renames and writes the commit record).
+  atomic commits (``O_EXCL`` create of the next ``<v>.json`` — losing
+  appends re-validate against the log and retry), data files written
+  BY SPARK (distributed; the driver only moves/renames and writes the
+  commit record).
+- **One commit exit.**  Every writer, DML and DDL commit goes through
+  :func:`_commit`: it claims the version, checkpoints when the version
+  lands on :data:`CHECKPOINT_INTERVAL`, and on a lost race deletes the
+  data, CDC and DV files the commit staged (:func:`_staged`) before
+  raising :class:`ConcurrentWriteError`.
 - **Copy-on-write MERGE** (``WHEN MATCHED UPDATE SET * / WHEN NOT
   MATCHED INSERT *``): a semi-join against the broadcast source keys
   identifies the data files that contain matches; ONLY those files are
@@ -45,9 +51,10 @@ per-partition literal unions.
 
 Row-level DML shared with ``iceberg_lite`` lives in :mod:`.dml_core`:
 the MERGE prologue (source checkpoint, duplicate-key check, first-key
-bounds computed in Spark), the conflict-retry loop, the file-statistics
-range test (:func:`~.dml_core.may_overlap`) and the O(files) metadata
-frame builder.  This module keeps what is Delta's own: log replay, the
+bounds computed in Spark), the MERGE key sets and their join hint, the
+conflict-retry loop, staged-file discard, the file-statistics range
+test (:func:`~.dml_core.may_overlap`) and the O(files) metadata frame
+builder.  This module keeps what is Delta's own: log replay, the
 touched-file search over ``add`` stats and the commit encoding.
 """
 
@@ -75,7 +82,8 @@ from pyspark.sql.types import (
 )
 
 from .dml_core import (
-    discard_files, may_overlap, merge_prologue, meta_df, retry_on_conflict,
+    discard_files, may_overlap, merge_key_sets, merge_prologue, meta_df,
+    retry_on_conflict,
 )
 
 CHECKPOINT_INTERVAL = 10
@@ -334,6 +342,12 @@ def _read_checkpoint(cp_path: str, state: dict) -> None:
                     payload.get("configuration"), list
                 ):
                     payload["configuration"] = dict(payload["configuration"])
+                if kind == "protocol":
+                    # the checkpoint schema's absent feature lists read
+                    # back as nulls; the JSON replay never has them
+                    payload = {
+                        k: v for k, v in payload.items() if v is not None
+                    }
                 _apply_action(state, {kind: payload})
                 return
         sidecar = row.get("sidecar")
@@ -1463,14 +1477,6 @@ def _stage_data_files(df: DataFrame, table_path: str, partition_by) -> list:
         shutil.rmtree(staging_root, ignore_errors=True)
 
 
-def _discard_staged(table_path: str, adds: list) -> None:
-    """Delete data files that were moved into the table dir for a commit
-    that then LOST its race: they are referenced by no add action, so
-    vacuum (which walks remove tombstones) could never reclaim them
-    (review finding r6)."""
-    discard_files(table_path, [a.path for a in adds])
-
-
 def _stage_from(df, table_path, partition_by, staging_root) -> list:
     out = os.path.join(staging_root, "out")
     writer = df.write.mode("overwrite")
@@ -1993,6 +1999,42 @@ def _maybe_checkpoint(path: str, version: int) -> None:
         _write_checkpoint(path, version)
 
 
+def _commit(
+    path: str, version: int, actions: list, conf=None, staged=()
+) -> int:
+    """The one Delta commit exit: claim ``<version>.json`` for
+    ``actions`` (:func:`_try_commit`) and checkpoint when the version
+    lands on :data:`CHECKPOINT_INTERVAL`.  Losing the race deletes the
+    ``staged`` files (table-relative data, CDC and DV paths this commit
+    wrote, see :func:`_staged`) — no add action will ever reference
+    them — and raises :class:`ConcurrentWriteError`.  Returns
+    ``version``."""
+    if not _try_commit(_log_dir(path), version, actions, conf):
+        discard_files(path, staged)
+        raise ConcurrentWriteError(
+            f"version {version} of {path} was committed concurrently; "
+            "re-run against the new snapshot"
+        )
+    _maybe_checkpoint(path, version)
+    return version
+
+
+def _staged(adds=(), cdc_actions=(), descriptors=()) -> list:
+    """Table-relative paths of the files one commit staged: its new data
+    files (``AddFile``), change-data files (``cdc`` actions) and
+    deletion-vector sidecars (:func:`_stage_dvs` descriptors)."""
+    from .roaring import z85_decode
+
+    return (
+        [a.path for a in adds]
+        + [c["cdc"]["path"] for c in cdc_actions]
+        + [
+            f"deletion_vector_{uuid.UUID(bytes=z85_decode(r['dv_path']))}.bin"
+            for r in descriptors
+        ]
+    )
+
+
 def _identity_meta(schema: StructType) -> dict:
     """{name: {"start", "step", "hwm", "allow"}} for fields carrying
     §Identity Columns metadata."""
@@ -2121,13 +2163,7 @@ def add_check_constraint(
             }
         },
     ]
-    version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, conf):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "add_check_constraint"
-        )
-    return version
+    return _commit(path, snap.version + 1, actions, conf)
 
 
 def drop_check_constraint(path: str, name: str) -> int:
@@ -2158,13 +2194,7 @@ def drop_check_constraint(path: str, name: str) -> int:
             }
         },
     ]
-    version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, conf):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "drop_check_constraint"
-        )
-    return version
+    return _commit(path, snap.version + 1, actions, conf)
 
 
 def _expr_references(expr: str, column: str) -> bool:
@@ -2282,12 +2312,7 @@ def _commit_schema_change(
             }
         },
     ]
-    version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run"
-        )
-    return version
+    return _commit(path, snap.version + 1, actions, snap.configuration)
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -2469,13 +2494,7 @@ def enable_column_mapping(path: str) -> int:
             }
         },
     ]
-    version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, conf):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "enable_column_mapping"
-        )
-    return version
+    return _commit(path, snap.version + 1, actions, conf)
 
 
 #: table properties whose value changes carry protocol/layout
@@ -2536,13 +2555,7 @@ def set_delta_properties(path: str, properties: dict) -> int:
             }
         },
     ]
-    version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, conf):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "set_delta_properties"
-        )
-    return version
+    return _commit(path, snap.version + 1, actions, conf)
 
 
 #: PROTOCOL.md §Type Widening — the stable widenings delta-spark 4.x
@@ -2648,12 +2661,7 @@ def widen_column(path: str, column: str, new_type: str) -> int:
             }
         },
     ]
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "widen_column"
-        )
-    return version
+    return _commit(path, version, actions, snap.configuration)
 
 
 def add_column(path: str, column: str, sql_type: str) -> int:
@@ -2777,12 +2785,7 @@ def add_columns(path: str, columns: list) -> int:
             }
         },
     ]
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "add_columns"
-        )
-    return version
+    return _commit(path, version, actions, snap.configuration)
 
 
 def write_delta(
@@ -2797,7 +2800,8 @@ def write_delta(
     identity_columns: dict | None = None,
 ) -> int:
     """Commit a Spark DataFrame as a delta-lite ``append``/``overwrite``.
-    Returns the committed version.  Appends retry on commit conflicts;
+    Returns the committed version.  An append that loses the commit
+    race re-validates against the winner and retries, at most 3 times;
     overwrite raises ConcurrentWriteError if it loses the race (its
     removes were computed against a stale snapshot).
 
@@ -3368,50 +3372,57 @@ def write_delta(
             }
             for a in existing.files
         ]
-    base = existing.version if existing is not None else -1
-    version = base + 1
+    version = (existing.version if existing is not None else -1) + 1
     rt_actions = _assign_row_ids(
         merged_conf,
         existing.domain_metadata if existing is not None else {},
         adds, version, path,
     )
     actions += removes + [_add_json(a) for a in adds] + rt_actions
-    while not _try_commit(_log_dir(path), version, actions, merged_conf):
-        if mode == "overwrite":
-            _discard_staged(path, adds)
-            raise ConcurrentWriteError(
-                f"version {version} was committed concurrently; "
-                "re-run overwrite against the new snapshot"
-            )
-        if identity_assigned or id_meta_changed or rt_actions:
-            # the minted identity values / row-id blocks were computed
-            # against the LOSER's snapshot — blind retry could collide
-            # with the winner's allocations; the caller re-runs fresh
-            _discard_staged(path, adds)
-            raise ConcurrentWriteError(
-                f"version {version} was committed concurrently while "
-                "assigning identity values or row ids; re-run against "
-                "the new snapshot"
-            )
-        # An append retry must RE-VALIDATE against the winner's state —
-        # blindly re-committing would clobber a concurrent schema or
-        # partitioning change (review finding r6): the staged files'
-        # layout and metaData were computed against the loser's view.
-        current = snapshot(path)
-        if (
-            existing is None
-            or _schema_key(current.schema) != _schema_key(df.schema)
-            or current.partition_columns != partition_by
-        ):
-            _discard_staged(path, adds)
-            raise ConcurrentWriteError(
-                "a concurrent writer changed the table (schema, "
-                "partitioning, or created it first); re-run append "
-                "against the new snapshot"
-            )
-        version = current.version + 1
-    _maybe_checkpoint(path, version)
-    return version
+    staged = _staged(adds)
+    # an overwrite's removes name the loser's snapshot: it never retries
+    max_retries = 0 if mode == "overwrite" else 3
+
+    def attempt(n):
+        """Commit at ``version``; a retry first re-validates against the
+        winner's state and returns why the append cannot land instead."""
+        nonlocal version
+        if n:
+            if identity_assigned or id_meta_changed or rt_actions:
+                # the minted identity values / row-id blocks were
+                # computed against the LOSER's snapshot — a retry could
+                # collide with the winner's allocations
+                return (
+                    f"version {version} was committed concurrently while "
+                    "assigning identity values or row ids; re-run against "
+                    "the new snapshot"
+                )
+            # blindly re-committing would clobber a concurrent schema or
+            # partitioning change: the staged files' layout and metaData
+            # were computed against the loser's view
+            current = snapshot(path)
+            if (
+                existing is None
+                or _schema_key(current.schema) != _schema_key(df.schema)
+                or current.partition_columns != partition_by
+            ):
+                return (
+                    "a concurrent writer changed the table (schema, "
+                    "partitioning, or created it first); re-run append "
+                    "against the new snapshot"
+                )
+            version = current.version + 1
+        # the staged files serve every attempt: discard only after the last
+        return _commit(
+            path, version, actions, merged_conf,
+            staged=staged if n == max_retries else (),
+        )
+
+    committed = retry_on_conflict(attempt, ConcurrentWriteError, max_retries)
+    if isinstance(committed, str):  # the re-validation refused a retry
+        discard_files(path, staged)
+        raise ConcurrentWriteError(committed)
+    return committed
 
 
 #: writer protocol features delta_lite can honor when committing to a
@@ -3621,24 +3632,8 @@ def _merge_once(
     schema_cols = [f.name for f in snap.schema.fields]
     if [f.name for f in source.schema.fields] != schema_cols:
         source = source.select(*schema_cols)  # raises if a column is missing
-    src_keys = source.select(*keys).distinct()
-    # the TOMBSTONE key set: matched rows replaced by the source, plus
-    # (general MERGE's delete clause) matched rows removed outright
-    tomb_keys = (
-        src_keys.unionByName(delete_keys.select(*keys)).distinct()
-        if delete_keys is not None
-        else src_keys
-    )
-    # The plain-MERGE tombstone set is source-sized — broadcast it.  A
-    # delete_keys set (the SQL front-end's DELETE / BY SOURCE clauses)
-    # can be TARGET-sized, so leave the strategy to AQE, which still
-    # broadcasts when the runtime size allows.
-    tomb_hint = (
-        F.broadcast(tomb_keys) if delete_keys is None else tomb_keys
-    )
-    # same rule for every key-set derived from the (possibly
-    # BY-SOURCE-augmented, target-sized) merge source
-    src_hint = F.broadcast(src_keys) if delete_keys is None else src_keys
+    src_keys, tomb_keys, hint = merge_key_sets(source, delete_keys, keys)
+    tomb_hint, src_hint = hint(tomb_keys), hint(src_keys)
     # Partition pruning for the touched-file search: when the partition
     # columns are part of the merge key, a match can only live in a
     # partition the SOURCE actually carries — so the scan for touched
@@ -3806,10 +3801,7 @@ def _merge_once(
                 .join(src_hint, keys, "left_semi")
             )
             matched_keys = matched_target.select(*keys).distinct()
-            mk_hint = (
-                F.broadcast(matched_keys) if delete_keys is None
-                else matched_keys
-            )
+            mk_hint = hint(matched_keys)
             changes = (
                 matched_target.withColumn(
                     "_change_type", F.lit("update_preimage")
@@ -3901,14 +3893,10 @@ def _merge_once(
     )
     actions += [_add_json(a) for a in adds] + rt_actions
     actions += cdc_actions
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        _discard_staged(path, adds)
-        _discard_cdc(path, cdc_actions)
-        _discard_dvs(path, descriptors)
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(
+        path, version, actions, snap.configuration,
+        staged=_staged(adds, cdc_actions, descriptors),
+    )
     return {
         "version": version,
         "files_rewritten": 0 if dv else len(touched_rel),
@@ -3949,12 +3937,7 @@ def truncate_delta(spark: SparkSession, path: str) -> dict:
         for a in snap.files
     ]
     version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "truncate_delta"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(path, version, actions, snap.configuration)
     return {"version": version, "files_removed": len(snap.files)}
 
 
@@ -4086,13 +4069,7 @@ def set_clustering(path: str, columns) -> int:
             }
         },
     ]
-    version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "set_clustering"
-        )
-    return version
+    return _commit(path, snap.version + 1, actions, snap.configuration)
 
 
 def clustering_columns(snap: Snapshot) -> list:
@@ -4208,12 +4185,10 @@ def optimize(
         snap.configuration, snap.domain_metadata, adds, version, path
     )
     actions += [_add_json(a) for a in adds] + rt_actions
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        _discard_staged(path, adds)
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run OPTIMIZE"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(
+        path, version, actions, snap.configuration,
+        staged=_staged(adds),
+    )
     return {
         "version": version,
         "files_before": len(snap.files),
@@ -4344,13 +4319,10 @@ def reorg_purge(spark: SparkSession, path: str) -> dict:
         snap.configuration, snap.domain_metadata, adds, version, path
     )
     actions += [_add_json(a) for a in adds] + rt_actions
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        _discard_staged(path, adds)
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run "
-            "reorg_purge"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(
+        path, version, actions, snap.configuration,
+        staged=_staged(adds),
+    )
     return {
         "version": version,
         "files_purged": len(selected),
@@ -4466,11 +4438,7 @@ def _delete_partition_metadata_only(
         for f in removed
     ]
     version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run DELETE"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(path, version, actions, snap.configuration)
     return {
         "version": version,
         "rows_deleted": n_deleted,
@@ -4615,13 +4583,10 @@ def delete_delta(
     )
     actions += [_add_json(a) for a in adds] + rt_actions
     actions += cdc_actions
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        _discard_staged(path, adds)
-        _discard_cdc(path, cdc_actions)
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run DELETE"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(
+        path, version, actions, snap.configuration,
+        staged=_staged(adds, cdc_actions),
+    )
     return {
         "version": version,
         "rows_deleted": n_deleted,
@@ -4804,15 +4769,10 @@ def update_delta(
     )
     actions += [_add_json(a) for a in adds] + rt_actions
     actions += cdc_actions
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        # the rewrite was computed against a stale snapshot
-        _discard_staged(path, adds)
-        _discard_cdc(path, cdc_actions)
-        _discard_dvs(path, descriptors)
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run UPDATE"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(
+        path, version, actions, snap.configuration,
+        staged=_staged(adds, cdc_actions, descriptors),
+    )
     return {
         "version": version,
         "rows_updated": n_updated,
@@ -4834,8 +4794,7 @@ def _stage_dvs(
     descriptor rows ``[{uri, dv_path (z85 uuid), size, cardinality,
     new_rows}]`` — O(touched files) driver state.  Shared by the DV
     shapes of DELETE, MERGE, and UPDATE; nothing is committed here
-    (:func:`_discard_dvs` reclaims the sidecars on a lost commit
-    race)."""
+    (a lost :func:`_commit` discards the sidecars, see :func:`_staged`)."""
     # O(files) driver state: existing DV descriptor JSON per scan URI
     old_dv_by_uri = {}
     for f in snap.files:
@@ -4899,17 +4858,6 @@ def _stage_dvs(
         )
         .collect()
     )
-
-
-def _discard_dvs(path: str, descriptors: list) -> None:
-    """Reclaim staged DV sidecars referenced by no committed add action
-    (lost commit race), as ``_discard_staged`` does for data files."""
-    from .roaring import z85_decode
-
-    discard_files(path, [
-        f"deletion_vector_{uuid.UUID(bytes=z85_decode(r['dv_path']))}.bin"
-        for r in descriptors
-    ])
 
 
 def _dv_readds(snap: Snapshot, path: str, descriptors: list) -> list:
@@ -5010,13 +4958,10 @@ def _delete_with_dvs(
     actions += _dv_readds(snap, path, descriptors)
     actions += cdc_actions
     version = snap.version + 1
-    if not _try_commit(_log_dir(path), version, actions, snap.configuration):
-        _discard_cdc(path, cdc_actions)
-        _discard_dvs(path, descriptors)
-        raise ConcurrentWriteError(
-            f"version {version} was committed concurrently; re-run DELETE"
-        )
-    _maybe_checkpoint(path, version)
+    _commit(
+        path, version, actions, snap.configuration,
+        staged=_staged((), cdc_actions, descriptors),
+    )
     return {
         "version": version,
         "rows_deleted": rows_deleted,
@@ -5067,10 +5012,6 @@ def _stage_cdc_files(df: DataFrame, table_path: str) -> list:
         return cdc
     finally:
         shutil.rmtree(staging_root, ignore_errors=True)
-
-
-def _discard_cdc(table_path: str, cdc_actions: list) -> None:
-    discard_files(table_path, [a["cdc"]["path"] for a in cdc_actions])
 
 
 def read_change_feed(
@@ -5461,10 +5402,7 @@ def convert_to_delta(
         },
     ]
     actions += [_add_json(a) for a in adds]
-    if not _try_commit(_log_dir(path), 0, actions):
-        raise ConcurrentWriteError(
-            f"version 0 of {path} was committed concurrently"
-        )
+    _commit(path, 0, actions)
     return {"version": 0, "files": len(adds)}
 
 
@@ -5607,10 +5545,7 @@ def convert_iceberg_to_delta(spark: SparkSession, path: str) -> dict:
         },
     ]
     actions += [_add_json(a) for a in adds]
-    if not _try_commit(_log_dir(path), 0, actions):
-        raise ConcurrentWriteError(
-            f"version 0 of {path} was committed concurrently"
-        )
+    _commit(path, 0, actions)
     return {
         "version": 0,
         "files": len(adds),
@@ -5701,10 +5636,7 @@ def clone_delta(
             )
         )
     os.makedirs(dst_path, exist_ok=True)
-    if not _try_commit(_log_dir(dst_path), 0, actions, snap.configuration):
-        raise ConcurrentWriteError(
-            f"version 0 of {dst_path} was committed concurrently"
-        )
+    _commit(dst_path, 0, actions, snap.configuration)
     return {
         "version": 0,
         "files": len(snap.files),
@@ -5770,13 +5702,7 @@ def restore(path: str, version: int) -> dict:
         _add_json(tgt_by_path[p]) for p in sorted(set(tgt_by_path) - cur_paths)
     ]
     new_version = current.version + 1
-    if not _try_commit(
-        _log_dir(path), new_version, actions, current.configuration
-    ):
-        raise ConcurrentWriteError(
-            f"version {new_version} was committed concurrently; re-run RESTORE"
-        )
-    _maybe_checkpoint(path, new_version)
+    _commit(path, new_version, actions, current.configuration)
     return {
         "version": new_version,
         "restored_to": version,

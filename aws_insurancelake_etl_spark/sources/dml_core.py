@@ -10,8 +10,17 @@ against the current snapshot and re-execute it whenever another writer
 wins the commit race.  Nothing here reads a Delta log or an Iceberg
 manifest; each format keeps its snapshot decoding and commit encoding.
 
+Each format has exactly one commit exit, and every commit of that
+format goes through it: ``delta_lite._commit`` (claims ``<v>.json``,
+checkpoints on the interval) and ``iceberg_lite._commit_metadata``
+(claims ``metadata/v<n>.metadata.json``).  A lost claim deletes what
+the commit staged through :func:`discard_files` and raises the
+format's conflict error, which :func:`retry_on_conflict` re-executes.
+
 - :func:`merge_prologue`: source / delete-key checkpoint (freed when
   the merge ends), duplicate-key check and first-key bounds;
+- :func:`merge_key_sets`: the source and tombstone key sets and their
+  join hint;
 - :func:`retry_on_conflict`: the optimistic-concurrency attempt loop,
   and :func:`discard_files` for what a lost attempt staged;
 - :func:`may_overlap`: the file-statistics range test behind file
@@ -154,6 +163,25 @@ def merge_prologue(
         for df in (source, delete_keys):
             if df is not None:
                 df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def merge_key_sets(source: DataFrame, delete_keys: DataFrame | None,
+                   keys: list):
+    """The MERGE's key sets: ``(src_keys, tomb_keys, hint)``.
+
+    ``src_keys`` are the source's distinct keys; ``tomb_keys`` the
+    TOMBSTONE set — target rows replaced by the source plus, with
+    ``delete_keys`` (general MERGE's delete clause), rows removed
+    outright.  ``hint`` is the join strategy for every key set derived
+    from them: a plain MERGE's sets are source-sized, so they broadcast;
+    ``delete_keys`` (the SQL front-end's DELETE / BY SOURCE clauses) can
+    be target-sized, so the strategy is left to AQE, which still
+    broadcasts when the runtime size allows."""
+    src_keys = source.select(*keys).distinct()
+    if delete_keys is None:
+        return src_keys, src_keys, F.broadcast
+    tomb_keys = src_keys.unionByName(delete_keys.select(*keys)).distinct()
+    return src_keys, tomb_keys, lambda df: df
 
 
 def discard_files(table_path: str, rels) -> None:

@@ -41,12 +41,16 @@ O(files) path/sequence mappings are broadcast, never delete rows).
 
 Row-level DML shared with ``delta_lite`` lives in :mod:`.dml_core`:
 the MERGE prologue (source checkpoint, duplicate-key check, first-key
-bounds computed in Spark), the conflict-retry loop, the manifest-bounds
-range test (:func:`~.dml_core.may_overlap`) and the metadata frame /
-literal-map builders.  The writers here stage delete files through one
-stager (:func:`_stage_delete_files`) and commit through one
-commit-or-discard (:func:`_commit_or_discard`), so a commit that loses
-the race never leaves its staged files behind.
+bounds computed in Spark), the MERGE key sets and their join hint, the
+conflict-retry loop, the manifest-bounds range test
+(:func:`~.dml_core.may_overlap`) and the metadata frame / literal-map
+builders.  The writers here stage delete files through one stager
+(:func:`_stage_delete_files`).  Every commit claims its metadata
+version through one exit, :func:`_commit_metadata`, which on a lost
+race deletes the manifests and manifest list the commit wrote and
+raises :class:`ConcurrentIcebergWrite`; :func:`_commit_or_discard`
+also deletes the staged data, delete and DV files.  A commit that
+loses the race leaves no file behind.
 """
 
 from __future__ import annotations
@@ -61,8 +65,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_lite
 from .dml_core import (
-    LIT_MAP_MAX, discard_files, lit_lookup, may_overlap, merge_prologue,
-    meta_df, retry_on_conflict,
+    LIT_MAP_MAX, discard_files, lit_lookup, may_overlap, merge_key_sets,
+    merge_prologue, meta_df, retry_on_conflict,
 )
 from .iceberg_transforms import (
     PartitionField,
@@ -943,12 +947,7 @@ def create_ref(
     refs[name] = {"snapshot-id": int(snapshot_id), "type": ref_type}
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "create_ref"
-        )
+    _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
     return refs[name]
 
 
@@ -964,12 +963,7 @@ def drop_ref(table_path: str, name: str) -> None:
     del refs[name]
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "drop_ref"
-        )
+    _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
 
 
 def fast_forward(
@@ -1020,11 +1014,7 @@ def fast_forward(
     if to == "main":
         new_meta["current-snapshot-id"] = src_head
     version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "fast_forward"
-        )
+    _commit_metadata(table_path, version, new_meta)
     return {"updated": True, "ref": to, "snapshot_id": src_head,
             "previous_snapshot_id": to_head, "version": version}
 
@@ -4066,6 +4056,34 @@ def _try_commit_metadata(table_path: str, version: int, meta: dict) -> bool:
     return True
 
 
+def _commit_metadata(
+    table_path: str, version: int, meta: dict, staged=()
+) -> int:
+    """The one Iceberg commit exit: claim ``metadata/v{version}`` for
+    ``meta`` (:func:`_try_commit_metadata`).  Losing the race deletes
+    the ``staged`` files (table-relative manifests and manifest list
+    this commit wrote; no metadata will ever reference them) and raises
+    :class:`ConcurrentIcebergWrite`.  Returns ``version``."""
+    if not _try_commit_metadata(table_path, version, meta):
+        discard_files(table_path, staged)
+        raise ConcurrentIcebergWrite(
+            f"metadata v{version} of {table_path} was committed "
+            "concurrently; re-run against the new metadata"
+        )
+    return version
+
+
+def _written_metadata(snap_id: int, manifests: list, ml_rel: str) -> list:
+    """Table-relative metadata files a snapshot commit wrote: the
+    manifests ``snap_id`` added (``added_snapshot_id``; carried ones
+    belong to earlier snapshots) and its manifest list."""
+    return [
+        f"metadata/{m[0].rsplit('/', 1)[-1]}"
+        for m in manifests
+        if m[5] == snap_id
+    ] + [ml_rel]
+
+
 def _head_version(table_path: str) -> int:
     """The table's current metadata version: what a snapshot commit
     plans against (``expect_version`` fails fast if the table moved);
@@ -4881,13 +4899,10 @@ def _commit_snapshot(
     refs = dict((meta or {}).get("refs") or {})
     refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
     new_meta["refs"] = refs
-    if not _try_commit_metadata(table_path, snap_id, new_meta):
-        # this attempt's manifests/manifest-list become unreferenced
-        # orphans (uuid names — they can never collide with the winner)
-        raise ConcurrentIcebergWrite(
-            f"metadata v{snap_id} was committed concurrently"
-        )
-    return snap_id
+    return _commit_metadata(
+        table_path, snap_id, new_meta,
+        staged=_written_metadata(snap_id, new_manifests, ml_rel),
+    )
 
 
 def add_files(
@@ -5204,19 +5219,8 @@ def _merge_once_iceberg(
             "appended_files": len(data_entries), **scan,
             "retries": attempt,
         }
-    src_keys = source.select(*keys).distinct()
-    # the TOMBSTONE key set: matched rows replaced by the source, plus
-    # (general MERGE's delete clause) matched rows removed outright
-    tomb_keys = (
-        src_keys.unionByName(delete_keys.select(*keys)).distinct()
-        if delete_keys is not None
-        else src_keys
-    )
-    # source-sized tombstone sets broadcast; a delete_keys set (SQL
-    # DELETE / BY SOURCE clauses) can be target-sized — let AQE decide
-    tomb_hint = (
-        F.broadcast(tomb_keys) if delete_keys is None else tomb_keys
-    )
+    src_keys, tomb_keys, hint = merge_key_sets(source, delete_keys, keys)
+    tomb_hint = hint(tomb_keys)
     files_scanned = len(search_files)
     # Match against LIVE rows — the full reader (metadata schema,
     # position/equality/DV deletes applied), not raw parquet: matching
@@ -5872,13 +5876,7 @@ def set_iceberg_properties(table_path: str, properties: dict) -> int:
             props[k] = str(v)
     new_meta = dict(meta)
     new_meta["properties"] = props
-    version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "set_iceberg_properties"
-        )
-    return version
+    return _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
 
 
 def set_sort_order(table_path: str, order: list) -> dict:
@@ -5946,11 +5944,7 @@ def set_sort_order(table_path: str, order: list) -> dict:
     new_meta["sort-orders"] = orders
     new_meta["default-sort-order-id"] = new_id
     version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "set_sort_order"
-        )
+    _commit_metadata(table_path, version, new_meta)
     return {"order_id": new_id, "version": version}
 
 
@@ -6149,11 +6143,10 @@ def _carry_commit(
     refs = dict(meta.get("refs") or {})
     refs["main"] = {"snapshot-id": snap_id, "type": "branch"}
     new_meta["refs"] = refs
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "rewrite_manifests"
-        )
+    _commit_metadata(
+        table_path, version, new_meta,
+        staged=_written_metadata(snap_id, new_manifests, ml_rel),
+    )
     return {"manifests_before": before, "manifests_after": len(groups),
             "snapshot_id": snap_id, "rewritten": True}
 
@@ -6787,11 +6780,7 @@ def alter_iceberg_schema(
     new_meta["last-column-id"] = max(_last_column_id(meta), next_id)
     new_meta.pop("schema", None)  # the v1 single-schema form is stale now
     version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "alter_iceberg_schema"
-        )
+    _commit_metadata(table_path, version, new_meta)
     return {"schema_id": new_sid, "version": version}
 
 
@@ -6824,12 +6813,7 @@ def upgrade_iceberg_format(table_path: str, to_version: int = 3) -> dict:
     new_meta["format-version"] = to_version
     if "next-row-id" not in new_meta:
         new_meta["next-row-id"] = 0
-    version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "upgrade_iceberg_format"
-        )
+    _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
     return {"format_version": to_version, "upgraded": True}
 
 
@@ -6856,11 +6840,7 @@ def rollback_to_snapshot(table_path: str, snapshot_id) -> dict:
     refs["main"] = {"snapshot-id": int(target), "type": "branch"}
     new_meta["refs"] = refs
     version = _head_version(table_path) + 1
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; re-run "
-            "rollback_to_snapshot"
-        )
+    _commit_metadata(table_path, version, new_meta)
     return {"previous_snapshot_id": prior, "current_snapshot_id": target,
             "version": version}
 
@@ -6986,11 +6966,7 @@ def expire_snapshots(
     version = (_metadata_versions(meta_dir) or [0])[-1] + 1
     new_meta = dict(meta)
     new_meta["snapshots"] = retained
-    if not _try_commit_metadata(table_path, version, new_meta):
-        raise ConcurrentIcebergWrite(
-            f"metadata v{version} was committed concurrently; "
-            "re-run expire_snapshots"
-        )
+    _commit_metadata(table_path, version, new_meta)
     deleted_meta = 0
     if keep_metadata_versions is not None:
         # Iceberg's write.metadata.previous-versions-max: old

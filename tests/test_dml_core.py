@@ -1,10 +1,12 @@
 """dml_core: the row-level DML pieces both table formats share — the
-MERGE prologue's key bounds, the conflict-retry loop and (Iceberg)
-commit-or-discard of staged files — checked through the public
-``delta_lite`` / ``iceberg_lite`` entry points."""
+MERGE prologue's key bounds, the conflict-retry loop and each format's
+one commit exit, which discards what a lost commit staged — checked
+through the public ``delta_lite`` / ``iceberg_lite`` entry points."""
 
+import dataclasses
 import json
 import os
+import shutil
 from urllib.parse import unquote
 
 import pytest
@@ -77,37 +79,160 @@ def test_delete_key_bounds_follow_spark_nan_ordering(spark, tmp_path, fmt):
     ]
 
 
-def test_lost_commit_leaves_no_iceberg_files(spark, tmp_path, monkeypatch):
-    """DELETE, UPDATE and MERGE that lose the commit race discard every
-    file they staged, and the table reads as before."""
+def _lose_next_commit(monkeypatch, fmt):
+    """The next version claim of ``fmt`` loses the race: another writer
+    took the version first.  Later claims are real."""
+    mod, name = (
+        (dl, "_try_commit") if fmt.name == "delta"
+        else (il, "_try_commit_metadata")
+    )
+    real, lost = getattr(mod, name), []
+
+    def claim(*a, **k):
+        if not lost:
+            lost.append(1)
+            return False
+        return real(*a, **k)
+
+    monkeypatch.setattr(mod, name, claim)
+
+
+def _rows(n0, n1):
+    return [Row(k=i, v=f"v{i}") for i in range(n0, n1)]
+
+
+#: one writer family per case: ``(table, setup, op)`` per format.
+#: ``table`` is the Delta configuration or the Iceberg format version
+#: the table is created with; ``setup`` (or None) takes it past its
+#: first commit (deletion vectors, a second manifest); ``op`` is the
+#: writer whose commit loses.  Delta tables carry the change data feed,
+#: so the lost DML also stages CDC files.
+_WRITERS = {
+    "append_row_ids": {
+        "delta": (
+            {"delta.enableRowTracking": "true"}, None,
+            lambda spark, p, df: dl.write_delta(df, p),
+        ),
+        "iceberg": (
+            3, None,
+            lambda spark, p, df: il.write_iceberg(spark, df, p, max_retries=0),
+        ),
+    },
+    "overwrite": {
+        "delta": (
+            {}, None,
+            lambda spark, p, df: dl.write_delta(df, p, mode="overwrite"),
+        ),
+        "iceberg": (
+            2, None, lambda spark, p, df: il.overwrite_iceberg(spark, df, p),
+        ),
+    },
+    "delete": {
+        "delta": ({}, None, lambda spark, p, df: dl.delete_delta(
+            spark, p, "k < 3", use_deletion_vectors=False)),
+        "iceberg": (2, None, lambda spark, p, df: il.delete_iceberg(
+            spark, p, "k < 3")),
+    },
+    "delete_dv": {
+        "delta": ({}, None, lambda spark, p, df: dl.delete_delta(
+            spark, p, "k < 3", use_deletion_vectors=True)),
+        "iceberg": (3, None, lambda spark, p, df: il.delete_iceberg(
+            spark, p, "k < 3")),
+    },
+    "update": {
+        "delta": ({}, None, lambda spark, p, df: dl.update_delta(
+            spark, p, {"v": "'x'"}, "k < 3", use_deletion_vectors=False)),
+        "iceberg": (2, None, lambda spark, p, df: il.update_iceberg(
+            spark, p, {"v": "'x'"}, "k < 3")),
+    },
+    "update_dv": {
+        "delta": ({}, None, lambda spark, p, df: dl.update_delta(
+            spark, p, {"v": "'x'"}, "k < 3", use_deletion_vectors=True)),
+        "iceberg": (3, None, lambda spark, p, df: il.update_iceberg(
+            spark, p, {"v": "'x'"}, "k < 3")),
+    },
+    "compact": {
+        "delta": ({}, None, lambda spark, p, df: dl.optimize(spark, p, 1)),
+        "iceberg": (2, None, lambda spark, p, df: il.rewrite_data_files(
+            spark, p, target_files=1)),
+    },
+    "purge": {
+        # Delta: rewrite the files carrying deletion vectors.  Iceberg:
+        # merge two appends' manifests (metadata only, nothing but the
+        # manifests and manifest list is staged)
+        "delta": (
+            {}, lambda spark, p: dl.delete_delta(
+                spark, p, "k = 7", use_deletion_vectors=True),
+            lambda spark, p, df: dl.reorg_purge(spark, p),
+        ),
+        "iceberg": (
+            2, lambda spark, p: il.write_iceberg(
+                spark, spark.createDataFrame(_rows(20, 22)), p),
+            lambda spark, p, df: il.rewrite_manifests(p),
+        ),
+    },
+    "merge": {
+        "delta": ({}, None, lambda spark, p, df: dl.merge_delta(
+            spark, df, p, ["k"], max_retries=0)),
+        "iceberg": (2, None, lambda spark, p, df: il.merge_iceberg(
+            spark, df, p, ["k"], max_retries=0)),
+    },
+}
+
+
+@pytest.mark.parametrize("family", list(_WRITERS))
+def test_lost_commit_leaves_no_files(spark, tmp_path, monkeypatch, fmt,
+                                     family):
+    """Every writer family that loses its version claim raises the
+    format's conflict, deletes every file it staged (data, delete, CDC,
+    DV, manifests, manifest list) and leaves the table reading as
+    before."""
     path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [Row(k=i, v=f"v{i}") for i in range(8)]
-    ).select("k", "v")
-    il.write_iceberg(spark, base.repartition(2), path)
-    before_rows = sorted(map(tuple, il.read_iceberg(spark, path).collect()))
+    table_opt, setup, op = _WRITERS[family][fmt.name]
+    base = spark.createDataFrame(_rows(0, 8)).repartition(2)
+    if fmt.name == "delta":
+        dl.write_delta(base, path, configuration={
+            "delta.enableChangeDataFeed": "true", **table_opt,
+        })
+    else:
+        il.write_iceberg(spark, base, path, format_version=table_opt)
+    if setup is not None:
+        setup(spark, path)
+    before_rows = sorted(map(tuple, fmt.read(spark, path).collect()))
     before = _tree(path)
-
-    def lose(*_a, **_k):
-        raise il.ConcurrentIcebergWrite("table moved (forced)")
-
-    monkeypatch.setattr(il, "_commit_snapshot", lose)
-    with pytest.raises(il.ConcurrentIcebergWrite):
-        il.delete_iceberg(spark, path, "k < 3")
-    assert _tree(path) == before
-    with pytest.raises(il.ConcurrentIcebergWrite):
-        il.update_iceberg(spark, path, {"v": "'x'"}, "k < 3")
-    assert _tree(path) == before
-    src = spark.createDataFrame(
-        [Row(k=1, v="m1"), Row(k=20, v="m20")]
-    ).select("k", "v")
-    with pytest.raises(il.ConcurrentIcebergWrite):
-        il.merge_iceberg(spark, src, path, ["k"], max_retries=0)
+    _lose_next_commit(monkeypatch, fmt)
+    conflict = (
+        dl.ConcurrentWriteError if fmt.name == "delta"
+        else il.ConcurrentIcebergWrite
+    )
+    with pytest.raises(conflict):
+        op(spark, path, spark.createDataFrame(_rows(1, 2) + _rows(20, 21)))
     assert _tree(path) == before
     monkeypatch.undo()
-    assert sorted(map(tuple, il.read_iceberg(spark, path).collect())) == (
-        before_rows
-    )
+    assert sorted(map(tuple, fmt.read(spark, path).collect())) == before_rows
+
+
+def test_ddl_commit_on_the_interval_writes_its_checkpoint(spark, tmp_path):
+    """A metadata-only commit is a version like any other: landing on a
+    multiple of ``CHECKPOINT_INTERVAL`` writes that checkpoint, and the
+    snapshot read through it equals the one replayed from the JSON log."""
+    path = str(tmp_path / "t")
+    dl.write_delta(_kv(spark, [(1.0, "a")]), path)
+    for i in range(1, dl.CHECKPOINT_INTERVAL):
+        dl.set_delta_properties(path, {f"test.p{i}": str(i)})
+    assert dl.snapshot(path).version == dl.CHECKPOINT_INTERVAL - 1
+    v = dl.set_delta_properties(path, {"test.last": "x"})
+    assert v == dl.CHECKPOINT_INTERVAL
+    log = os.path.join(path, "_delta_log")
+    assert os.path.exists(os.path.join(log, f"{v:020d}.checkpoint.parquet"))
+    replay = str(tmp_path / "replay")
+    os.makedirs(os.path.join(replay, "_delta_log"))
+    for name in os.listdir(log):
+        if name.endswith(".json"):
+            shutil.copy(os.path.join(log, name),
+                        os.path.join(replay, "_delta_log", name))
+    from_json = dataclasses.replace(dl.snapshot(replay), table_path=path)
+    assert dl.snapshot(path) == from_json
 
 
 def test_append_keeps_staged_files_until_its_last_lost_commit(
