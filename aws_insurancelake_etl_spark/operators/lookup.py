@@ -9,32 +9,21 @@ local :class:`~aws_insurancelake_etl_spark.context.LookupStore`; lookup data
 is dimension-sized, so an explicit ``broadcast()`` hint keeps the join a
 broadcast hash join with no shuffle of the fact side at any scale.
 
-Side tables are built on the JVM as a local relation (an Arrow table
-handed to ``createDataFrame``), typed exactly as ``createDataFrame(list)``
-would type them.  A ``createDataFrame(list)`` side table is a Python RDD:
-every broadcast of it starts Python workers, which cost more than the
-join itself at lookup sizes.
+Side tables are built on the JVM as a local relation
+(:func:`~aws_insurancelake_etl_spark.sources.dml_core.meta_df`, the helper
+the table formats build their metadata frames with), typed exactly as
+``createDataFrame(list)`` would type them.  A ``createDataFrame(list)``
+side table is a Python RDD: every broadcast of it starts Python workers,
+which cost more than the join itself at lookup sizes.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..context import RunContext
-
-
-def _side_table(spark: SparkSession, rows: list[tuple], names: list[str]) -> DataFrame:
-    """``rows`` as a local relation with the schema ``createDataFrame(rows,
-    names)`` infers (same key types, so the join coerces keys the same
-    way; empty or all-null columns raise the same errors)."""
-    schema = spark._inferSchemaFromList(rows, names=names)
-    table = pa.Table.from_pylist(
-        [dict(zip(names, row)) for row in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema=schema)
+from ..sources.dml_core import meta_df
 
 
 def transform_lookup(df: DataFrame, spec: list[dict], ctx: RunContext) -> DataFrame:
@@ -43,8 +32,8 @@ def transform_lookup(df: DataFrame, spec: list[dict], ctx: RunContext) -> DataFr
     for entry in spec:
         mapping = ctx.lookups.get_values(entry["lookup"])
         source_field = entry.get("source", entry["field"])
-        lookup_df = _side_table(
-            ctx.spark, list(mapping.items()), ["orig_value", "new_value"]
+        lookup_df = meta_df(
+            ctx.spark, list(mapping.items()), names=["orig_value", "new_value"]
         )
         df = df.join(
             F.broadcast(lookup_df), df[source_field] == lookup_df["orig_value"], "left"
@@ -66,7 +55,7 @@ def transform_multilookup(df: DataFrame, spec: list[dict], ctx: RunContext) -> D
         items = ctx.lookups.get_multi(entry["lookup_group"])
         attributes = entry["return_attributes"]
         rows = [(key, *[value.get(a) for a in attributes]) for key, value in items.items()]
-        lookup_df = _side_table(ctx.spark, rows, ["lookup_item", *attributes])
+        lookup_df = meta_df(ctx.spark, rows, names=["lookup_item", *attributes])
         df = df.join(
             F.broadcast(lookup_df),
             F.concat_ws("-", *entry["match_columns"]) == lookup_df["lookup_item"],

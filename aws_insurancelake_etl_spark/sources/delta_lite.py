@@ -82,7 +82,7 @@ from pyspark.sql.types import (
 )
 
 from .dml_core import (
-    discard_files, may_overlap, merge_key_sets, merge_prologue, meta_df,
+    broadcast_meta, discard_files, may_overlap, merge_prologue, meta_df,
     retry_on_conflict,
 )
 
@@ -1293,7 +1293,7 @@ def _read_snapshot(
                 spark, rt_rows, "__rt_file string, __rt_base long, __rt_dcv long"
             )
             df = df.join(
-                F.broadcast(rt_map), scan_file == F.col("__rt_file"), "left"
+                broadcast_meta(rt_map), scan_file == F.col("__rt_file"), "left"
             )
             rt_base, rt_dcv = F.col("__rt_base"), F.col("__rt_dcv")
         mat_id = F.col(rt_id_col) if rt_id_col else F.lit(None).cast("long")
@@ -3603,11 +3603,11 @@ def merge_delta(
     with merge_prologue(
         _apply_generated(source, _snap0.schema), delete_keys, keys,
         DeltaLiteError, "; a target row may match at most one source row",
-    ) as (source, delete_keys, key_bounds):
+    ) as (source, delete_keys, key_sets, key_bounds):
         _enforce_constraints(source, _snap0.configuration)
         return retry_on_conflict(
             lambda attempt: _merge_once(
-                spark, source, path, keys, attempt, key_bounds,
+                spark, source, path, keys, attempt, key_sets, key_bounds,
                 use_deletion_vectors=use_deletion_vectors,
                 delete_keys=delete_keys,
             ),
@@ -3617,7 +3617,7 @@ def merge_delta(
 
 def _merge_once(
     spark: SparkSession, source: DataFrame, path: str, keys: list,
-    attempt: int, key_bounds: tuple,
+    attempt: int, key_sets: tuple, key_bounds: tuple,
     use_deletion_vectors: bool | None = None,
     delete_keys: DataFrame | None = None,
 ) -> dict:
@@ -3632,7 +3632,7 @@ def _merge_once(
     schema_cols = [f.name for f in snap.schema.fields]
     if [f.name for f in source.schema.fields] != schema_cols:
         source = source.select(*schema_cols)  # raises if a column is missing
-    src_keys, tomb_keys, hint = merge_key_sets(source, delete_keys, keys)
+    src_keys, tomb_keys, hint = key_sets
     tomb_hint, src_hint = hint(tomb_keys), hint(src_keys)
     # Partition pruning for the touched-file search: when the partition
     # columns are part of the merge key, a match can only live in a

@@ -17,16 +17,20 @@ checkpoints on the interval) and ``iceberg_lite._commit_metadata``
 the commit staged through :func:`discard_files` and raises the
 format's conflict error, which :func:`retry_on_conflict` re-executes.
 
-- :func:`merge_prologue`: source / delete-key checkpoint (freed when
-  the merge ends), duplicate-key check and first-key bounds;
+- :func:`merge_prologue`: source / delete-key checkpoint and the
+  source's checkpointed key set (all freed when the merge ends), whose
+  observed counts and first-key bounds give the duplicate-key check
+  and the skip range;
 - :func:`merge_key_sets`: the source and tombstone key sets and their
-  join hint;
+  join hint, shared by every attempt's key joins;
 - :func:`retry_on_conflict`: the optimistic-concurrency attempt loop,
   and :func:`discard_files` for what a lost attempt staged;
 - :func:`may_overlap`: the file-statistics range test behind file
   skipping;
-- :func:`meta_df` / :func:`lit_lookup`: O(files) driver-side metadata
-  as a one-slice DataFrame or as a literal map expression.
+- :func:`meta_df` / :func:`broadcast_meta` / :func:`lit_lookup`:
+  driver-side rows (O(files) metadata, lookup side tables) as a JVM
+  local relation, its one-task broadcast, or a literal map
+  expression.
 """
 
 from __future__ import annotations
@@ -35,28 +39,52 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 #: largest metadata map embedded in the plan as a literal; bigger maps
 #: fall back to a broadcast-join DataFrame (plan size stays bounded)
 LIT_MAP_MAX = 1024
 
 
-def meta_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-side metadata list -> DataFrame on an explicitly sized
-    RDD.  ``spark.createDataFrame(list)`` parallelizes into
-    defaultParallelism slices (32 on the bench session), so every
-    broadcast build of an O(files) map — row-id bases, DV descriptors,
-    file/sequence maps, partition tuples — scheduled a 32-task stage
-    for a handful of rows.  One slice per 64k entries (minimum one)
-    makes those builds one task without changing a single row; the
-    maps are O(files) driver state either way."""
+def meta_df(spark: SparkSession, rows, schema=None, names=None) -> DataFrame:
+    """Driver-side rows -> DataFrame over a JVM local relation: O(files)
+    table metadata (row-id bases, DV descriptors, file/sequence maps,
+    partition tuples, inspection tables) and lookup side tables.
+
+    ``schema`` is a DDL string or ``StructType``; without it the schema
+    is the one ``createDataFrame(rows, names)`` infers (same key types,
+    so a join coerces keys the same way; empty or all-null columns
+    raise the same errors).
+
+    The rows travel as one Arrow table into a ``LocalRelation``, never
+    a Python RDD, so no job over the frame starts a Python worker.  The
+    optimizer folds a projection or filter over it into the relation
+    itself: filtering it and collecting the result (the partition fast
+    path of both formats' partition clear) submits no Spark job.  Scanned
+    as-is, a local relation spreads over ``min(rows, parallelism)``
+    tasks; broadcast it through :func:`broadcast_meta`, which keeps the
+    build a one-task stage."""
     rows = list(rows)
-    slices = max(1, len(rows) // 65536)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, slices), schema
+    if schema is None:
+        schema = spark._inferSchemaFromList(rows, names=names)
+    elif isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows],
+        schema=to_arrow_schema(schema),
     )
+    return spark.createDataFrame(table, schema=schema)
+
+
+def broadcast_meta(df: DataFrame) -> DataFrame:
+    """``F.broadcast`` of a :func:`meta_df` frame as a one-task build:
+    a local relation broadcast as-is scans ``min(rows, parallelism)``
+    tasks for a handful of rows."""
+    return F.broadcast(df.coalesce(1))
 
 
 def lit_lookup(rows, key_col, fields):
@@ -104,52 +132,63 @@ def may_overlap(fmin, fmax, lo, hi) -> bool:
 def merge_prologue(
     source: DataFrame, delete_keys: DataFrame | None, keys: list,
     error_cls: type, dup_hint: str = "",
-) -> Iterator[tuple[DataFrame, DataFrame | None, tuple]]:
-    """Materialize the MERGE inputs and check the source once; a context
-    manager around the merge that frees the materialized blocks when it
-    exits, so no merge leaves its source in executor storage.
+) -> Iterator[tuple[DataFrame, DataFrame | None, tuple, tuple]]:
+    """Materialize the MERGE inputs and the source's key set once and
+    check the source; a context manager around the merge that frees
+    all three when it exits, so no merge leaves them in executor
+    storage.
 
-    The source plan is re-used by every downstream pass (duplicate
-    check, key bounds, touched-file search, survivor rewrite or
-    delete staging, CDC); for SQL-front-end merges it is itself a
-    multi-join over the TARGET, so re-evaluating it per pass multiplied
-    the whole merge's scan work.  ``localCheckpoint`` materializes it
-    (and ``delete_keys``) exactly once and truncates the plan: every
-    later pass reads the materialized blocks.  O(|source|) executor
-    storage — the merge stages the full source as new data files
-    anyway.
+    The source plan is re-used by every downstream pass (touched-file
+    search, survivor rewrite or delete staging, CDC); for SQL-front-end
+    merges it is itself a multi-join over the TARGET, so re-evaluating
+    it per pass multiplied the whole merge's scan work.
+    ``localCheckpoint`` materializes it (and ``delete_keys``) exactly
+    once and truncates the plan.  O(|source|) executor storage — the
+    merge stages the full source as new data files anyway.
 
-    The duplicate-key check (a target row may match at most one source
-    row: dup ⇔ count(*) > count(distinct key tuple)) and the first
-    key's bounds come from ONE aggregate job.  With ``delete_keys`` the
-    bounds are recomputed IN SPARK over the union of both key sets:
-    merging per-frame bounds with Python's ``min``/``max`` diverges from
-    Spark's ordering (NaN sorts above every number in Spark, UTF-8
-    binary string order) and mis-shapes the skip range.
+    The source's key set is ONE checkpointed ``groupBy(*keys).count()``
+    (one shuffle, 2 jobs; a count-distinct aggregate took 3).  Its
+    ``observe``d max count and min and max first key come with those
+    jobs: a count above one is a duplicate key (a target row may match
+    at most one source row), and the min/max are the skip range.  Every later key join of every attempt (touched-file
+    search, survivor anti-join, position-delete join) reads that set
+    through :func:`merge_key_sets` instead of re-shuffling the source's
+    distinct keys.  With ``delete_keys`` the bounds are recomputed IN
+    SPARK over the union of both key sets: merging per-frame bounds
+    with Python's ``min``/``max`` diverges from Spark's ordering (NaN
+    sorts above every number in Spark, UTF-8 binary string order) and
+    mis-shapes the skip range.
 
-    Yields ``(source, delete_keys, (lo, hi))``; raises ``error_cls``
+    Yields ``(source, delete_keys, key_sets, (lo, hi))`` with
+    ``key_sets`` from :func:`merge_key_sets`; raises ``error_cls``
     naming a duplicate key (``dup_hint`` is appended to the message)."""
     source = source.localCheckpoint(eager=True)
+    held = [source]
     if delete_keys is not None:
         delete_keys = delete_keys.localCheckpoint(eager=True)
+        held.append(delete_keys)
     try:
         key0 = keys[0]
-        agg = source.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.count_distinct(F.struct(*keys)).alias("__nd"),
-            F.min(key0).alias("__lo"),
-            F.max(key0).alias("__hi"),
-        ).collect()[0]
-        if agg["__n"] != agg["__nd"]:
-            dup = (
-                source.groupBy(*keys).count().where(F.col("count") > 1)
-                .limit(1).collect()
+        seen = Observation()
+        key_counts = (
+            source.groupBy(*keys).count()
+            .observe(
+                seen,
+                F.max("count").alias("dup"),
+                F.min(key0).alias("lo"),
+                F.max(key0).alias("hi"),
             )
+            .localCheckpoint(eager=True)
+        )
+        held.append(key_counts)
+        stats = seen.get
+        if (stats["dup"] or 0) > 1:
+            dup = key_counts.where(F.col("count") > 1).limit(1).collect()
             raise error_cls(
                 f"MERGE source has duplicate key "
                 f"{tuple(dup[0][k] for k in keys)}{dup_hint}"
             )
-        key_bounds = (agg["__lo"], agg["__hi"])
+        key_bounds = (stats["lo"], stats["hi"])
         if delete_keys is not None:
             db = (
                 source.select(F.col(key0).alias("__k"))
@@ -158,26 +197,28 @@ def merge_prologue(
                 .collect()[0]
             )
             key_bounds = (db["lo"], db["hi"])
-        yield source, delete_keys, key_bounds
+        key_sets = merge_key_sets(
+            key_counts.select(*keys), delete_keys, keys
+        )
+        yield source, delete_keys, key_sets, key_bounds
     finally:
-        for df in (source, delete_keys):
-            if df is not None:
-                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        for df in held:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def merge_key_sets(source: DataFrame, delete_keys: DataFrame | None,
+def merge_key_sets(src_keys: DataFrame, delete_keys: DataFrame | None,
                    keys: list):
     """The MERGE's key sets: ``(src_keys, tomb_keys, hint)``.
 
-    ``src_keys`` are the source's distinct keys; ``tomb_keys`` the
-    TOMBSTONE set — target rows replaced by the source plus, with
-    ``delete_keys`` (general MERGE's delete clause), rows removed
-    outright.  ``hint`` is the join strategy for every key set derived
-    from them: a plain MERGE's sets are source-sized, so they broadcast;
-    ``delete_keys`` (the SQL front-end's DELETE / BY SOURCE clauses) can
-    be target-sized, so the strategy is left to AQE, which still
-    broadcasts when the runtime size allows."""
-    src_keys = source.select(*keys).distinct()
+    ``src_keys`` are the source's distinct keys (the prologue's
+    checkpointed key set); ``tomb_keys`` the TOMBSTONE set — target
+    rows replaced by the source plus, with ``delete_keys`` (general
+    MERGE's delete clause), rows removed outright.  ``hint`` is the
+    join strategy for every key set derived from them: a plain MERGE's
+    sets are source-sized, so they broadcast; ``delete_keys`` (the SQL
+    front-end's DELETE / BY SOURCE clauses) can be target-sized, so the
+    strategy is left to AQE, which still broadcasts when the runtime
+    size allows."""
     if delete_keys is None:
         return src_keys, src_keys, F.broadcast
     tomb_keys = src_keys.unionByName(delete_keys.select(*keys)).distinct()

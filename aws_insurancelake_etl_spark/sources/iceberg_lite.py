@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_lite
 from .dml_core import (
-    LIT_MAP_MAX, discard_files, lit_lookup, may_overlap, merge_key_sets,
+    LIT_MAP_MAX, broadcast_meta, discard_files, lit_lookup, may_overlap,
     merge_prologue, meta_df, retry_on_conflict,
 )
 from .iceberg_transforms import (
@@ -323,12 +323,21 @@ def _metadata_versions(meta_dir: str) -> list[int]:
 
 
 def _load_metadata(table_path: str) -> dict:
-    """Current table metadata = the HIGHEST ``vN.metadata.json``.  The
-    ``version-hint.text`` file is a non-atomic optimization (HadoopTables
-    convention) that can lag a just-committed version, so it is only a
-    fallback when the directory scan finds nothing — trusting a stale
-    hint would silently time-travel a reader backwards past a concurrent
-    writer's commit."""
+    """Current table metadata (see :func:`_load_versioned`)."""
+    return _load_versioned(table_path)[1]
+
+
+def _load_versioned(table_path: str) -> tuple[int, dict]:
+    """``(version, metadata)`` of the current table metadata = the
+    HIGHEST ``vN.metadata.json``.  The ``version-hint.text`` file is a
+    non-atomic optimization (HadoopTables convention) that can lag a
+    just-committed version, so it is only a fallback when the directory
+    scan finds nothing — trusting a stale hint would silently
+    time-travel a reader backwards past a concurrent writer's commit.
+
+    A metadata-only commit claims ``version + 1`` of the metadata it
+    loaded and edited: a commit landing after the load then makes the
+    claim lose instead of being overwritten."""
     meta_dir = os.path.join(table_path, "metadata")
     if not os.path.isdir(meta_dir):
         raise IcebergLiteError(f"not an iceberg table (no metadata/): {table_path}")
@@ -338,7 +347,7 @@ def _load_metadata(table_path: str) -> dict:
             os.path.join(meta_dir, f"v{versions[-1]}.metadata.json"),
             encoding="utf-8",
         ) as fh:
-            return json.load(fh)
+            return versions[-1], json.load(fh)
     hint = os.path.join(meta_dir, "version-hint.text")
     if os.path.exists(hint):
         with open(hint, encoding="utf-8") as fh:
@@ -346,7 +355,7 @@ def _load_metadata(table_path: str) -> dict:
         candidate = os.path.join(meta_dir, f"v{version}.metadata.json")
         if os.path.exists(candidate):
             with open(candidate, encoding="utf-8") as fh:
-                return json.load(fh)
+                return version, json.load(fh)
     raise IcebergLiteError(f"no vN.metadata.json under {meta_dir}")
 
 
@@ -615,7 +624,7 @@ def _attach_orig(spark, df, files):
             ],
         )
     fm = meta_df(spark, rows, "__ice_file string, orig string")
-    return df.join(F.broadcast(fm), "__ice_file")
+    return df.join(broadcast_meta(fm), "__ice_file")
 
 
 def plan_files(
@@ -934,7 +943,7 @@ def create_ref(
     Commits the next metadata version (O_EXCL)."""
     if ref_type not in ("tag", "branch"):
         raise IcebergLiteError(f"ref type must be tag|branch: {ref_type!r}")
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     if snapshot_id is None:
         snapshot_id = meta.get("current-snapshot-id")
     snapshot_id = _resolve_ref(meta, snapshot_id)
@@ -947,7 +956,7 @@ def create_ref(
     refs[name] = {"snapshot-id": int(snapshot_id), "type": ref_type}
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
+    _commit_metadata(table_path, loaded + 1, new_meta)
     return refs[name]
 
 
@@ -956,14 +965,14 @@ def drop_ref(table_path: str, name: str) -> None:
     becomes expirable again).  The ``main`` branch cannot be dropped."""
     if name == "main":
         raise IcebergLiteError("cannot drop the main branch")
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     refs = dict(meta.get("refs") or {})
     if name not in refs:
         raise IcebergLiteError(f"no such ref {name!r} (refs: {sorted(refs)})")
     del refs[name]
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
+    _commit_metadata(table_path, loaded + 1, new_meta)
 
 
 def fast_forward(
@@ -977,7 +986,7 @@ def fast_forward(
     advance with no history rewrite — that is what makes publish safe
     and O(1): the audited snapshot bytes ARE the published bytes.
     Commits the next metadata version (O_EXCL)."""
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     refs = dict(meta.get("refs") or {})
     if source_branch not in refs:
         raise IcebergLiteError(
@@ -1013,7 +1022,7 @@ def fast_forward(
     new_meta["refs"] = refs
     if to == "main":
         new_meta["current-snapshot-id"] = src_head
-    version = _head_version(table_path) + 1
+    version = loaded + 1
     _commit_metadata(table_path, version, new_meta)
     return {"updated": True, "ref": to, "snapshot_id": src_head,
             "previous_snapshot_id": to_head, "version": version}
@@ -1257,7 +1266,7 @@ def read_iceberg_changelog(
                             F.col("file_path").alias("orig"),
                             F.col("pos").cast("long").alias("__del_pos"),
                         )
-                        .join(F.broadcast(fmap), "orig")
+                        .join(broadcast_meta(fmap), "orig")
                         .select("__del_file", "__del_pos")
                     )
                 if dv_plan:
@@ -1391,7 +1400,7 @@ def read_iceberg_changelog(
                                 "^file:/+", "/",
                             ).alias("dfile"),
                         )
-                        .join(F.broadcast(eq_map), "dfile")
+                        .join(broadcast_meta(eq_map), "dfile")
                         .drop("dfile")
                     )
                     cond = F.lit(True)
@@ -2591,8 +2600,8 @@ def read_iceberg(
             )
             del_rows = (
                 del_base
-                .join(F.broadcast(del_map), "dfile")
-                .join(F.broadcast(file_map), "orig")
+                .join(broadcast_meta(del_map), "dfile")
+                .join(broadcast_meta(file_map), "orig")
                 .where(F.col("delete_seq") >= F.col("data_seq"))
                 .where(~F.col("has_dv"))
                 .select(F.col("local").alias("__ice_file"), "__ice_pos")
@@ -2643,7 +2652,7 @@ def read_iceberg(
             )
         else:
             data = data.join(
-                F.broadcast(
+                broadcast_meta(
                     file_map.select(
                         F.col("local").alias("__ice_file"), "data_seq"
                     )
@@ -2745,7 +2754,7 @@ def read_iceberg(
                     ),
                 )
                 del_rows = eq_base.join(
-                    F.broadcast(eq_map), "dfile"
+                    broadcast_meta(eq_map), "dfile"
                 ).drop("dfile")
             cond = F.col("delete_seq") > F.col("data_seq")
             for c in cols:
@@ -2793,7 +2802,7 @@ def read_iceberg(
                 spark, lin_rows,
                 "__ice_file string, __ice_fri long, __ice_seq long",
             )
-            data = data.join(F.broadcast(lin), "__ice_file")
+            data = data.join(broadcast_meta(lin), "__ice_file")
         data = (
             data
             .withColumn(
@@ -4086,8 +4095,9 @@ def _written_metadata(snap_id: int, manifests: list, ml_rel: str) -> list:
 
 def _head_version(table_path: str) -> int:
     """The table's current metadata version: what a snapshot commit
-    plans against (``expect_version`` fails fast if the table moved);
-    a metadata-only commit claims the next one."""
+    plans against (``expect_version`` fails fast if the table moved).
+    A metadata-only commit claims the version after the one it loaded
+    (:func:`_load_versioned`), not after this one."""
     meta_dir = os.path.join(table_path, "metadata")
     return (_metadata_versions(meta_dir) or [0])[-1]
 
@@ -5051,8 +5061,8 @@ def _stage_iceberg_dvs(
                     F.col("_metadata.file_path"), "^file:/+", "/"
                 ).alias("dfile"),
             )
-            .join(F.broadcast(del_map), "dfile")
-            .join(F.broadcast(file_map), "orig")
+            .join(broadcast_meta(del_map), "dfile")
+            .join(broadcast_meta(file_map), "orig")
             .where(F.col("delete_seq") >= F.col("data_seq"))
             .join(F.broadcast(touched), "__ice_file", "left_semi")
             .select("__ice_file", "__ice_pos")
@@ -5160,11 +5170,11 @@ def merge_iceberg(
     keys = [keys] if isinstance(keys, str) else list(keys)
     with merge_prologue(
         source, delete_keys, keys, IcebergLiteError
-    ) as (source, delete_keys, key_bounds):
+    ) as (source, delete_keys, key_sets, key_bounds):
         return retry_on_conflict(
             lambda attempt: _merge_once_iceberg(
-                spark, source, table_path, keys, attempt, key_bounds,
-                delete_keys=delete_keys,
+                spark, source, table_path, keys, attempt, key_sets,
+                key_bounds, delete_keys=delete_keys,
             ),
             ConcurrentIcebergWrite, max_retries,
         )
@@ -5172,7 +5182,8 @@ def merge_iceberg(
 
 def _merge_once_iceberg(
     spark: SparkSession, source: DataFrame, table_path: str, keys: list,
-    attempt: int, key_bounds: tuple, delete_keys: DataFrame | None = None,
+    attempt: int, key_sets: tuple, key_bounds: tuple,
+    delete_keys: DataFrame | None = None,
 ) -> dict:
     from pyspark.sql import functions as F
 
@@ -5219,7 +5230,7 @@ def _merge_once_iceberg(
             "appended_files": len(data_entries), **scan,
             "retries": attempt,
         }
-    src_keys, tomb_keys, hint = merge_key_sets(source, delete_keys, keys)
+    src_keys, tomb_keys, hint = key_sets
     tomb_hint = hint(tomb_keys)
     files_scanned = len(search_files)
     # Match against LIVE rows — the full reader (metadata schema,
@@ -5867,7 +5878,7 @@ def set_iceberg_properties(table_path: str, properties: dict) -> int:
     merging ``properties`` into the table's property map (spec §Table
     Metadata ``properties``).  A value of None removes the key
     (UNSET).  Returns the new metadata version."""
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     props = dict(meta.get("properties") or {})
     for k, v in properties.items():
         if v is None:
@@ -5876,7 +5887,7 @@ def set_iceberg_properties(table_path: str, properties: dict) -> int:
             props[k] = str(v)
     new_meta = dict(meta)
     new_meta["properties"] = props
-    return _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
+    return _commit_metadata(table_path, loaded + 1, new_meta)
 
 
 def set_sort_order(table_path: str, order: list) -> dict:
@@ -5894,7 +5905,7 @@ def set_sort_order(table_path: str, order: list) -> dict:
     clustering the order promises — and stamps ``sort-order-id``
     (spec data_file field 140) on the rewritten files' manifest
     entries."""
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     fields = []
     known = {
         f["name"]: int(f["id"])
@@ -5943,7 +5954,7 @@ def set_sort_order(table_path: str, order: list) -> dict:
     new_meta = dict(meta)
     new_meta["sort-orders"] = orders
     new_meta["default-sort-order-id"] = new_id
-    version = _head_version(table_path) + 1
+    version = loaded + 1
     _commit_metadata(table_path, version, new_meta)
     return {"order_id": new_id, "version": version}
 
@@ -6012,7 +6023,7 @@ def _carry_commit(
     manifests, optionally EXCLUDING data files (the metadata-only
     DELETE).  Shared engine of :func:`rewrite_manifests` and
     :func:`delete_iceberg`'s partition fast path."""
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     rebase = _rebaser(meta, table_path)
     location = meta.get("location") or table_path.rstrip("/")
     cur_id = meta.get("current-snapshot-id")
@@ -6092,7 +6103,7 @@ def _carry_commit(
     if before <= len(groups) and not force:
         return {"manifests_before": before, "manifests_after": before,
                 "snapshot_id": None, "rewritten": False}
-    version = _head_version(table_path) + 1
+    version = loaded + 1
     snap_id = version
     new_manifests = []
     for (mf_content, spec_id), rows in sorted(groups.items()):
@@ -6507,7 +6518,7 @@ def alter_iceberg_schema(
     widens = dict(widens or {})
     if not renames and not drops and not adds and not widens:
         raise IcebergLiteError("alter_iceberg_schema: nothing to do")
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     cur = _current_schema_of(meta)
     # deep copy: nested renames/drops mutate struct type dicts in place
     fields = _copy.deepcopy(list(cur.get("fields", [])))
@@ -6779,7 +6790,7 @@ def alter_iceberg_schema(
     new_meta["current-schema-id"] = new_sid
     new_meta["last-column-id"] = max(_last_column_id(meta), next_id)
     new_meta.pop("schema", None)  # the v1 single-schema form is stale now
-    version = _head_version(table_path) + 1
+    version = loaded + 1
     _commit_metadata(table_path, version, new_meta)
     return {"schema_id": new_sid, "version": version}
 
@@ -6796,7 +6807,7 @@ def upgrade_iceberg_format(table_path: str, to_version: int = 3) -> dict:
     NEW row deletes must arrive as deletion vectors, which fold the old
     position deletes for their file in (the supersede rule
     :func:`read_iceberg` enforces).  Downgrades refuse."""
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     cur = max(2, int(meta.get("format-version", 2)))
     to_version = int(to_version)
     if to_version not in (2, 3):
@@ -6813,7 +6824,7 @@ def upgrade_iceberg_format(table_path: str, to_version: int = 3) -> dict:
     new_meta["format-version"] = to_version
     if "next-row-id" not in new_meta:
         new_meta["next-row-id"] = 0
-    _commit_metadata(table_path, _head_version(table_path) + 1, new_meta)
+    _commit_metadata(table_path, loaded + 1, new_meta)
     return {"format_version": to_version, "upgraded": True}
 
 
@@ -6825,7 +6836,7 @@ def rollback_to_snapshot(table_path: str, snapshot_id) -> dict:
     production "bad load landed, get yesterday back NOW" lever.
     ``snapshot_id`` accepts an id or a ref name; the main branch
     follows the rollback target."""
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     target = _resolve_ref(meta, snapshot_id)
     known = {s.get("snapshot-id") for s in meta.get("snapshots") or []}
     if target not in known:
@@ -6839,7 +6850,7 @@ def rollback_to_snapshot(table_path: str, snapshot_id) -> dict:
     refs = dict(meta.get("refs") or {})
     refs["main"] = {"snapshot-id": int(target), "type": "branch"}
     new_meta["refs"] = refs
-    version = _head_version(table_path) + 1
+    version = loaded + 1
     _commit_metadata(table_path, version, new_meta)
     return {"previous_snapshot_id": prior, "current_snapshot_id": target,
             "version": version}
@@ -6915,7 +6926,7 @@ def expire_snapshots(
     writer can never lose its commit to the expiry.  Returns
     {"expired", "retained", "deleted_files", "version"}.
     """
-    meta = _load_metadata(table_path)
+    loaded, meta = _load_versioned(table_path)
     snaps = sorted(
         meta.get("snapshots") or [],
         key=lambda s: int(s.get("sequence-number") or s["snapshot-id"]),
@@ -6950,6 +6961,11 @@ def expire_snapshots(
     dead: set = set()
     for s in expired:
         dead |= _snapshot_owned_paths(meta, table_path, s)
+    version = loaded + 1
+    new_meta = dict(meta)
+    new_meta["snapshots"] = retained
+    # commit before deleting: a lost claim leaves every file in place
+    _commit_metadata(table_path, version, new_meta)
     deleted = 0
     root = os.path.abspath(table_path) + os.sep
     for path in sorted(dead - live):
@@ -6963,10 +6979,6 @@ def expire_snapshots(
         except OSError:
             pass
     meta_dir = os.path.join(table_path, "metadata")
-    version = (_metadata_versions(meta_dir) or [0])[-1] + 1
-    new_meta = dict(meta)
-    new_meta["snapshots"] = retained
-    _commit_metadata(table_path, version, new_meta)
     deleted_meta = 0
     if keep_metadata_versions is not None:
         # Iceberg's write.metadata.previous-versions-max: old

@@ -1,16 +1,19 @@
 """dml_core: the row-level DML pieces both table formats share — the
-MERGE prologue's key bounds, the conflict-retry loop and each format's
-one commit exit, which discards what a lost commit staged — checked
-through the public ``delta_lite`` / ``iceberg_lite`` entry points."""
+MERGE prologue's key set and bounds, the metadata frames, the
+conflict-retry loop and each format's one commit exit, which discards
+what a lost commit staged — checked through the public ``delta_lite`` /
+``iceberg_lite`` entry points."""
 
 import dataclasses
 import json
 import os
 import shutil
+import uuid
 from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from aws_insurancelake_etl_spark.sources import delta_lite as dl
 from aws_insurancelake_etl_spark.sources import dml_core
@@ -371,3 +374,176 @@ def test_retry_on_conflict_gives_up_after_the_budget():
         dml_core.retry_on_conflict(attempt, Lost, 2)
     assert attempts == [0, 1, 2]
     assert dml_core.retry_on_conflict(lambda n: n, Lost, 0) == 0
+
+
+def _stage_tasks(spark, fn):
+    """Tasks of every stage of the jobs ``fn`` submits."""
+    sc = spark.sparkContext
+    group = f"stage-tasks-{uuid.uuid4()}"
+    sc.setJobGroup(group, "stage tasks")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    return [
+        st.getStageInfo(stage).numTasks
+        for job in st.getJobIdsForGroup(group)
+        for stage in st.getJobInfo(job).stageIds
+    ]
+
+
+def test_meta_df_is_a_jvm_local_relation(spark):
+    """Metadata frames and lookup side tables are local relations, with
+    the schema given or inferred from the rows: no job over them starts
+    a Python worker."""
+    explicit = dml_core.meta_df(
+        spark, [(1, "a", {"p": "1"}), (2, None, {})],
+        "n long, s string, part map<string,string>",
+    )
+    inferred = dml_core.meta_df(spark, [(1, "a")], names=["n", "s"])
+    for df in (explicit, inferred):
+        assert df._jdf.queryExecution().optimizedPlan().nodeName() == (
+            "LocalRelation"
+        )
+    assert explicit.collect() == [
+        Row(n=1, s="a", part={"p": "1"}), Row(n=2, s=None, part={}),
+    ]
+    assert inferred.schema.simpleString() == "struct<n:bigint,s:string>"
+    assert dml_core.meta_df(spark, [], "n long").collect() == []
+
+
+def test_filter_over_meta_df_runs_no_job(spark, count_jobs):
+    meta = dml_core.meta_df(
+        spark, [(i, str(i)) for i in range(6)], "n long, p string"
+    )
+    out = []
+    typed = meta.select("n", F.col("p").cast("int").alias("p"))
+    assert count_jobs(
+        lambda: out.extend(typed.where(F.expr("p > 3")).collect())
+    ) == 0
+    assert sorted(r["n"] for r in out) == [4, 5]
+
+
+def test_meta_df_broadcast_is_one_task(spark):
+    """A local relation broadcast as it is scans min(rows, parallelism)
+    tasks; the metadata broadcast keeps its build to one."""
+    meta = dml_core.meta_df(
+        spark, [(i, f"f{i}") for i in range(12)], "n long, f string"
+    )
+    facts = spark.range(0, 24, 1, 1).withColumnRenamed("id", "n")
+    out = []
+    tasks = _stage_tasks(spark, lambda: out.extend(
+        facts.join(dml_core.broadcast_meta(meta), "n").collect()
+    ))
+    assert tasks and set(tasks) == {1}, tasks
+    assert len(out) == 12
+
+
+def test_partition_clear_fast_path_runs_no_job(spark, tmp_path, count_jobs,
+                                               fmt):
+    """A DELETE on partition columns alone decides per partition tuple
+    on the driver and commits file removals: no Spark job."""
+    path = str(tmp_path / "t")
+    df = spark.range(6).selectExpr("id AS k", "cast(id % 2 AS string) AS p")
+    if fmt.name == "delta":
+        dl.write_delta(df, path, partition_by=["p"])
+
+        def clear():
+            return dl.delete_delta(spark, path, "p = '1'")
+    else:
+        il.write_iceberg(spark, df, path, partition_by=["p"])
+
+        def clear():
+            return il.delete_iceberg(spark, path, "p = '1'")
+    out = []
+    assert count_jobs(lambda: out.append(clear())) == 0
+    assert out[0]["metadata_only"] is True
+    assert sorted(r["k"] for r in fmt.read(spark, path).collect()) == [0, 2, 4]
+
+
+#: Spark jobs of one MERGE into a two-file table: two fewer than when
+#: every key join re-shuffled the source's distinct keys and the
+#: duplicate check ran its own 3-job aggregate (delta 11, iceberg 10;
+#: 8 and 8 with the shared key set)
+_MERGE_JOBS = {"delta": 9, "iceberg": 8}
+
+
+def test_merge_job_budget(spark, tmp_path, count_jobs, fmt):
+    """The prologue builds the source's key set once (one shuffle, its
+    duplicate check and bounds observed on the same job) and every key
+    join reads it: no key set is re-shuffled per use."""
+    path = str(tmp_path / "t")
+    rows = "cast(id AS double) AS k", "cast(id AS string) AS v"
+    fmt.append(spark, spark.range(8).selectExpr(*rows), path)
+    fmt.append(spark, spark.range(20, 23).selectExpr(*rows), path)
+    source = spark.range(4).selectExpr(
+        "cast((id * 7) % 30 AS double) AS k", "'new' AS v"
+    )
+    jobs = count_jobs(lambda: fmt.merge(spark, source, path, ["k"]))
+    assert jobs <= _MERGE_JOBS[fmt.name], jobs
+    got = {r["k"]: r["v"] for r in fmt.read(spark, path).collect()}
+    assert got == {
+        **{float(i): str(i) for i in (*range(8), 20, 22)},
+        0.0: "new", 7.0: "new", 14.0: "new", 21.0: "new",
+    }
+
+
+#: every Iceberg metadata-only commit: ``op(path, snapshot_ids)`` on a
+#: v2 table with three appends, main rolled back to the second, tag
+#: ``t0`` and branch ``b1`` at the third
+_METADATA_COMMITS = {
+    "create_ref": lambda p, s: il.create_ref(p, "t1"),
+    "drop_ref": lambda p, s: il.drop_ref(p, "t0"),
+    "fast_forward": lambda p, s: il.fast_forward(p, "b1"),
+    "set_iceberg_properties": lambda p, s: il.set_iceberg_properties(
+        p, {"mine": "1"}),
+    "set_sort_order": lambda p, s: il.set_sort_order(p, [("k", "asc")]),
+    "alter_iceberg_schema": lambda p, s: il.alter_iceberg_schema(
+        p, renames={"v": "w"}),
+    "upgrade_iceberg_format": lambda p, s: il.upgrade_iceberg_format(p, 3),
+    "rollback_to_snapshot": lambda p, s: il.rollback_to_snapshot(p, s[0]),
+    "expire_snapshots": lambda p, s: il.expire_snapshots(p, keep_last=1),
+    # _carry_commit, also the partition clear's metadata-only DELETE
+    "rewrite_manifests": lambda p, s: il.rewrite_manifests(p),
+}
+
+
+@pytest.mark.parametrize("op", list(_METADATA_COMMITS))
+def test_metadata_commit_loses_to_a_commit_after_its_load(
+    spark, tmp_path, monkeypatch, op,
+):
+    """Another writer commits right after the operation loaded the
+    metadata it edits: the operation's claim must lose and raise, never
+    overwrite the other writer's change."""
+    path = str(tmp_path / "t")
+    for n in range(3):
+        il.write_iceberg(spark, spark.createDataFrame(_rows(n, n + 1)), path)
+    snaps = il.snapshot_ids(path)
+    il.create_ref(path, "t0")
+    il.create_ref(path, "b1", "branch")
+    il.rollback_to_snapshot(path, snaps[1])
+    before = _tree(path)
+    real, injected = il._load_versioned, []
+
+    def load(table_path):
+        loaded = real(table_path)
+        if not injected:
+            injected.append(1)
+            il.set_iceberg_properties(table_path, {"other.writer": "1"})
+        return loaded
+
+    monkeypatch.setattr(il, "_load_versioned", load)
+    with pytest.raises(il.ConcurrentIcebergWrite):
+        _METADATA_COMMITS[op](path, snaps)
+    monkeypatch.undo()
+    meta = il._load_metadata(path)
+    assert meta["properties"]["other.writer"] == "1"
+    assert "mine" not in meta["properties"]
+    assert meta["current-snapshot-id"] == snaps[1]
+    assert set(meta["refs"]) == {"main", "t0", "b1"}
+    # nothing the losing operation planned to delete is gone
+    assert before <= _tree(path)
+    assert sorted(r["k"] for r in il.read_iceberg(spark, path).collect()) == [
+        0, 1,
+    ]

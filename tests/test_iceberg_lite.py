@@ -364,7 +364,7 @@ def test_merge_duplicate_source_key_raises(spark, tmp_path):
     dup = spark.createDataFrame(
         [Row(k=2, v=1), Row(k=2, v=2)]
     ).select("k", "v")
-    with pytest.raises(iceberg_lite.IcebergLiteError, match="duplicate key"):
+    with pytest.raises(iceberg_lite.IcebergLiteError, match=r"duplicate key \(2,\)"):
         iceberg_lite.merge_iceberg(spark, dup, path, "k")
 
 
