@@ -71,7 +71,7 @@ from dataclasses import replace as _dc_replace
 from functools import reduce
 from urllib.parse import quote, unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -82,8 +82,8 @@ from pyspark.sql.types import (
 )
 
 from .dml_core import (
-    broadcast_meta, discard_files, may_overlap, merge_prologue, meta_df,
-    retry_on_conflict,
+    broadcast_meta, carry_row_ids, discard_files, files_in_range,
+    merge_prologue, meta_df, partition_match, retry_on_conflict,
 )
 
 CHECKPOINT_INTERVAL = 10
@@ -3362,16 +3362,7 @@ def write_delta(
     removes = []
     if mode == "overwrite" and existing is not None:
         now_ms = int(time.time() * 1000)
-        removes = [
-            {
-                "remove": {
-                    "path": quote(a.path, safe="/="),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-            for a in existing.files
-        ]
+        removes = _removes([a.path for a in existing.files], now_ms)
     version = (existing.version if existing is not None else -1) + 1
     rt_actions = _assign_row_ids(
         merged_conf,
@@ -3552,11 +3543,13 @@ def merge_delta(
     MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``.
 
     Only data files that CONTAIN a matched key are rewritten: a
-    semi-join of the target against the broadcast distinct source keys
-    yields the touched ``_metadata.file_path`` set (driver state = that
-    path list).  Survivor rows from touched files are anti-joined out
-    and re-written together with the full source (updates + inserts in
-    one pass); untouched files carry over by reference in the commit.
+    semi-join of the target against the source's key set yields the
+    touched path set (:func:`_search_touched`, the search every
+    row-level writer shares; driver state = that path list).  Survivor
+    rows from touched files are anti-joined out and re-written together
+    with the full source (updates + inserts in one pass) through the
+    shared commit tail :func:`_rewrite`; untouched files carry over by
+    reference in the commit.
     Returns ``{"version", "files_rewritten", "files_kept",
     "files_scanned", "retries"}``.
 
@@ -3615,6 +3608,178 @@ def merge_delta(
         )
 
 
+def _partition_tuple(f: AddFile, part_cols: list, phys: dict) -> tuple:
+    """``f``'s partition values for the logical ``part_cols``: keyed by
+    the physical name on a column-mapped table, else the logical one."""
+    return tuple(
+        f.partition_values.get(phys.get(c, c), f.partition_values.get(c))
+        for c in part_cols
+    )
+
+
+def _removes(paths, now_ms: int, data_change: bool = True) -> list:
+    """One ``remove`` action per table-relative path."""
+    return [
+        {
+            "remove": {
+                "path": quote(p, safe="/="),
+                "deletionTimestamp": now_ms,
+                "dataChange": data_change,
+            }
+        }
+        for p in paths
+    ]
+
+
+def _search_touched(
+    spark: SparkSession, path: str, snap: Snapshot, dv: bool, match,
+    files=None,
+) -> tuple:
+    """The touched-file search of every row-level writer (MERGE, UPDATE
+    and DELETE, in both shapes): ``match`` picks the rows the writer
+    tombstones from a read of ``files`` (default the whole snapshot;
+    MERGE passes the files its partition and key-range pruning kept).
+    Returns ``(touched, matched_rows, descriptors)``: the table-relative
+    paths of the files holding a matched row, the number of matched
+    rows, and, in the deletion-vector shape, the DV sidecars already
+    staged for those files.
+
+    Copy-on-write: one scan whose observed metrics carry the touched
+    path set and the row count (a no-op write, one job, no shuffle).
+    Deletion vectors: the search IS the DV staging pass
+    (:func:`_stage_dvs` groups the matched row positions by file), so
+    the searched files are read once."""
+    if files is not None:
+        snap = _dc_replace(snap, files=files)
+    found = match(_read_snapshot(spark, snap, with_path=True, with_pos=dv))
+    if dv:
+        descriptors = _stage_dvs(spark, path, snap, found)
+        uris = [r["uri"] for r in descriptors]
+        n = sum(int(r["new_rows"]) for r in descriptors)
+    else:
+        descriptors, seen = [], Observation()
+        found.select("__dl_path").observe(
+            seen,
+            F.collect_set("__dl_path").alias("uris"),
+            F.count(F.lit(1)).alias("n"),
+        ).write.format("noop").mode("overwrite").save()
+        uris, n = seen.get["uris"], seen.get["n"]
+    touched = {_uri_to_rel(u, path) for u in uris}
+    unknown = touched - {a.path for a in snap.files}
+    if unknown:
+        discard_files(path, _staged(descriptors=descriptors))
+        raise DeltaLiteError(f"matched files not in snapshot: {sorted(unknown)}")
+    return touched, int(n), descriptors
+
+
+def _rewrite(
+    spark: SparkSession, path: str, snap: Snapshot, dv: bool, found: tuple,
+    operation: str, predicate: str, keep, changes, new_rows=None,
+) -> int:
+    """The stage-and-commit tail of every row-level writer: the commit
+    that tombstones the rows :func:`_search_touched` found (``found``)
+    and adds the writer's new rows.  Returns the committed version.
+
+    Every pass here reads only the touched files, with their row ids
+    (``_row_id`` / ``_row_commit_version``) when the table tracks rows;
+    each callback takes that frame, or None when no file is touched:
+
+    - ``keep(rows)``: the touched files' surviving rows (copy-on-write:
+      rewritten with both row-tracking fields materialized, and the
+      touched files removed; the deletion-vector shape leaves survivors
+      in place behind the staged DVs);
+    - ``new_rows(rows, id_col)``: the rows the writer adds (updated or
+      source rows), carrying preserved ids in ``id_col`` (None when the
+      table tracks no rows); None for DELETE;
+    - ``changes(rows)``: the change-feed rows with ``_change_type``
+      (``rows`` without the row-tracking fields), staged on a
+      CDF-enabled table as one file per touched file.
+
+    Fresh row-id blocks stamp the new files before the commit.  A
+    failure while staging deletes what was staged; a lost commit does
+    the same and raises :class:`ConcurrentWriteError` (:func:`_commit`)."""
+    touched, _, descriptors = found
+    rt_id_col, rt_cv_col = _rt_col_names(snap.configuration)
+    ids = _row_tracking_on(snap.configuration) and bool(rt_id_col)
+    part_cols, phys = _mapping_of(snap)
+    phys = phys or {}
+    adds, cdc_actions = [], []
+    try:
+        rows = _read_snapshot(
+            spark,
+            _dc_replace(snap, files=[f for f in snap.files
+                                     if f.path in touched]),
+            with_row_ids=ids,
+        ) if touched else None
+        new = new_rows(rows, rt_id_col if ids else None) if new_rows else None
+        if not dv and rows is not None:
+            survivors = keep(rows)
+            if ids:
+                survivors = survivors.withColumnRenamed(
+                    "_row_id", rt_id_col
+                ).withColumnRenamed("_row_commit_version", rt_cv_col)
+            new = (
+                survivors if new is None
+                else survivors.unionByName(new, allowMissingColumns=True)
+            )
+        if new is not None:
+            adds = _stage_data_files(
+                _to_physical(new, phys, snap.schema), path,
+                [phys.get(c, c) for c in part_cols],
+            )
+        if _cdf_enabled(snap):
+            plain = (
+                rows.drop("_row_id", "_row_commit_version")
+                if rows is not None else None
+            )
+            cdc_actions = [
+                {"cdc": c}
+                for c in _stage_cdc_files(
+                    _to_physical(changes(plain), phys, snap.schema)
+                    .coalesce(max(1, len(touched))),
+                    path,
+                )
+            ]
+    except BaseException:
+        discard_files(path, _staged(adds, cdc_actions, descriptors))
+        raise
+    version = snap.version + 1
+    actions = [
+        {
+            "commitInfo": {
+                "operation": operation,
+                "engine": "delta-lite",
+                "operationParameters": {
+                    "predicate": predicate,
+                    **({"deletionVectors": True} if dv else {}),
+                },
+                "operationMetrics": {
+                    "numTargetFilesAdded": str(len(adds)),
+                    "numTargetFilesRemoved": str(0 if dv else len(touched)),
+                    "numOutputRows": str(sum(
+                        int((a.stats or {}).get("numRecords", 0) or 0)
+                        for a in adds
+                    )),
+                },
+            }
+        }
+    ]
+    if dv:
+        actions += _dv_readds(snap, path, descriptors)
+    else:
+        actions += _removes(sorted(touched), int(time.time() * 1000))
+    # fresh row-id blocks for the new files (must run BEFORE the add
+    # actions serialize); a lost race discards them with the files
+    rt_actions = _assign_row_ids(
+        snap.configuration, snap.domain_metadata, adds, version, path
+    )
+    actions += [_add_json(a) for a in adds] + rt_actions + cdc_actions
+    return _commit(
+        path, version, actions, snap.configuration,
+        staged=_staged(adds, cdc_actions, descriptors),
+    )
+
+
 def _merge_once(
     spark: SparkSession, source: DataFrame, path: str, keys: list,
     attempt: int, key_sets: tuple, key_bounds: tuple,
@@ -3627,11 +3792,8 @@ def _merge_once(
     snap = snapshot(path)
     _guard_writable(snap, operation="MERGE")
     dv = _dv_mode(snap, use_deletion_vectors)
-    rt = _row_tracking_on(snap.configuration)
-    rt_id_col, rt_cv_col = _rt_col_names(snap.configuration)
     schema_cols = [f.name for f in snap.schema.fields]
-    if [f.name for f in source.schema.fields] != schema_cols:
-        source = source.select(*schema_cols)  # raises if a column is missing
+    source = source.select(*schema_cols)  # raises if a column is missing
     src_keys, tomb_keys, hint = key_sets
     tomb_hint, src_hint = hint(tomb_keys), hint(src_keys)
     # Partition pruning for the touched-file search: when the partition
@@ -3642,7 +3804,7 @@ def _merge_once(
     # day's files, not the table.  (Unsound when partition columns are
     # not in the key — a match could sit anywhere — so it only engages
     # on the subset case.)
-    search_snap = snap
+    search = snap.files
     part_cols, phys = _mapping_of(snap)
     phys = phys or {}
     if part_cols and set(part_cols) <= set(keys):
@@ -3650,258 +3812,93 @@ def _merge_once(
             tuple(_pv_str(row[c]) for c in part_cols)
             for row in tomb_keys.select(*part_cols).distinct().collect()
         }
-        search_snap = _dc_replace(snap, files=[
-            f
-            for f in snap.files
-            if tuple(
-                f.partition_values.get(
-                    phys.get(c, c), f.partition_values.get(c)
-                )
-                for c in part_cols
-            )
-            in src_parts
-        ])
+        search = [
+            f for f in search
+            if _partition_tuple(f, part_cols, phys) in src_parts
+        ]
     # DATA SKIPPING on the first merge key via the add actions' footer
     # stats: a file whose [min, max] range cannot contain any source key
     # is never opened during the touched-file search.  With the table
     # clustered on the key (range write or OPTIMIZE ZORDER), a narrow
-    # upsert scans a handful of files instead of the table.  Files
-    # without stats (or with a cross-type comparison) are never skipped.
-    key0 = keys[0]
+    # upsert scans a handful of files instead of the table.
     if key_bounds[0] is not None:
         # footer stats are keyed by the ON-DISK (physical) name, and the
         # JSON stats carry no type: a stat whose Python type differs
-        # from the key's (int vs float, str vs date) is never compared
-        k = phys.get(key0, key0)
+        # from the key's (int vs float, str vs date) decodes as unknown
+        k = phys.get(keys[0], keys[0])
         lo, hi = key_bounds
 
-        def _overlaps(f):
+        def stat_range(f):
             st = f.stats or {}
             fmin = (st.get("minValues") or {}).get(k)
             fmax = (st.get("maxValues") or {}).get(k)
             if fmin is not None and not (
                 isinstance(fmin, type(lo)) or isinstance(lo, type(fmin))
             ):
-                return True
-            return may_overlap(fmin, fmax, lo, hi)
+                return None, None
+            return fmin, fmax
 
-        search_snap = _dc_replace(
-            search_snap, files=[f for f in search_snap.files if _overlaps(f)]
-        )
-    # COW moves survivor rows to new files, so a row-tracked read also
-    # carries _row_id/_row_commit_version for materialization; the DV
-    # shape leaves survivors in place (ids stable for free).  Either
-    # way, UPDATED rows must keep their target row's id (PROTOCOL.md
-    # §Row Tracking — stable ids across DML), so the read carries ids
-    # whenever the table tracks rows.
-    target = _read_snapshot(
-        spark, search_snap, with_path=not dv, with_pos=dv,
-        with_row_ids=rt and bool(rt_id_col),
+        search = files_in_range(search, stat_range, lo, hi)
+    found = _search_touched(
+        spark, path, snap, dv,
+        lambda df: df.join(tomb_hint, keys, "left_semi"), search,
     )
-    touched_uris = {
-        r["__dl_path"]
-        for r in target.join(tomb_hint, keys, "left_semi")
-        .select("__dl_path")
-        .distinct()
-        .collect()
-    }
 
-    touched_rel = {_uri_to_rel(u, path) for u in touched_uris}
-    unknown = touched_rel - {a.path for a in snap.files}
-    if unknown:
-        raise DeltaLiteError(f"matched files not in snapshot: {sorted(unknown)}")
-    # Every later pass (id map, DV staging, survivor rewrite, CDC) only
-    # needs rows from the TOUCHED files — read exactly those through a
-    # subset snapshot instead of filtering the full-table plan on
-    # __dl_path, so the rewrite scan opens |touched| files, not |table|
-    # (guide §2.4/§6: the filter-on-metadata-column shape does not
-    # prune the file list).
+    def new_rows(rows, id_col):
+        # an UPDATED row keeps its target row's id; inserts stay null
+        # and mint fresh ids, and the row COMMIT version is left
+        # unmaterialized so it resolves to the new file's
+        # defaultRowCommitVersion (this commit modified the row)
+        if rows is None or id_col is None:
+            return source
+        return carry_row_ids(source, rows, keys, id_col, within=src_hint)
 
-    touched_target = (
-        _read_snapshot(
-            spark,
-            _dc_replace(snap, files=[f for f in snap.files
-                                     if f.path in touched_rel]),
-            with_path=not dv, with_pos=dv,
-            with_row_ids=rt and bool(rt_id_col),
-        )
-        if touched_rel
-        else None
-    )
-    # Row tracking: an UPDATED row keeps its id (stable across DML) —
-    # carry the matched target row's _row_id onto its source twin,
-    # materialized into the new files.  Inserts stay null and mint
-    # fresh ids from the new files' baseRowId blocks; the row COMMIT
-    # version is left unmaterialized for source rows so it resolves to
-    # the new file's defaultRowCommitVersion (the row was modified by
-    # this commit).  Duplicate-key targets map to their smallest id,
-    # matching this MERGE's one-replacement-per-key semantics.
-    src_aug = source.select(*schema_cols)
-    if rt and rt_id_col:
-        # matched rows live in touched files by definition, so the id
-        # map reads the touched subset only
-        id_src = touched_target if touched_target is not None else target
-        id_map = (
-            id_src.join(src_hint, keys, "left_semi")
-            .groupBy(*keys)
-            .agg(F.min("_row_id").alias(rt_id_col))
-        )
-        src_aug = src_aug.join(id_map, keys, "left")
-    descriptors = []
-    if dv:
-        # deletion-vector shape: matched rows tombstone into per-file
-        # DVs; only the SOURCE stages as new files — survivors stay in
-        # their untouched bytes behind the new descriptors
-        if touched_target is not None:
-            descriptors = _stage_dvs(
-                spark, path, snap,
-                touched_target
-                .join(tomb_hint, keys, "left_semi")
-                .select("__dl_path", "__dl_pos"),
+    def changes(rows):
+        # matched target rows are update_preimage, their source twins
+        # update_postimage, the rest of the source insert
+        if rows is None:
+            return source.withColumn("_change_type", F.lit("insert"))
+        matched_target = rows.join(src_hint, keys, "left_semi")
+        mk_hint = hint(matched_target.select(*keys).distinct())
+        out = (
+            matched_target.withColumn("_change_type", F.lit("update_preimage"))
+            .unionByName(
+                # one postimage PER MATCHED TARGET ROW (not per source
+                # row): when several target rows share a merge key,
+                # consumers expect pre/postimages to pair up 1:1, as
+                # real Delta emits (ADVICE r7)
+                matched_target.select(*keys)
+                .join(source, keys, "inner")
+                .withColumn("_change_type", F.lit("update_postimage"))
             )
-        new_data = src_aug
-    else:
-        survivors = (
-            touched_target
-            .drop("__dl_path")
-            .join(tomb_hint, keys, "left_anti")
-            if touched_target is not None
-            else None
-        )
-        if survivors is not None and rt and rt_id_col:
-            # carried-unmodified rows keep BOTH row-tracking fields,
-            # materialized into the rewritten files (PROTOCOL.md §Row
-            # Tracking); source rows (updates + inserts) mint fresh ids
-            # from the new files' baseRowId blocks
-            survivors = survivors.withColumnRenamed(
-                "_row_id", rt_id_col
-            ).withColumnRenamed("_row_commit_version", rt_cv_col)
-        new_data = (
-            survivors.unionByName(src_aug, allowMissingColumns=True)
-            if survivors is not None
-            else src_aug
-        )
-    adds = _stage_data_files(
-        _to_physical(new_data, phys, snap.schema),
-        path,
-        [phys.get(c, c) for c in part_cols],
-    )
-    cdc_actions = []
-    if _cdf_enabled(snap):
-        # Row-level change feed (PROTOCOL.md): matched target rows are
-        # update_preimage, their source twins update_postimage, the
-        # rest of the source insert.  Staged BEFORE the commit so the
-        # cdc actions land atomically with the data swap.
-        src = source.select(*schema_cols)
-        if touched_target is not None:
-            matched_target = (
-                touched_target
-                .drop("__dl_path", "__dl_pos",
-                      "_row_id", "_row_commit_version")
-                .join(src_hint, keys, "left_semi")
+            .unionByName(
+                source.join(mk_hint, keys, "left_anti")
+                .withColumn("_change_type", F.lit("insert"))
             )
-            matched_keys = matched_target.select(*keys).distinct()
-            mk_hint = hint(matched_keys)
-            changes = (
-                matched_target.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-                .unionByName(
-                    # one postimage PER MATCHED TARGET ROW (not per
-                    # source row): when several target rows share a
-                    # merge key, consumers expect pre/postimages to
-                    # pair up 1:1, as real Delta emits (ADVICE r7)
-                    matched_target.select(*keys)
-                    .join(src, keys, "inner")
-                    .withColumn("_change_type", F.lit("update_postimage"))
-                )
-                .unionByName(
-                    src.join(mk_hint, keys, "left_anti")
-                    .withColumn("_change_type", F.lit("insert"))
-                )
-            )
-            if delete_keys is not None:
-                # the delete clause's rows leave the table: one
-                # `delete` change per removed target row
-                changes = changes.unionByName(
-                    touched_target
-                    .drop("__dl_path", "__dl_pos",
-                          "_row_id", "_row_commit_version")
-                    .join(delete_keys.select(*keys).distinct(),
+        )
+        if delete_keys is not None:
+            # the delete clause's rows leave the table: one `delete`
+            # change per removed target row
+            out = out.unionByName(
+                rows.join(delete_keys.select(*keys).distinct(),
                           keys, "left_semi")
-                    .join(src_keys, keys, "left_anti")
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-        else:
-            changes = src.withColumn("_change_type", F.lit("insert"))
-        # one cdc file per TOUCHED data file, not per shuffle partition:
-        # change volume scales with the touched set, and each extra tiny
-        # cdc file costs a task in every downstream (streaming) reader
-        cdc_actions = [
-            {"cdc": c}
-            for c in _stage_cdc_files(
-                _to_physical(changes, phys, snap.schema).coalesce(
-                    max(1, len(touched_rel))
-                ),
-                path,
+                .join(src_keys, keys, "left_anti")
+                .withColumn("_change_type", F.lit("delete"))
             )
-        ]
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "MERGE",
-                "engine": "delta-lite",
-                "operationParameters": {
-                    "predicate": " AND ".join(keys),
-                    **({"deletionVectors": True} if dv else {}),
-                },
-                "operationMetrics": {
-                    "numTargetFilesAdded": str(len(adds)),
-                    "numTargetFilesRemoved": str(
-                        0 if dv else len(touched_rel)
-                    ),
-                    "numOutputRows": str(
-                        sum(
-                            int((a.stats or {}).get("numRecords", 0) or 0)
-                            for a in adds
-                        )
-                    ),
-                },
-            }
-        }
-    ]
-    if dv:
-        actions += _dv_readds(snap, path, descriptors)
-    else:
-        actions += [
-            {
-                "remove": {
-                    "path": quote(p, safe="/="),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-            for p in sorted(touched_rel)
-        ]
-    version = snap.version + 1
-    # fresh row-id blocks for the new files (must run BEFORE the add
-    # actions serialize); a lost race re-executes the whole merge, so
-    # the stale block is simply discarded with the staged files
-    rt_actions = _assign_row_ids(
-        snap.configuration, snap.domain_metadata, adds, version, path
+        return out
+
+    version = _rewrite(
+        spark, path, snap, dv, found, "MERGE", " AND ".join(keys),
+        keep=lambda rows: rows.join(tomb_hint, keys, "left_anti"),
+        new_rows=new_rows, changes=changes,
     )
-    actions += [_add_json(a) for a in adds] + rt_actions
-    actions += cdc_actions
-    _commit(
-        path, version, actions, snap.configuration,
-        staged=_staged(adds, cdc_actions, descriptors),
-    )
+    touched, _, descriptors = found
+    rewritten = 0 if dv else len(touched)
     return {
         "version": version,
-        "files_rewritten": 0 if dv else len(touched_rel),
-        "files_kept": len(snap.files) - (0 if dv else len(touched_rel)),
-        "files_scanned": len(search_snap.files),
+        "files_rewritten": rewritten,
+        "files_kept": len(snap.files) - rewritten,
+        "files_scanned": len(search),
         "dv_files": len(descriptors),
         "retries": attempt,
     }
@@ -3926,16 +3923,7 @@ def truncate_delta(spark: SparkSession, path: str) -> dict:
                 "engine": "delta-lite",
             }
         }
-    ] + [
-        {
-            "remove": {
-                "path": quote(a.path, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for a in snap.files
-    ]
+    ] + _removes([a.path for a in snap.files], now_ms)
     version = snap.version + 1
     _commit(path, version, actions, snap.configuration)
     return {"version": version, "files_removed": len(snap.files)}
@@ -4166,16 +4154,7 @@ def optimize(
             }
         }
     ]
-    actions += [
-        {
-            "remove": {
-                "path": quote(a.path, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-            }
-        }
-        for a in snap.files
-    ]
+    actions += _removes([a.path for a in snap.files], now_ms, False)
     for a in adds:
         a.data_change = False
     version = snap.version + 1
@@ -4302,16 +4281,7 @@ def reorg_purge(spark: SparkSession, path: str) -> dict:
             }
         }
     ]
-    actions += [
-        {
-            "remove": {
-                "path": quote(a.path, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-            }
-        }
-        for a in selected
-    ]
+    actions += _removes([a.path for a in selected], now_ms, False)
     for a in adds:
         a.data_change = False
     version = snap.version + 1
@@ -4334,55 +4304,32 @@ def _delete_partition_metadata_only(
     spark: SparkSession, path: str, snap: Snapshot, predicate: str
 ):
     """METADATA-ONLY partition delete (see :func:`delete_delta`): when
-    the predicate resolves against the partition columns alone, decide
-    per distinct partition TUPLE (O(partitions) driver-side Spark
-    eval, no data file opened) and drop matching files via pure remove
-    actions.  Returns None when the fast path does not apply (no
-    partition columns, predicate needs data columns, or CDF is on —
-    CDF commits must stage change rows, which requires reading)."""
-    part_cols = list(snap.partition_columns)
-    if not part_cols or _cdf_enabled(snap):
-        return None
+    the predicate names partition columns alone, decide per distinct
+    partition TUPLE (:func:`dml_core.partition_match`, no Spark job, no
+    data file opened) and drop matching files via pure remove actions.
+    Returns None when the fast path does not apply (no partition
+    columns, the predicate names a data column, or CDF is on — CDF
+    commits must stage change rows, which requires reading)."""
+    part_cols, phys = _mapping_of(snap)
+    phys = phys or {}
     field_by_name = {f.name: f for f in snap.schema.fields}
-    probe_schema = StructType(
-        [field_by_name[c] for c in part_cols if c in field_by_name]
-    )
-    if len(probe_schema.fields) != len(part_cols):
+    if (
+        not part_cols or _cdf_enabled(snap) or not snap.files
+        or not all(c in field_by_name for c in part_cols)
+    ):
         return None
-    tuples = sorted(
-        {
-            tuple(f.partition_values.get(c) for c in part_cols)
-            for f in snap.files
-        },
-        key=lambda t: tuple("" if v is None else str(v) for v in t),
+    matched = partition_match(
+        spark, predicate, [field_by_name[c] for c in part_cols],
+        list(field_by_name),
+        [_partition_tuple(f, part_cols, phys) for f in snap.files],
     )
-    if not tuples:
+    if matched is None:
         return None
-    rows = [(i, *t) for i, t in enumerate(tuples)]
-    raw = meta_df(
-        spark,
-        rows,
-        StructType(
-            [StructField("__pt_idx", LongType(), False)]
-            + [StructField(c, StringType(), True) for c in part_cols]
-        ),
-    )
-    typed = raw.select(
-        "__pt_idx",
-        *[
-            F.col(c).cast(field_by_name[c].dataType).alias(c)
-            for c in part_cols
-        ],
-    )
-    try:
-        matched = {
-            r["__pt_idx"] for r in typed.where(F.expr(predicate)).collect()
-        }
-    except Exception:
-        # the predicate references data columns (or fails analysis on
-        # the partition-only schema) — not partition-aligned
-        return None
-    if not matched:
+    removed = [
+        f for f in snap.files
+        if _partition_tuple(f, part_cols, phys) in matched
+    ]
+    if not removed:
         return {
             "version": snap.version,
             "rows_deleted": 0,
@@ -4390,32 +4337,19 @@ def _delete_partition_metadata_only(
             "files_kept": len(snap.files),
             "metadata_only": True,
         }
-    matched_tuples = {tuples[i] for i in matched}
-    removed = [
-        f
-        for f in snap.files
-        if tuple(f.partition_values.get(c) for c in part_cols)
-        in matched_tuples
-    ]
+    # stats numRecords is the FILE's row count; rows already masked by a
+    # deletion vector were never live, so subtract its cardinality
+    # (ADVICE r9 — data is unaffected either way, whole files drop, but
+    # rows_deleted must report LIVE rows)
     counts = [(f.stats or {}).get("numRecords") for f in removed]
-    if all(c is not None for c in counts):
-        # stats numRecords is the FILE's row count; rows already masked
-        # by a deletion vector were never live, so subtract its
-        # cardinality (ADVICE r9 — data is unaffected either way, whole
-        # files drop, but rows_deleted must report LIVE rows)
-        n_deleted = int(sum(counts)) - sum(
-            int((f.deletion_vector or {}).get("cardinality") or 0)
-            for f in removed
-        )
-    else:
-        base = spark.read.parquet(
+    if any(c is None for c in counts):
+        counts = [spark.read.parquet(
             *[os.path.join(path, f.path) for f in removed]
-        ).count()
-        n_deleted = int(base) - sum(
-            int((f.deletion_vector or {}).get("cardinality") or 0)
-            for f in removed
-        )
-    now_ms = int(time.time() * 1000)
+        ).count()]
+    n_deleted = int(sum(counts)) - sum(
+        int((f.deletion_vector or {}).get("cardinality") or 0)
+        for f in removed
+    )
     actions = [
         {
             "commitInfo": {
@@ -4427,16 +4361,7 @@ def _delete_partition_metadata_only(
                 },
             }
         }
-    ] + [
-        {
-            "remove": {
-                "path": quote(f.path, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for f in removed
-    ]
+    ] + _removes([f.path for f in removed], int(time.time() * 1000))
     version = snap.version + 1
     _commit(path, version, actions, snap.configuration)
     return {
@@ -4474,6 +4399,7 @@ def delete_delta(
       descriptor.  Write amplification is O(|deleted rows|) instead of
       O(|touched bytes|) — the modern engine default for point deletes
       on wide tables; the debt is read-side until OPTIMIZE rewrites.
+      Returns additionally ``dv_files``.
 
     A predicate referencing ONLY partition columns takes the
     METADATA-ONLY fast path first: the predicate is evaluated against
@@ -4488,110 +4414,26 @@ def delete_delta(
     meta_result = _delete_partition_metadata_only(spark, path, snap, predicate)
     if meta_result is not None:
         return meta_result
-    if _dv_mode(snap, use_deletion_vectors):
-        return _delete_with_dvs(spark, path, snap, predicate)
-    rt = _row_tracking_on(snap.configuration)
-    rt_id_col, rt_cv_col = _rt_col_names(snap.configuration)
-    rt = rt and bool(rt_id_col)
-    # probe pass: __dl_path only — row-tracking ids are attached on the
-    # touched-files rewrite read, not here (no broadcast map join in
-    # the probe plan)
-    target = _read_snapshot(spark, snap, with_path=True)
+    dv = _dv_mode(snap, use_deletion_vectors)
     cond = F.expr(predicate)
-    # ONE pass finds the touched files AND the matched-row count
-    # (previously a distinct-collect plus a separate count re-scanned
-    # the table twice — guide §1.2: remove unnecessary passes).
-    per_file = (
-        target.where(cond).groupBy("__dl_path").count().collect()
-    )
-    touched_uris = {r["__dl_path"] for r in per_file}
-    n_deleted = sum(r["count"] for r in per_file)
-    if not touched_uris:
-        return {
-            "version": snap.version,
-            "rows_deleted": 0,
-            "files_rewritten": 0,
-            "files_kept": len(snap.files),
-        }
-
-    touched_rel = {_uri_to_rel(u, path) for u in touched_uris}
-    # rewrite reads ONLY the touched files via a subset snapshot (the
-    # __dl_path filter shape scans every file of the table)
-
-    touched_df = _read_snapshot(
-        spark,
-        _dc_replace(snap, files=[f for f in snap.files
-                                 if f.path in touched_rel]),
-        with_path=True, with_row_ids=rt,
-    )
-    survivors = touched_df.where(~cond | cond.isNull()).drop("__dl_path")
-    if rt:
-        # COW delete MOVES the surviving rows: both row-tracking fields
-        # ride into the rewritten files materialized
-        survivors = survivors.withColumnRenamed(
-            "_row_id", rt_id_col
-        ).withColumnRenamed("_row_commit_version", rt_cv_col)
-    del_parts, del_phys = _mapping_of(snap)
-    adds = _stage_data_files(
-        _to_physical(survivors, del_phys, snap.schema),
-        path,
-        [
-            (del_phys or {}).get(c, c) for c in del_parts
-        ],
-    )
-    cdc_actions = []
-    if _cdf_enabled(snap):
-        deleted_rows = (
-            touched_df.where(cond)
-            .drop("__dl_path", "_row_id", "_row_commit_version")
-            .withColumn("_change_type", F.lit("delete"))
+    found = _search_touched(spark, path, snap, dv, lambda df: df.where(cond))
+    touched, n_deleted, _ = found
+    version = snap.version
+    if touched:
+        version = _rewrite(
+            spark, path, snap, dv, found, "DELETE", predicate,
+            keep=lambda rows: rows.where(~cond | cond.isNull()),
+            changes=lambda rows: rows.where(cond).withColumn(
+                "_change_type", F.lit("delete")
+            ),
         )
-        cdc_actions = [
-            {"cdc": c}
-            for c in _stage_cdc_files(
-                _to_physical(deleted_rows, del_phys, snap.schema).coalesce(
-                    max(1, len(touched_rel))
-                ),
-                path,
-            )
-        ]
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "DELETE",
-                "engine": "delta-lite",
-                "operationParameters": {"predicate": predicate},
-            }
-        }
-    ]
-    actions += [
-        {
-            "remove": {
-                "path": quote(p, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for p in sorted(touched_rel)
-    ]
-    version = snap.version + 1
-    # stamp row-id blocks BEFORE the add actions serialize (the helper
-    # mutates the AddFiles)
-    rt_actions = _assign_row_ids(
-        snap.configuration, snap.domain_metadata, adds, version, path
-    )
-    actions += [_add_json(a) for a in adds] + rt_actions
-    actions += cdc_actions
-    _commit(
-        path, version, actions, snap.configuration,
-        staged=_staged(adds, cdc_actions),
-    )
+    rewritten = 0 if dv else len(touched)
     return {
         "version": version,
         "rows_deleted": n_deleted,
-        "files_rewritten": len(touched_rel),
-        "files_kept": len(snap.files) - len(touched_rel),
+        "files_rewritten": rewritten,
+        "files_kept": len(snap.files) - rewritten,
+        **({"dv_files": len(touched)} if dv else {}),
     }
 
 
@@ -4621,9 +4463,6 @@ def update_delta(
     snap = snapshot(path)
     _guard_writable(snap, operation="UPDATE")
     dv = _dv_mode(snap, use_deletion_vectors)
-    rt = _row_tracking_on(snap.configuration)
-    rt_id_col, rt_cv_col = _rt_col_names(snap.configuration)
-    rt = rt and bool(rt_id_col)
     if not set_exprs:
         raise DeltaLiteError("UPDATE needs at least one SET column")
     field_type = {f.name: f.dataType for f in snap.schema.fields}
@@ -4642,142 +4481,59 @@ def update_delta(
         )
     if set(set_exprs) & set(_identity_meta(snap.schema)):
         raise DeltaLiteError("identity columns are not settable")
-    # the PROBE pass needs only __dl_path (+ DV filtering) to find
-    # touched files and matched counts — row-tracking ids are attached
-    # only on the touched-files rewrite read below, so the probe plan
-    # carries no broadcast row-id map join
-    target = _read_snapshot(
-        spark, snap, with_path=not dv, with_pos=dv
-    )
     cond = F.expr(predicate)
-    # ONE pass finds the touched files AND the matched-row count
-    # (previously distinct-collect + count = two full scans)
-    per_file = (
-        target.where(cond).groupBy("__dl_path").count().collect()
-    )
-    touched_uris = {r["__dl_path"] for r in per_file}
-    n_updated = sum(r["count"] for r in per_file)
-    if not touched_uris:
+    found = _search_touched(spark, path, snap, dv, lambda df: df.where(cond))
+    touched, n_updated, descriptors = found
+    if not touched:
         return {
             "version": snap.version,
             "rows_updated": 0,
             "files_rewritten": 0,
             "files_kept": len(snap.files),
         }
-    touched_rel = {_uri_to_rel(u, path) for u in touched_uris}
-    # every later pass reads ONLY the touched files via a subset
-    # snapshot (matched rows live there by definition)
-
-    touched_target = _read_snapshot(
-        spark,
-        _dc_replace(snap, files=[f for f in snap.files
-                                 if f.path in touched_rel]),
-        with_path=not dv, with_pos=dv, with_row_ids=rt,
-    )
-    descriptors = []
-    if dv:
-        descriptors = _stage_dvs(
-            spark, path, snap,
-            touched_target.where(cond).select("__dl_path", "__dl_pos"),
-        )
-    touched_df = touched_target.drop("__dl_path", "__dl_pos")
-    matched = touched_df.where(cond)
     order = [f.name for f in snap.schema.fields]
-    updated = matched.select(
-        *[
-            F.expr(set_exprs[c]).cast(field_type[c]).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in order
-        ],
-        *([F.col("_row_id").alias(rt_id_col)] if rt else []),
-    )
-    if gen_names:
-        updated = _apply_generated(
-            updated.drop(*sorted(gen_names)), snap.schema
-        ).select(*order, *([rt_id_col] if rt else []))
-    _enforce_constraints(updated, snap.configuration)
-    if dv:
-        # only the transformed rows stage; survivors stay in their
-        # untouched bytes behind the new DV descriptors
-        new_data = updated
-    else:
-        survivors = touched_df.where(~cond | cond.isNull())
-        if rt:
-            # carried-unmodified rows keep BOTH row-tracking fields
-            survivors = survivors.withColumnRenamed(
-                "_row_id", rt_id_col
-            ).withColumnRenamed("_row_commit_version", rt_cv_col)
-        new_data = survivors.unionByName(updated, allowMissingColumns=True)
-    up_parts, up_phys = _mapping_of(snap)
-    adds = _stage_data_files(
-        _to_physical(new_data, up_phys, snap.schema),
-        path,
-        [(up_phys or {}).get(c, c) for c in up_parts],
-    )
-    cdc_actions = []
-    if _cdf_enabled(snap):
-        changes = matched.drop(
-            "_row_id", "_row_commit_version"
-        ).withColumn(
+
+    def updated(rows, id_col=None):
+        # the moved row keeps its id, materialized in ``id_col``
+        extra = [id_col] if id_col else []
+        out = rows.where(cond).select(
+            *[
+                F.expr(set_exprs[c]).cast(field_type[c]).alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in order
+            ],
+            *[F.col("_row_id").alias(c) for c in extra],
+        )
+        if gen_names:
+            out = _apply_generated(
+                out.drop(*sorted(gen_names)), snap.schema
+            ).select(*order, *extra)
+        return out
+
+    def new_rows(rows, id_col):
+        out = updated(rows, id_col)
+        _enforce_constraints(out, snap.configuration)
+        return out
+
+    version = _rewrite(
+        spark, path, snap, dv, found, "UPDATE", predicate,
+        keep=lambda rows: rows.where(~cond | cond.isNull()),
+        new_rows=new_rows,
+        changes=lambda rows: rows.where(cond).withColumn(
             "_change_type", F.lit("update_preimage")
         ).unionByName(
-            updated.drop(*([rt_id_col] if rt else [])).withColumn(
+            updated(rows).withColumn(
                 "_change_type", F.lit("update_postimage")
             )
-        )
-        cdc_actions = [
-            {"cdc": c}
-            for c in _stage_cdc_files(
-                _to_physical(changes, up_phys, snap.schema).coalesce(
-                    max(1, len(touched_rel))
-                ),
-                path,
-            )
-        ]
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "UPDATE",
-                "engine": "delta-lite",
-                "operationParameters": {
-                    "predicate": predicate,
-                    **({"deletionVectors": True} if dv else {}),
-                },
-            }
-        }
-    ]
-    if dv:
-        actions += _dv_readds(snap, path, descriptors)
-    else:
-        actions += [
-            {
-                "remove": {
-                    "path": quote(p, safe="/="),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-            for p in sorted(touched_rel)
-        ]
-    version = snap.version + 1
-    # stamp row-id blocks BEFORE the add actions serialize (the helper
-    # mutates the AddFiles)
-    rt_actions = _assign_row_ids(
-        snap.configuration, snap.domain_metadata, adds, version, path
+        ),
     )
-    actions += [_add_json(a) for a in adds] + rt_actions
-    actions += cdc_actions
-    _commit(
-        path, version, actions, snap.configuration,
-        staged=_staged(adds, cdc_actions, descriptors),
-    )
+    rewritten = 0 if dv else len(touched)
     return {
         "version": version,
         "rows_updated": n_updated,
-        "files_rewritten": 0 if dv else len(touched_rel),
-        "files_kept": len(snap.files) - (0 if dv else len(touched_rel)),
+        "files_rewritten": rewritten,
+        "files_kept": len(snap.files) - rewritten,
         "dv_files": len(descriptors),
     }
 
@@ -4792,8 +4548,9 @@ def _stage_dvs(
     encoded + written EXECUTOR-side (one ``applyInPandas`` group per
     file; the bitmap never transits the driver).  Returns the collected
     descriptor rows ``[{uri, dv_path (z85 uuid), size, cardinality,
-    new_rows}]`` — O(touched files) driver state.  Shared by the DV
-    shapes of DELETE, MERGE, and UPDATE; nothing is committed here
+    new_rows}]`` — O(touched files) driver state.  It is the touched-
+    file search of the DV shapes (:func:`_search_touched`); nothing is
+    committed here
     (a lost :func:`_commit` discards the sidecars, see :func:`_staged`)."""
     # O(files) driver state: existing DV descriptor JSON per scan URI
     old_dv_by_uri = {}
@@ -4871,15 +4628,7 @@ def _dv_readds(snap: Snapshot, path: str, descriptors: list) -> list:
     for rel in sorted(by_rel):
         r = by_rel[rel]
         add = next(a for a in snap.files if a.path == rel)
-        actions.append(
-            {
-                "remove": {
-                    "path": quote(rel, safe="/="),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-        )
+        actions += _removes([rel], now_ms)
         actions.append(
             _add_json(
                 _dc_replace(
@@ -4895,80 +4644,6 @@ def _dv_readds(snap: Snapshot, path: str, descriptors: list) -> list:
             )
         )
     return actions
-
-
-def _delete_with_dvs(
-    spark: SparkSession, path: str, snap: Snapshot, predicate: str
-) -> dict:
-    """Deletion-vector DELETE (see :func:`delete_delta`): the matching
-    physical row indexes of each touched file merge into its DV
-    (:func:`_stage_dvs`); the commit re-adds each touched file with its
-    new descriptor.  Returns {"version", "rows_deleted",
-    "files_rewritten" (always 0), "files_kept", "dv_files"}."""
-    target = _read_snapshot(spark, snap, with_pos=True)
-    cond = F.expr(predicate)
-    matched = target.where(cond).select("__dl_path", "__dl_pos")
-    descriptors = _stage_dvs(spark, path, snap, matched)
-    if not descriptors:
-        return {
-            "version": snap.version,
-            "rows_deleted": 0,
-            "files_rewritten": 0,
-            "files_kept": len(snap.files),
-            "dv_files": 0,
-        }
-    by_rel = {}
-    rows_deleted = 0
-    for r in descriptors:
-        rel = _uri_to_rel(r["uri"], path)
-        by_rel[rel] = r
-        old_card = 0
-        add = next(a for a in snap.files if a.path == rel)
-        if add.deletion_vector is not None:
-            old_card = int(add.deletion_vector.get("cardinality") or 0)
-        rows_deleted += int(r["cardinality"]) - old_card
-    cdc_actions = []
-    if _cdf_enabled(snap):
-        deleted_rows = (
-            target.where(cond)
-            .drop("__dl_path", "__dl_pos")
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        _, dv_phys = _mapping_of(snap)
-        cdc_actions = [
-            {"cdc": c}
-            for c in _stage_cdc_files(
-                _to_physical(deleted_rows, dv_phys, snap.schema).coalesce(
-                    max(1, len(by_rel))
-                ),
-                path,
-            )
-        ]
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "DELETE",
-                "engine": "delta-lite",
-                "operationParameters": {
-                    "predicate": predicate, "deletionVectors": True,
-                },
-            }
-        }
-    ]
-    actions += _dv_readds(snap, path, descriptors)
-    actions += cdc_actions
-    version = snap.version + 1
-    _commit(
-        path, version, actions, snap.configuration,
-        staged=_staged((), cdc_actions, descriptors),
-    )
-    return {
-        "version": version,
-        "rows_deleted": rows_deleted,
-        "files_rewritten": 0,
-        "files_kept": len(snap.files),
-        "dv_files": len(by_rel),
-    }
 
 
 # ------------------------------------------------------- change data feed
@@ -5688,16 +5363,7 @@ def restore(path: str, version: int) -> dict:
             }
         },
     ]
-    actions += [
-        {
-            "remove": {
-                "path": quote(p, safe="/="),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for p in sorted(cur_paths - set(tgt_by_path))
-    ]
+    actions += _removes(sorted(cur_paths - set(tgt_by_path)), now_ms)
     actions += [
         _add_json(tgt_by_path[p]) for p in sorted(set(tgt_by_path) - cur_paths)
     ]

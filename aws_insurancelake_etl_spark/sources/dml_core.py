@@ -25,8 +25,13 @@ format's conflict error, which :func:`retry_on_conflict` re-executes.
   join hint, shared by every attempt's key joins;
 - :func:`retry_on_conflict`: the optimistic-concurrency attempt loop,
   and :func:`discard_files` for what a lost attempt staged;
-- :func:`may_overlap`: the file-statistics range test behind file
-  skipping;
+- :func:`may_overlap` / :func:`files_in_range`: the file-statistics
+  range test and the first-key file skip of the touched-file search,
+  over each format's decoded per-file ``(min, max)``;
+- :func:`partition_match`: the partition-only predicate test of the
+  partition clear, decided by the predicate's column references
+  (:func:`predicate_columns`) and one local-relation filter;
+- :func:`carry_row_ids`: an updated row keeps its target row's id;
 - :func:`meta_df` / :func:`broadcast_meta` / :func:`lit_lookup`:
   driver-side rows (O(files) metadata, lookup side tables) as a JVM
   local relation, its one-task broadcast, or a literal map
@@ -36,6 +41,7 @@ format's conflict error, which :func:`retry_on_conflict` re-executes.
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -43,7 +49,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 #: largest metadata map embedded in the plan as a literal; bigger maps
 #: fall back to a broadcast-join DataFrame (plan size stays bounded)
@@ -126,6 +132,90 @@ def may_overlap(fmin, fmax, lo, hi) -> bool:
         )
     except TypeError:
         return True
+
+
+def files_in_range(files, file_range, lo, hi) -> list:
+    """The first-key file skip of both formats' touched-file search:
+    the ``files`` whose statistics ``file_range(f) -> (min, max)`` may
+    hold a key in ``[lo, hi]`` (:func:`may_overlap`).  Each format
+    decodes its own statistics (Delta's footer-stats JSON, Iceberg's
+    manifest bounds) and answers ``(None, None)`` for a file whose
+    statistics are missing or do not decode, which never drops."""
+    return [f for f in files if may_overlap(*file_range(f), lo, hi)]
+
+
+#: a SQL string literal (either quote, backslash escapes), then an
+#: identifier, bare or backticked
+_SQL_STRING = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"")
+_SQL_IDENT = re.compile(r"`([^`]+)`|\b([A-Za-z_][A-Za-z0-9_]*)\b")
+
+
+def predicate_columns(predicate: str) -> set:
+    """Every identifier a SQL predicate names outside its string
+    literals, lower-cased (Spark resolves columns case-insensitively):
+    a superset of the columns it references, since function names and
+    keywords count too."""
+    return {
+        (quoted or bare).lower()
+        for quoted, bare in _SQL_IDENT.findall(_SQL_STRING.sub("", predicate))
+    }
+
+
+def partition_match(spark: SparkSession, predicate: str, part_fields,
+                    columns, tuples):
+    """The partition-only predicate test of both formats' partition
+    clear.  ``tuples`` are the files' partition tuples (raw values, one
+    per ``part_fields`` StructField); ``columns`` names every table
+    column.  Returns the set of tuples the predicate holds for, or None
+    when the predicate names a table column that is not a partition
+    column: only a row-level DELETE can decide it then, and the caller
+    takes that path without asking Spark to analyse the predicate
+    against the partition columns alone.
+
+    The distinct tuples, cast to their columns' types, are one
+    :func:`meta_df` relation filtered by the predicate: Spark's own
+    evaluation, and no Spark job."""
+    names = [f.name for f in part_fields]
+    data_cols = {c.lower() for c in columns} - {n.lower() for n in names}
+    if predicate_columns(predicate) & data_cols:
+        return None
+    distinct = sorted(
+        set(tuples),
+        key=lambda t: tuple("" if v is None else str(v) for v in t),
+    )
+    raw = meta_df(
+        spark,
+        [(i, *t) for i, t in enumerate(distinct)],
+        StructType(
+            [StructField("__pt_idx", LongType(), False)]
+            + [StructField(n, StringType(), True) for n in names]
+        ),
+    )
+    typed = raw.select(
+        "__pt_idx",
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in part_fields],
+    )
+    return {
+        distinct[r["__pt_idx"]]
+        for r in typed.where(F.expr(predicate)).collect()
+    }
+
+
+def carry_row_ids(source: DataFrame, matched: DataFrame, keys: list,
+                  out_col: str, within: DataFrame | None = None) -> DataFrame:
+    """An UPDATED row keeps its target row's id (Delta §Row Tracking,
+    Iceberg v3 §Row Lineage): ``source`` with the smallest ``_row_id``
+    of its key's ``matched`` target rows joined on as ``out_col``,
+    materialized into the new files.  Inserts match nothing and read
+    null, so they mint fresh ids from their new files; duplicate-key
+    targets map to their smallest id, the MERGE's one-replacement-per-
+    key rule.  ``within`` (a key set) first restricts ``matched`` to
+    its keys: the source's, when ``matched`` also holds rows the delete
+    clause removes."""
+    if within is not None:
+        matched = matched.join(within, keys, "left_semi")
+    ids = matched.groupBy(*keys).agg(F.min("_row_id").alias(out_col))
+    return source.join(ids, keys, "left")
 
 
 @contextmanager

@@ -65,8 +65,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_lite
 from .dml_core import (
-    LIT_MAP_MAX, broadcast_meta, discard_files, lit_lookup, may_overlap,
-    merge_prologue, meta_df, retry_on_conflict,
+    LIT_MAP_MAX, broadcast_meta, carry_row_ids, discard_files,
+    files_in_range, lit_lookup, may_overlap, merge_prologue, meta_df,
+    partition_match, retry_on_conflict,
 )
 from .iceberg_transforms import (
     PartitionField,
@@ -396,6 +397,8 @@ class DataFileEntry:
     #: from the manifest list's ``first_row_id`` (spec §Row Lineage);
     #: None on v1/v2 tables and on files predating a v3 upgrade
     first_row_id: int | None = None
+    #: the partition spec the file was written under
+    spec_id: int = 0
 
 
 # ---- Appendix D single-value (de)serialization for bounds maps.  Only
@@ -648,11 +651,10 @@ def plan_scan(
     inapplicable delete row simply fails the anti-join match).
 
     ``bounds_filter`` ({col: (lo, hi)}, either end None for open):
-    additionally prunes data files whose manifest ``lower_bounds`` /
-    ``upper_bounds`` (spec Appendix D single-value bytes, keyed by
-    field id) prove the range cannot match — Iceberg's manifest-level
-    VALUE pruning, the second half of what makes a 100 TB scan plan
-    O(matching files).  Files without bounds are never pruned."""
+    additionally prunes data files the ranges provably miss
+    (:func:`_in_bounds`) — Iceberg's manifest-level VALUE pruning, the
+    second half of what makes a 100 TB scan plan O(matching files).
+    Files without bounds are never pruned."""
     meta = _load_metadata(table_path)
     if int(meta.get("format-version", 1)) not in (1, 2, 3):
         raise IcebergLiteError(
@@ -714,8 +716,8 @@ def plan_scan(
 
     _spec_plans: dict = {}
 
-    def spec_plan(spec_id: int) -> tuple[list, list]:
-        """(part_checks, part_ranges) for one spec id, cached."""
+    def spec_plan(spec_id: int) -> list:
+        """part_checks for one spec id, cached."""
         if spec_id in _spec_plans:
             return _spec_plans[spec_id]
         spec_fields = _partition_spec_fields(meta, spec_id)
@@ -739,24 +741,12 @@ def plan_scan(
                             ),
                         )
                     )
-        # bounds_filter ranges additionally prune on the PARTITION TUPLE
-        # for order-preserving transforms (day/month/year/hour/truncate/
-        # identity); bucket prunes on exact points only.  This is the
-        # manifest-level partition pruning a day-partitioned 100 TB
-        # table lives by: a time-range query opens only matching days.
-        part_ranges: list = []  # (field_name, lo, hi) transformed
-        for col, (lo, hi) in (bounds_filter or {}).items():
-            for f in by_source.get(col, []):
-                rng = transform_range(f.transform, lo, hi)
-                if rng is not None:
-                    part_ranges.append((f.name, rng[0], rng[1]))
-        _spec_plans[spec_id] = (part_checks, part_ranges)
-        return _spec_plans[spec_id]
+        _spec_plans[spec_id] = part_checks
+        return part_checks
 
     for mf in _read_manifest_rows(manifest_list):
-        part_checks, part_ranges = spec_plan(
-            int(mf.get("partition_spec_id") or 0)
-        )
+        spec_id = int(mf.get("partition_spec_id") or 0)
+        part_checks = spec_plan(spec_id)
         # v2 manifest-list rows carry the manifest's sequence number;
         # ADDED entries with a null sequence_number inherit it (spec
         # §Sequence Number Inheritance).  v1 / doctored fixtures without
@@ -849,22 +839,6 @@ def plan_scan(
                 for k, v in part_checks
             ):
                 continue
-            if part_ranges:
-                pruned = False
-                for name, plo, phi in part_ranges:
-                    pv = _coerce_partition_value(partition.get(name))
-                    if pv is None:
-                        continue  # no stored value: never prune
-                    try:
-                        if (phi is not None and pv > phi) or (
-                            plo is not None and pv < plo
-                        ):
-                            pruned = True
-                            break
-                    except TypeError:
-                        continue
-                if pruned:
-                    continue
             data.append(
                 DataFileEntry(
                     path=rebase(df["file_path"]),
@@ -875,38 +849,68 @@ def plan_scan(
                     lower_bounds=_bounds_map(df.get("lower_bounds")),
                     upper_bounds=_bounds_map(df.get("upper_bounds")),
                     first_row_id=fri,
+                    spec_id=spec_id,
                 )
             )
     if bounds_filter:
-        try:
-            ids_by_name = {
-                v: k for k, v in _field_names_by_id(meta).items()
-            }
-        except IcebergLiteError:
-            ids_by_name = {}
-        types_by_id = _field_types_by_id(meta)
-
-        def survives(entry: DataFileEntry) -> bool:
-            for col, (lo, hi) in bounds_filter.items():
-                fid = ids_by_name.get(col)
-                ice_type = types_by_id.get(fid)
-                if fid is None or ice_type is None:
-                    continue
-                flo = _single_value_decode(
-                    (entry.lower_bounds or {}).get(fid), ice_type
-                )
-                fhi = _single_value_decode(
-                    (entry.upper_bounds or {}).get(fid), ice_type
-                )
-                if not may_overlap(flo, fhi, lo, hi):
-                    return False
-            return True
-
-        data = [e for e in data if survives(e)]
+        data = _in_bounds(meta, data, bounds_filter)
     return (
         sorted(data, key=lambda e: e.path),
         sorted(deletes, key=lambda e: e.path),
     )
+
+
+def _in_bounds(meta: dict, files: list, bounds_filter: dict) -> list:
+    """The planned data ``files`` that may hold a row inside every
+    ``bounds_filter`` range ({col: (lo, hi)}, either end None for
+    open).  A file drops when the ranges provably miss:
+
+    - its PARTITION value under its own spec, for each field whose
+      source is a bounded column and whose transform preserves order
+      (day/month/year/hour/truncate/identity; bucket on exact points
+      only) — the manifest-level partition pruning a day-partitioned
+      100 TB table lives by: a time-range query opens only matching
+      days;
+    - its manifest ``lower_bounds`` / ``upper_bounds`` on the column
+      (spec Appendix D single-value bytes, keyed by field id), through
+      :func:`dml_core.files_in_range`.
+
+    Missing or undecodable values never drop a file."""
+    try:
+        ids_by_name = {v: k for k, v in _field_names_by_id(meta).items()}
+    except IcebergLiteError:
+        ids_by_name = {}
+    types_by_id = _field_types_by_id(meta)
+    for col, (lo, hi) in bounds_filter.items():
+        ranges: dict = {}  # spec id -> [(field name, lo, hi) transformed]
+        for e in files:
+            if e.spec_id not in ranges:
+                ranges[e.spec_id] = [
+                    (f.name, *rng)
+                    for f in _partition_spec_fields(meta, e.spec_id)
+                    if f.source == col
+                    and (rng := transform_range(f.transform, lo, hi))
+                ]
+        files = [
+            e for e in files
+            if all(
+                may_overlap(pv, pv, plo, phi)
+                for name, plo, phi in ranges[e.spec_id]
+                for pv in [_coerce_partition_value(e.partition.get(name))]
+            )
+        ]
+        fid = ids_by_name.get(col)
+        ice_type = types_by_id.get(fid)
+        if fid is not None and ice_type is not None:
+            files = files_in_range(
+                files,
+                lambda e: tuple(
+                    _single_value_decode((b or {}).get(fid), ice_type)
+                    for b in (e.lower_bounds, e.upper_bounds)
+                ),
+                lo, hi,
+            )
+    return files
 
 
 def _resolve_ref(meta: dict, snapshot_id):
@@ -5192,19 +5196,19 @@ def _merge_once_iceberg(
     part_cols = _partition_spec_fields(meta)
     files, _deletes = plan_scan(table_path)
     # MANIFEST-BOUNDS SKIPPING for the touched-file search: a data file
-    # whose [lower, upper] range on the first merge key cannot contain
-    # any source key is never opened — the Iceberg twin of delta_lite's
-    # footer-stats skipping (finding 42).  With the table clustered on
+    # whose partition value or [lower, upper] range on the first merge
+    # key cannot contain any source key is never opened — the Iceberg
+    # twin of delta_lite's footer-stats skipping (finding 42), decided
+    # on the files this attempt planned.  With the table clustered on
     # the key, a narrow upsert scans a handful of files, not the table.
     # Pruned files cannot contain matches, so skipping them never
     # changes the delete set.
     search_files = files
     bounds = None
-    if files and key_bounds[0] is not None:
-        bounds = {keys[0]: key_bounds}
-        search_files = plan_scan(table_path, bounds_filter=bounds)[0]
-        if len(search_files) == len(files):
-            bounds = None
+    if key_bounds[0] is not None:
+        search_files = _in_bounds(meta, files, {keys[0]: key_bounds})
+        if len(search_files) < len(files):
+            bounds = {keys[0]: key_bounds}
     if not search_files:
         # nothing can match, so the MERGE degenerates to a pure append.
         # An empty table takes the source as it is.  When NO live
@@ -5266,25 +5270,15 @@ def _merge_once_iceberg(
         spark, table_path, matched_tomb, fv, files, _deletes, search_files
     )
     if fv >= 3:
-        # spec §Row Lineage: an UPDATED row keeps its _row_id — carry
-        # the matched target row's id onto its source twin,
-        # MATERIALIZED into the new file (nulls on pure inserts resolve
-        # positionally, minting fresh ids; duplicate-key targets map to
-        # their smallest id, matching this MERGE's one-replacement-
-        # per-key semantics).  _last_updated_sequence_number stays
-        # absent so it inherits the new commit's sequence number.
-        id_map = (
-            # restrict to SOURCE-matched rows: matched_tomb may also
-            # hold delete_keys-matched rows, which get no replacement
-            (
-                matched_tomb
-                if delete_keys is None
-                else matched_tomb.join(src_keys, keys, "left_semi")
-            )
-            .groupBy(*keys)
-            .agg(F.min("_row_id").alias("_row_id"))
+        # spec §Row Lineage: an UPDATED row keeps its _row_id (nulls on
+        # pure inserts resolve positionally, minting fresh ids);
+        # _last_updated_sequence_number stays absent so it inherits the
+        # new commit's sequence number.  Only SOURCE-matched rows carry:
+        # matched_tomb also holds the delete clause's rows.
+        source = carry_row_ids(
+            source, matched_tomb, keys, "_row_id",
+            within=None if delete_keys is None else src_keys,
         )
-        source = source.join(id_map, keys, "left")
     data_entries = _stage_iceberg_data(source, table_path, part_cols)
     snap_id = _commit_or_discard(
         table_path, part_cols, data_entries, delete_entries,
@@ -6197,124 +6191,61 @@ def delete_iceberg(
         if parse_transform(f.transform)[0] == "identity"
     ]
     table_schema = _spark_schema_from_meta(meta)
-    fast = (
+    matched = None
+    if (
         identity_sources
         and table_schema is not None
+        and all(c in table_schema.names for c in identity_sources)
         and all(
             all(c in f.partition for c in identity_sources) for f in files
         )
-    )
-    if fast:
-        # Pre-check the predicate's column references driver-side: the
-        # fast path is only sound when every TABLE column it names is an
-        # identity partition source.  A regex identifier scan (backtick
-        # or bare) is conservative — a function name colliding with a
-        # data column merely skips to the MOR path — and avoids letting
-        # ``.where()`` throw AnalysisException, which Spark logs as a
-        # ~100-line ERROR stack per call (judge r9 "what's wrong" #1).
-        import re as _re
-
-        refs = {
-            g1 or g2
-            for g1, g2 in _re.findall(
-                r"`([^`]+)`|\b([A-Za-z_][A-Za-z0-9_]*)\b", predicate
-            )
-        }
-        non_part_cols = {
-            f.name for f in table_schema.fields
-        } - set(identity_sources)
-        if refs & non_part_cols:
-            fast = False
-    if fast:
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
+    ):
+        # decided by the predicate's column references, never by a
+        # failed analysis (Spark logs a ~100-line ERROR stack per
+        # AnalysisException)
+        matched = partition_match(
+            spark, predicate,
+            [table_schema[c] for c in identity_sources],
+            table_schema.names,
+            [tuple(f.partition.get(c) for c in identity_sources)
+             for f in files],
         )
-
-        field_by_name = {f.name: f for f in table_schema.fields}
-        if all(c in field_by_name for c in identity_sources):
-            tuples = sorted(
-                {
-                    tuple(f.partition.get(c) for c in identity_sources)
-                    for f in files
-                },
-                key=lambda t: tuple(
-                    "" if v is None else str(v) for v in t
-                ),
-            )
-            raw = meta_df(
-                spark,
-                [(i, *t) for i, t in enumerate(tuples)],
-                StructType(
-                    [StructField("__pt_idx", LongType(), False)]
-                    + [
-                        StructField(c, StringType(), True)
-                        for c in identity_sources
-                    ]
-                ),
-            )
-            typed = raw.select(
-                "__pt_idx",
-                *[
-                    F.col(c).cast(field_by_name[c].dataType).alias(c)
-                    for c in identity_sources
-                ],
-            )
-            try:
-                matched_idx = {
-                    r["__pt_idx"]
-                    for r in typed.where(F.expr(predicate)).collect()
-                }
-            except Exception:
-                matched_idx = None  # predicate needs data columns
-            if matched_idx is not None:
-                matched_tuples = {tuples[i] for i in matched_idx}
-                removed = [
-                    f
-                    for f in files
-                    if tuple(
-                        f.partition.get(c) for c in identity_sources
-                    )
-                    in matched_tuples
-                ]
-                if not removed:
-                    return {
-                        "snapshot_id": None, "rows_deleted": 0,
-                        "metadata_only": True, "files_removed": 0,
-                    }
-                # record_count is the FILE's row count; rows already
-                # masked by live position/equality deletes must not be
-                # re-counted (ADVICE r9).  Delete-free tables stay a
-                # pure metadata decision; tables carrying MOR debt pay
-                # one count job over the REMOVED files only — the
-                # commit itself is still metadata-only either way.
-                if _dels:
-                    # the predicate is partition-aligned, so live rows
-                    # matching it are exactly the live rows of the
-                    # removed files — and as a DATA-column filter it
-                    # pushes to the parquet scan, pruning every other
-                    # file on footer stats
-                    live = read_iceberg(spark, table_path)
-                    rows_deleted = int(
-                        live.where(F.expr(predicate)).count()
-                    )
-                else:
-                    rows_deleted = int(
-                        sum(f.record_count for f in removed)
-                    )
-                res = _carry_commit(
-                    table_path,
-                    exclude_orig_paths=frozenset(
-                        f.orig_path for f in removed
-                    ),
-                    operation="delete",
-                    force=True,
-                )
-                return {
-                    "snapshot_id": res["snapshot_id"],
-                    "rows_deleted": rows_deleted,
-                    "metadata_only": True,
-                    "files_removed": len(removed),
-                }
+    if matched is not None:
+        removed = [
+            f for f in files
+            if tuple(f.partition.get(c) for c in identity_sources) in matched
+        ]
+        if not removed:
+            return {
+                "snapshot_id": None, "rows_deleted": 0,
+                "metadata_only": True, "files_removed": 0,
+            }
+        # record_count is the FILE's row count; rows already masked by
+        # live position/equality deletes must not be re-counted (ADVICE
+        # r9).  Delete-free tables stay a pure metadata decision; tables
+        # carrying MOR debt pay one count job over the REMOVED files
+        # only — the commit itself is still metadata-only either way.
+        if _dels:
+            # the predicate is partition-aligned, so live rows matching
+            # it are exactly the live rows of the removed files — and as
+            # a DATA-column filter it pushes to the parquet scan,
+            # pruning every other file on footer stats
+            live = read_iceberg(spark, table_path)
+            rows_deleted = int(live.where(F.expr(predicate)).count())
+        else:
+            rows_deleted = int(sum(f.record_count for f in removed))
+        res = _carry_commit(
+            table_path,
+            exclude_orig_paths=frozenset(f.orig_path for f in removed),
+            operation="delete",
+            force=True,
+        )
+        return {
+            "snapshot_id": res["snapshot_id"],
+            "rows_deleted": rows_deleted,
+            "metadata_only": True,
+            "files_removed": len(removed),
+        }
     # ---- merge-on-read row path ------------------------------------
     planned_version = _head_version(table_path)
     part_cols = part_fields

@@ -54,6 +54,23 @@ class _Fmt:
             return dl.read_delta(spark, path)
         return il.read_iceberg(spark, path)
 
+    def delete(self, spark, path, predicate):
+        fn = dl.delete_delta if self.name == "delta" else il.delete_iceberg
+        return fn(spark, path, predicate)
+
+    def create_with_row_ids(self, spark, df, path):
+        """A row-tracked Delta table or a v3 Iceberg table."""
+        if self.name == "delta":
+            dl.write_delta(df, path, configuration={
+                "delta.enableRowTracking": "true"})
+        else:
+            il.write_iceberg(spark, df, path, format_version=3)
+
+    def read_row_ids(self, spark, path):
+        if self.name == "delta":
+            return dl.read_delta(spark, path, row_tracking=True)
+        return il.read_iceberg(spark, path, row_lineage=True)
+
 
 @pytest.fixture(params=["delta", "iceberg"])
 def fmt(request):
@@ -183,14 +200,9 @@ _WRITERS = {
 }
 
 
-@pytest.mark.parametrize("family", list(_WRITERS))
-def test_lost_commit_leaves_no_files(spark, tmp_path, monkeypatch, fmt,
-                                     family):
-    """Every writer family that loses its version claim raises the
-    format's conflict, deletes every file it staged (data, delete, CDC,
-    DV, manifests, manifest list) and leaves the table reading as
-    before."""
-    path = str(tmp_path / "t")
+def _writer_table(spark, path, fmt, family):
+    """Create the ``family``'s table at ``path`` (two files, rows 0-7)
+    and return its writer."""
     table_opt, setup, op = _WRITERS[family][fmt.name]
     base = spark.createDataFrame(_rows(0, 8)).repartition(2)
     if fmt.name == "delta":
@@ -201,6 +213,18 @@ def test_lost_commit_leaves_no_files(spark, tmp_path, monkeypatch, fmt,
         il.write_iceberg(spark, base, path, format_version=table_opt)
     if setup is not None:
         setup(spark, path)
+    return op
+
+
+@pytest.mark.parametrize("family", list(_WRITERS))
+def test_lost_commit_leaves_no_files(spark, tmp_path, monkeypatch, fmt,
+                                     family):
+    """Every writer family that loses its version claim raises the
+    format's conflict, deletes every file it staged (data, delete, CDC,
+    DV, manifests, manifest list) and leaves the table reading as
+    before."""
+    path = str(tmp_path / "t")
+    op = _writer_table(spark, path, fmt, family)
     before_rows = sorted(map(tuple, fmt.read(spark, path).collect()))
     before = _tree(path)
     _lose_next_commit(monkeypatch, fmt)
@@ -358,6 +382,8 @@ def test_may_overlap_only_skips_a_provable_miss():
     # missing statistics or values that do not compare never skip
     assert dml_core.may_overlap(None, 5, 6, 9) is True
     assert dml_core.may_overlap("a", "c", 6, 9) is True
+    assert dml_core.may_overlap(1, 5, "a", "c") is True
+    assert dml_core.may_overlap(7, 9, "a", None) is True
 
 
 def test_retry_on_conflict_gives_up_after_the_budget():
@@ -441,25 +467,39 @@ def test_meta_df_broadcast_is_one_task(spark):
 
 
 def test_partition_clear_fast_path_runs_no_job(spark, tmp_path, count_jobs,
-                                               fmt):
+                                               fmt, monkeypatch):
     """A DELETE on partition columns alone decides per partition tuple
-    on the driver and commits file removals: no Spark job."""
+    on the driver and commits file removals: no Spark job.  A predicate
+    that also names a data column takes the row path, decided by its
+    column references: Spark never fails to analyse it against the
+    partition columns alone."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.exceptions.captured import CapturedException
+
     path = str(tmp_path / "t")
     df = spark.range(6).selectExpr("id AS k", "cast(id % 2 AS string) AS p")
     if fmt.name == "delta":
         dl.write_delta(df, path, partition_by=["p"])
-
-        def clear():
-            return dl.delete_delta(spark, path, "p = '1'")
     else:
         il.write_iceberg(spark, df, path, partition_by=["p"])
-
-        def clear():
-            return il.delete_iceberg(spark, path, "p = '1'")
     out = []
-    assert count_jobs(lambda: out.append(clear())) == 0
+    assert count_jobs(lambda: out.append(fmt.delete(spark, path, "p = '1'"))) == 0
     assert out[0]["metadata_only"] is True
     assert sorted(r["k"] for r in fmt.read(spark, path).collect()) == [0, 2, 4]
+    analysed = []
+    real = CapturedException.__init__
+
+    def record(self, *a, **k):
+        real(self, *a, **k)
+        if isinstance(self, AnalysisException):
+            analysed.append(str(self))
+
+    monkeypatch.setattr(CapturedException, "__init__", record)
+    res = fmt.delete(spark, path, "K >= 4 AND p = '0'")
+    assert not res.get("metadata_only")
+    assert analysed == []
+    monkeypatch.undo()
+    assert sorted(r["k"] for r in fmt.read(spark, path).collect()) == [0, 2]
 
 
 #: Spark jobs of one MERGE into a two-file table: two fewer than when
@@ -487,6 +527,80 @@ def test_merge_job_budget(spark, tmp_path, count_jobs, fmt):
         **{float(i): str(i) for i in (*range(8), 20, 22)},
         0.0: "new", 7.0: "new", 14.0: "new", 21.0: "new",
     }
+
+
+#: Spark jobs of each row-level writer on its ``_WRITERS`` table, as
+#: measured before the writers shared one touched-file search and one
+#: commit tail (Delta tables carry the change data feed)
+_VERB_JOBS = {
+    ("delete", "delta"): 4, ("delete", "iceberg"): 3,
+    ("delete_dv", "delta"): 3, ("delete_dv", "iceberg"): 2,
+    ("update", "delta"): 4, ("update", "iceberg"): 5,
+    ("update_dv", "delta"): 6, ("update_dv", "iceberg"): 4,
+    ("merge", "delta"): 13, ("merge", "iceberg"): 8,
+}
+
+
+@pytest.mark.parametrize(
+    "family", ["delete", "delete_dv", "update", "update_dv", "merge"]
+)
+def test_row_level_job_budget(spark, tmp_path, count_jobs, fmt, family):
+    """Each row-level writer runs no more Spark jobs than it did with
+    one search and one commit tail per writer."""
+    path = str(tmp_path / "t")
+    op = _writer_table(spark, path, fmt, family)
+    source = spark.createDataFrame(_rows(1, 2) + _rows(20, 21))
+    jobs = count_jobs(lambda: op(spark, path, source))
+    assert jobs <= _VERB_JOBS[family, fmt.name], jobs
+    got = {r["k"]: r["v"] for r in fmt.read(spark, path).collect()}
+    want = {i: f"v{i}" for i in range(8)}
+    if family.startswith("delete"):
+        want = {k: v for k, v in want.items() if k >= 3}
+    elif family.startswith("update"):
+        want.update({0: "x", 1: "x", 2: "x"})
+    else:
+        want.update({1: "v1", 20: "v20"})
+    assert got == want
+
+
+def test_general_merge_carries_ids_of_updated_rows_only(spark, tmp_path,
+                                                         fmt):
+    """A MERGE with a delete clause: the updated row keeps its row id,
+    the deleted row is gone, and the inserted row gets a fresh id."""
+    path = str(tmp_path / "t")
+    fmt.create_with_row_ids(
+        spark, spark.createDataFrame(_rows(0, 4)).repartition(2), path
+    )
+    ids = {r["k"]: r["_row_id"] for r in fmt.read_row_ids(spark, path).collect()}
+    fmt.merge(
+        spark, spark.createDataFrame([Row(k=1, v="new"), Row(k=9, v="ins")]),
+        path, ["k"], delete_keys=spark.createDataFrame([Row(k=2)]),
+    )
+    got = {
+        r["k"]: (r["v"], r["_row_id"])
+        for r in fmt.read_row_ids(spark, path).collect()
+    }
+    assert set(got) == {0, 1, 3, 9}
+    assert got[1] == ("new", ids[1])
+    assert got[0] == ("v0", ids[0]) and got[3] == ("v3", ids[3])
+    assert got[9][0] == "ins"
+    assert got[9][1] is not None and got[9][1] not in ids.values()
+
+
+@pytest.mark.parametrize("dv", [False, True])
+def test_failed_update_leaves_no_files(spark, tmp_path, dv):
+    """An UPDATE whose new rows break a CHECK constraint raises before
+    its commit and deletes everything it staged (the deletion-vector
+    shape stages its DVs while it searches)."""
+    path = str(tmp_path / "t")
+    dl.write_delta(spark.createDataFrame(_rows(0, 8)).repartition(2), path,
+                   configuration={"delta.enableChangeDataFeed": "true"})
+    dl.add_check_constraint(spark, path, "short_v", "length(v) < 3")
+    before = _tree(path)
+    with pytest.raises(dl.DeltaLiteError, match="short_v"):
+        dl.update_delta(spark, path, {"v": "'long'"}, "k < 3",
+                        use_deletion_vectors=dv)
+    assert _tree(path) == before
 
 
 #: every Iceberg metadata-only commit: ``op(path, snapshot_ids)`` on a
