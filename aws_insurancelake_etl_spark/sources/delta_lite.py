@@ -1190,7 +1190,7 @@ def _read_snapshot(
         else []
     )
     if not files:
-        df = spark.createDataFrame([], schema)
+        df = meta_df(spark, [], schema)
         if with_path or with_pos:
             df = df.withColumn("__dl_path", F.lit(None).cast("string"))
         if with_pos:

@@ -45,12 +45,19 @@ bounds computed in Spark), the MERGE key sets and their join hint, the
 conflict-retry loop, the manifest-bounds range test
 (:func:`~.dml_core.may_overlap`) and the metadata frame / literal-map
 builders.  The writers here stage delete files through one stager
-(:func:`_stage_delete_files`).  Every commit claims its metadata
-version through one exit, :func:`_commit_metadata`, which on a lost
-race deletes the manifests and manifest list the commit wrote and
-raises :class:`ConcurrentIcebergWrite`; :func:`_commit_or_discard`
-also deletes the staged data, delete and DV files.  A commit that
-loses the race leaves no file behind.
+(:func:`_stage_delete_files`).  Every row writer (MERGE, UPDATE,
+DELETE, compaction, TRUNCATE, INSERT OVERWRITE, the equality upsert)
+takes ONE :func:`_plan` per attempt — the metadata loaded once, the
+manifest tree walked once — reads its live rows from that plan
+(:func:`_read_plan`) and commits against it, the way ``delta_lite``
+works from one ``Snapshot``: a commit landing after the plan makes the
+writer's claim lose instead of committing on a stale file set.  Every
+commit claims its metadata version through one exit,
+:func:`_commit_metadata`, which on a lost race deletes the manifests
+and manifest list the commit wrote and raises
+:class:`ConcurrentIcebergWrite`; :func:`_commit_or_discard` also
+deletes the staged data, delete and DV files.  A commit that loses the
+race leaves no file behind.
 """
 
 from __future__ import annotations
@@ -59,7 +66,7 @@ import io
 import json
 import os
 import uuid as _uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace as _dc_replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,6 +100,10 @@ _FOOTER_SCHEMA_CACHE: dict = {}
 _ROW_REF_COLS = (
     "__ice_file", "__ice_pos", "_row_id", "_last_updated_sequence_number",
 )
+#: the position-delete file columns a read applies (spec §Position
+#: Delete Files), given so that building the read infers no schema: a
+#: Parquet schema inference is a Spark job
+_POS_DELETE_COLS = "file_path string, pos long"
 
 
 def _footer_schema(path: str):
@@ -630,23 +641,46 @@ def _attach_orig(spark, df, files):
     return df.join(broadcast_meta(fm), "__ice_file")
 
 
+@dataclass(frozen=True)
+class _Plan:
+    """One scan of one table version: the metadata loaded once
+    (``version``, ``meta``), the planned snapshot's manifest-list rows
+    and the live data and delete files of one walk of its manifests.
+    A row writer reads its live rows from it (:func:`_read_plan`),
+    prunes with :func:`_in_bounds` over ``files`` and commits against it
+    (``_commit_snapshot(..., base=plan)``): the commit claims the
+    version after ``version``, so a commit that lands after the plan
+    makes it lose."""
+
+    table_path: str
+    version: int
+    meta: dict
+    #: the planned snapshot (None: the table has none yet)
+    snapshot_id: int | None
+    #: the schema a read uses: a time-travel plan's snapshot schema,
+    #: else the table's current one
+    schema_id: int | None
+    manifests: list
+    files: list
+    deletes: list
+
+
 def plan_files(
     table_path: str, snapshot_id=None, partition_filter=None,
     bounds_filter=None,
 ) -> list[DataFileEntry]:
     """Live DATA files of the snapshot (see :func:`plan_scan`)."""
-    return plan_scan(
-        table_path, snapshot_id, partition_filter, bounds_filter
-    )[0]
+    return _plan(table_path, snapshot_id, partition_filter, bounds_filter).files
 
 
 def plan_scan(
     table_path: str, snapshot_id=None, partition_filter=None,
     bounds_filter=None,
 ) -> tuple[list[DataFileEntry], list[DeleteFileEntry]]:
-    """Resolve the snapshot's live data files AND position-delete files
-    through the manifest tree, pruning data files on identity-partition
-    values BEFORE touching any parquet footer.  Delete files are never
+    """``(data files, delete files)`` of one :func:`_plan` of the
+    snapshot: its live data files AND position/equality/DV delete files
+    through the manifest tree, pruning data files on partition values
+    BEFORE touching any parquet footer.  Delete files are never
     partition-pruned (a delete manifest may target any data file; an
     inapplicable delete row simply fails the anti-join match).
 
@@ -655,30 +689,50 @@ def plan_scan(
     (:func:`_in_bounds`) — Iceberg's manifest-level VALUE pruning, the
     second half of what makes a 100 TB scan plan O(matching files).
     Files without bounds are never pruned."""
-    meta = _load_metadata(table_path)
+    plan = _plan(table_path, snapshot_id, partition_filter, bounds_filter)
+    return plan.files, plan.deletes
+
+
+def _plan(
+    table_path: str, snapshot_id=None, partition_filter=None,
+    bounds_filter=None,
+) -> _Plan:
+    """Load the table metadata once and walk the snapshot's manifest
+    list and each of its manifests once (see :func:`plan_scan`)."""
+    version, meta = _load_versioned(table_path)
     if int(meta.get("format-version", 1)) not in (1, 2, 3):
         raise IcebergLiteError(
             f"unsupported format-version {meta.get('format-version')}"
         )
     snapshots = meta.get("snapshots") or []
     if not snapshots:
-        return [], []
-    if snapshot_id is None:
-        snapshot_id = meta.get("current-snapshot-id")
-    else:
-        snapshot_id = _resolve_ref(meta, snapshot_id)
+        return _Plan(
+            table_path, version, meta, None, meta.get("current-schema-id"),
+            [], [], [],
+        )
+    as_of = snapshot_id is not None
+    snapshot_id = (
+        _resolve_ref(meta, snapshot_id) if as_of
+        else meta.get("current-snapshot-id")
+    )
     matches = [s for s in snapshots if s.get("snapshot-id") == snapshot_id]
     if not matches:
         known = [s.get("snapshot-id") for s in snapshots]
         raise IcebergLiteError(f"snapshot {snapshot_id} not in {known}")
     snap = matches[0]
+    # spec §Scan Planning: a time-travel read uses the SNAPSHOT's
+    # schema, not the table's current one — after a RENAME, reading an
+    # old snapshot surfaces the names its consumers saw then
+    schema_id = meta.get("current-schema-id")
+    if as_of and snap.get("schema-id") is not None:
+        schema_id = snap["schema-id"]
     rebase = _rebaser(meta, table_path)
     if "manifest-list" not in snap:
         raise IcebergLiteError(
             "snapshot without manifest-list (v1 'manifests' inline lists "
             "are not produced by current writers and are unsupported here)"
         )
-    manifest_list = rebase(snap["manifest-list"])
+    manifests = _read_manifest_rows(rebase(snap["manifest-list"]))
     data: list[DataFileEntry] = []
     deletes: list[DeleteFileEntry] = []
     # Per-SPEC pruning plans (partition-spec EVOLUTION, spec §Partition
@@ -744,7 +798,7 @@ def plan_scan(
         _spec_plans[spec_id] = part_checks
         return part_checks
 
-    for mf in _read_manifest_rows(manifest_list):
+    for mf in manifests:
         spec_id = int(mf.get("partition_spec_id") or 0)
         part_checks = spec_plan(spec_id)
         # v2 manifest-list rows carry the manifest's sequence number;
@@ -854,7 +908,8 @@ def plan_scan(
             )
     if bounds_filter:
         data = _in_bounds(meta, data, bounds_filter)
-    return (
+    return _Plan(
+        table_path, version, meta, snapshot_id, schema_id, manifests,
         sorted(data, key=lambda e: e.path),
         sorted(deletes, key=lambda e: e.path),
     )
@@ -1265,10 +1320,11 @@ def read_iceberg_changelog(
                         "orig string, __del_file string",
                     )
                     del_rows = (
-                        spark.read.parquet(*[d.path for d in pos_files])
+                        spark.read.schema(_POS_DELETE_COLS)
+                        .parquet(*[d.path for d in pos_files])
                         .select(
                             F.col("file_path").alias("orig"),
-                            F.col("pos").cast("long").alias("__del_pos"),
+                            F.col("pos").alias("__del_pos"),
                         )
                         .join(broadcast_meta(fmap), "orig")
                         .select("__del_file", "__del_pos")
@@ -1742,10 +1798,11 @@ def read_iceberg(
     _row_refs: bool = False,
     row_lineage: bool = False,
 ) -> DataFrame:
-    """Snapshot read of an Iceberg table directory: manifest-tree file
-    planning (with partition pruning and time travel) + one distributed
-    parquet scan.  Identity partition columns come from the data files
-    themselves, per the Iceberg convention.
+    """Snapshot read of an Iceberg table directory: ONE :func:`_plan`
+    (the metadata loaded once, the manifest tree walked once, with
+    partition pruning and time travel) read by :func:`_read_plan` as
+    one distributed parquet scan.  Identity partition columns come from
+    the data files themselves, per the Iceberg convention.
 
     Position deletes (v2 merge-on-read) are applied as one distributed
     LEFT ANTI join: the data scan exposes ``_metadata.file_path`` +
@@ -1777,11 +1834,24 @@ def read_iceberg(
     position; null for files predating a v3 upgrade) and
     ``_last_updated_sequence_number`` (the file's data sequence
     number)."""
+    return _read_plan(
+        spark, _plan(table_path, snapshot_id, partition_filter, bounds_filter),
+        bounds_filter, _row_refs, row_lineage,
+    )
+
+
+def _read_plan(
+    spark: SparkSession, plan: _Plan, bounds_filter=None,
+    _row_refs: bool = False, row_lineage: bool = False,
+) -> DataFrame:
+    """The rows of ``plan`` as :func:`read_iceberg` returns them: the
+    scan of ``plan.files`` with ``plan.deletes`` applied, under the
+    plan's metadata.  ``bounds_filter`` is the row-level residual of a
+    plan whose files were pruned by it.  Opens no metadata JSON,
+    manifest list or manifest."""
     from pyspark.sql import functions as F
 
-    files, deletes = plan_scan(
-        table_path, snapshot_id, partition_filter, bounds_filter
-    )
+    table_path, files, deletes = plan.table_path, plan.files, plan.deletes
     # v3 column DEFAULTS (spec §Default values): a field carrying
     # ``initial-default`` must surface that value — not null — for
     # rows written BEFORE the column existed; rows written after read
@@ -1792,23 +1862,14 @@ def read_iceberg(
     # footer-schema read per file — O(files) metadata, and only on
     # tables that actually declare defaults.  Non-primitive defaults
     # (struct/list JSON values) stay a named refusal.
-    _defaults_meta = _load_metadata(table_path)
-    if snapshot_id is not None:
-        # spec §Scan Planning: a time-travel read uses the SNAPSHOT's
-        # schema, not the table's current one — after a RENAME, reading
-        # an old snapshot surfaces the names its consumers saw then.
-        # Implemented by re-pointing current-schema-id for this read;
-        # the name-resolution machinery below handles the rest.
-        _tt_id = _resolve_ref(_defaults_meta, snapshot_id)
-        for _s in _defaults_meta.get("snapshots") or []:
-            if _s.get("snapshot-id") == _tt_id:
-                _ssid = _s.get("schema-id")
-                if _ssid is not None and _ssid != _defaults_meta.get(
-                    "current-schema-id"
-                ):
-                    _defaults_meta = dict(_defaults_meta)
-                    _defaults_meta["current-schema-id"] = _ssid
-                break
+    # a time-travel plan reads under its snapshot's schema: re-point
+    # current-schema-id for this read; the name-resolution machinery
+    # below handles the rest
+    _defaults_meta = plan.meta
+    if plan.schema_id != _defaults_meta.get("current-schema-id"):
+        _defaults_meta = {
+            **_defaults_meta, "current-schema-id": plan.schema_id,
+        }
     # name (possibly DOTTED for fields added inside structs) ->
     # (iceberg type object, JSON single-value).  Non-primitive values
     # materialize through _default_literal; defaults on fields nested
@@ -1871,47 +1932,6 @@ def read_iceberg(
                 "rather than misreading"
             )
         return lit
-    if not files:
-        # a TRUNCATEd / fully-deleted table reads as zero rows under
-        # the METADATA schema — the spec's schema source; only when the
-        # metadata carries an unmappable type does the reader refuse
-        # rather than guess
-        empty_schema = _spark_schema_from_meta(_defaults_meta)
-        if empty_schema is not None:
-            if _row_refs:
-                from pyspark.sql.types import (
-                    LongType, StringType, StructField, StructType,
-                )
-
-                empty_schema = StructType(
-                    list(empty_schema.fields)
-                    + [
-                        StructField("__ice_file", StringType(), True),
-                        StructField("__ice_pos", LongType(), True),
-                    ]
-                )
-            if row_lineage:
-                from pyspark.sql.types import (
-                    LongType, StructField, StructType,
-                )
-
-                empty_schema = StructType(
-                    list(empty_schema.fields)
-                    + [
-                        StructField("_row_id", LongType(), True),
-                        StructField(
-                            "_last_updated_sequence_number",
-                            LongType(), True,
-                        ),
-                    ]
-                )
-            return spark.createDataFrame([], empty_schema)
-        raise IcebergLiteError(
-            f"no data files in snapshot (table {table_path}); "
-            "empty-table reads need a schema source this reader "
-            "intentionally does not guess"
-        )
-
     def residual(df: DataFrame) -> DataFrame:
         # bounds pruning is file-level; the row-level range still
         # applies inside surviving files (same contract as Iceberg's
@@ -1935,19 +1955,32 @@ def read_iceberg(
     # must keep its _row_id); a lineage read therefore scans the two
     # metadata columns too (files without them read null and fall back
     # to position-based assignment below)
+    lineage_cols = (
+        [("_row_id", "long"), ("_last_updated_sequence_number", "long")]
+        if row_lineage else []
+    )
     scan_schema = table_schema
-    if row_lineage and table_schema is not None:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        scan_schema = StructType(
-            list(table_schema.fields)
-            + [
-                StructField("_row_id", LongType(), True),
-                StructField(
-                    "_last_updated_sequence_number", LongType(), True
-                ),
-            ]
-        )
+    if lineage_cols and table_schema is not None:
+        scan_schema = _spark_schema_from_meta(_defaults_meta)
+        for name, dt in lineage_cols:
+            scan_schema.add(name, dt)
+    if not files:
+        # a TRUNCATEd / fully-deleted table reads as zero rows under
+        # the METADATA schema — the spec's schema source; only when the
+        # metadata carries an unmappable type does the reader refuse
+        # rather than guess
+        if table_schema is None:
+            raise IcebergLiteError(
+                f"no data files in snapshot (table {table_path}); "
+                "empty-table reads need a schema source this reader "
+                "intentionally does not guess"
+            )
+        for name, dt in (
+            [("__ice_file", "string"), ("__ice_pos", "long")]
+            if _row_refs else []
+        ) + lineage_cols:
+            table_schema.add(name, dt)
+        return meta_df(spark, [], table_schema)
 
     def _norm(col):
         # _metadata.file_path is a URI (file:///x); planned paths are
@@ -2563,11 +2596,11 @@ def read_iceberg(
         data = data.join(dv_rows, ["__ice_file", "__ice_pos"], "left_anti")
     if pos_deletes:
         # O(delete files) mapping: local delete file -> its sequence number
-        del_base = spark.read.parquet(
+        del_base = spark.read.schema(_POS_DELETE_COLS).parquet(
             *[d.path for d in pos_deletes]
         ).select(
             F.col("file_path").alias("orig"),
-            F.col("pos").cast("long").alias("__ice_pos"),
+            F.col("pos").alias("__ice_pos"),
             _norm(F.col("_metadata.file_path")).alias("dfile"),
         )
         if lit_meta and len(pos_deletes) <= LIT_MAP_MAX:
@@ -2630,7 +2663,7 @@ def read_iceberg(
         # Flink-CDC default) applies by recomputing the transform over
         # the source column — data files store source columns, so
         # ``day(ts) == 18262`` is exactly the file-side membership test.
-        scope_meta = _load_metadata(table_path)
+        scope_meta = plan.meta
         names_by_id = _field_names_by_id(scope_meta)
         # scope fields resolve across EVERY live spec (partition-spec
         # evolution: a delete scoped under the old months(ts) spec must
@@ -4097,15 +4130,6 @@ def _written_metadata(snap_id: int, manifests: list, ml_rel: str) -> list:
     ] + [ml_rel]
 
 
-def _head_version(table_path: str) -> int:
-    """The table's current metadata version: what a snapshot commit
-    plans against (``expect_version`` fails fast if the table moved).
-    A metadata-only commit claims the version after the one it loaded
-    (:func:`_load_versioned`), not after this one."""
-    meta_dir = os.path.join(table_path, "metadata")
-    return (_metadata_versions(meta_dir) or [0])[-1]
-
-
 def _commit_or_discard(
     table_path: str, part_cols: list, data_entries: list,
     delete_entries: list, **commit_kw,
@@ -4385,6 +4409,33 @@ def _dv_kv_list(raw):
     return out or None
 
 
+def _carried_entry(entry: dict, seq: int, part_cols: list, first_row_id):
+    """A live manifest ``entry`` carried into a rewritten manifest: status
+    EXISTING (carried, not added, by the new snapshot) with an EXPLICIT
+    sequence number ``seq``, since the rewrite crosses manifests."""
+    dfile = entry["data_file"]
+    partition = dfile.get("partition") or {}
+    return (
+        0, entry.get("snapshot_id"), seq,
+        (
+            int(dfile.get("content") or 0),
+            dfile["file_path"],
+            str(dfile.get("file_format", "PARQUET")).upper(),
+            tuple(partition.get(c) for c in part_cols),
+            int(dfile.get("record_count") or 0),
+            int(dfile.get("file_size_in_bytes") or 0),
+            list(dfile.get("equality_ids") or []) or None,
+            _dv_kv_list(dfile.get("lower_bounds")),
+            _dv_kv_list(dfile.get("upper_bounds")),
+            dfile.get("referenced_data_file"),
+            dfile.get("content_offset"),
+            dfile.get("content_size_in_bytes"),
+            first_row_id,
+            dfile.get("sort_order_id"),
+        ),
+    )
+
+
 def _rewrite_delete_manifest_without(
     table_path: str, meta: dict, rebase, mf: dict, drop_dv_refs,
     snap_id: int, location: str,
@@ -4420,31 +4471,10 @@ def _rewrite_delete_manifest_without(
         if superseded(dfile):
             continue
         seq = entry.get("sequence_number")
-        seq = mf_seq if seq is None else int(seq)
-        partition = dfile.get("partition") or {}
-        rows.append(
-            (
-                0,  # EXISTING: carried, not added, by this snapshot
-                entry.get("snapshot_id"),
-                seq,
-                (
-                    int(dfile.get("content") or 0),
-                    dfile["file_path"],
-                    str(dfile.get("file_format", "PARQUET")).upper(),
-                    tuple(partition.get(c) for c in part_cols),
-                    int(dfile.get("record_count") or 0),
-                    int(dfile.get("file_size_in_bytes") or 0),
-                    list(dfile.get("equality_ids") or []) or None,
-                    _dv_kv_list(dfile.get("lower_bounds")),
-                    _dv_kv_list(dfile.get("upper_bounds")),
-                    dfile.get("referenced_data_file"),
-                    dfile.get("content_offset"),
-                    dfile.get("content_size_in_bytes"),
-                    dfile.get("first_row_id"),
-                    dfile.get("sort_order_id"),
-                ),
-            )
-        )
+        rows.append(_carried_entry(
+            entry, mf_seq if seq is None else int(seq), part_cols,
+            dfile.get("first_row_id"),
+        ))
     if not rows:
         return None
     man_rel = f"metadata/manifest-delete-{snap_id}-{_uuid.uuid4().hex}.avro"
@@ -4465,7 +4495,7 @@ def _commit_snapshot(
     part_cols: list,
     data_entries: list,
     delete_entries: list,
-    expect_version: int | None = None,
+    base: _Plan | None = None,
     replace: bool = False,
     schema_fields: list | None = None,
     evolve_schema: bool = False,
@@ -4475,8 +4505,13 @@ def _commit_snapshot(
     sort_order_id: int | None = None,
 ) -> int:
     """Write manifests + manifest list + next metadata json; the O_EXCL
-    metadata create is the commit point.  ``expect_version``: fail fast
-    (for MERGE re-execution) if the current version moved.
+    metadata create is the commit point.  ``base``: the :func:`_plan`
+    the writer read the table through, one per attempt.  The commit
+    builds on its metadata and, when the parent is the planned snapshot,
+    its manifest-list rows, and claims the version after the planned
+    one: a commit that landed after the plan makes this one lose
+    (:class:`ConcurrentIcebergWrite`).  Without ``base`` (appends,
+    creates) the commit builds on the table's current metadata.
 
     ``data_entries``: ``(rel, pvals, count, size)``.  ``delete_entries``:
     ``(rel, pvals, count, size, file_content, equality_ids[, dv])``
@@ -4508,13 +4543,12 @@ def _commit_snapshot(
     part_fields = parse_partition_by(part_cols)
     meta_dir = os.path.join(table_path, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
-    versions = _metadata_versions(meta_dir)
-    current = versions[-1] if versions else 0
-    if expect_version is not None and current != expect_version:
-        raise ConcurrentIcebergWrite(
-            f"table moved to v{current} (planned against v{expect_version})"
-        )
-    meta = _load_metadata(table_path) if versions else None
+    if base is not None:
+        current, meta = base.version, base.meta
+    elif _metadata_versions(meta_dir):
+        current, meta = _load_versioned(table_path)
+    else:
+        current, meta = 0, None
     if branch != "main" and meta is None:
         raise IcebergLiteError(
             f"cannot commit to branch {branch!r} on a table that does "
@@ -4564,7 +4598,11 @@ def _commit_snapshot(
         ]
         if cur:
             rebase = _rebaser(meta, table_path)
-            for mf in _read_manifest_rows(rebase(cur[0]["manifest-list"])):
+            for mf in (
+                base.manifests
+                if base is not None and base.snapshot_id == parent_id
+                else _read_manifest_rows(rebase(cur[0]["manifest-list"]))
+            ):
                 mf_content = int(mf.get("content") or 0)
                 mf_seq = int(mf.get("sequence_number") or 0)
                 spec_id = int(mf.get("partition_spec_id") or 0)
@@ -4596,16 +4634,10 @@ def _commit_snapshot(
                 prior_manifests.append(carried)
     # name -> (field id, iceberg primitive type) for bounds encoding:
     # the table's existing schema wins; a fresh table uses the commit's
-    bounds_src = None
-    if meta is not None and meta.get("schemas"):
-        cur = meta.get("current-schema-id")
-        for s in meta["schemas"]:
-            if s.get("schema-id") == cur:
-                bounds_src = s.get("fields")
-        if bounds_src is None:
-            bounds_src = meta["schemas"][-1].get("fields")
-    if bounds_src is None:
-        bounds_src = schema_fields
+    bounds_src = (
+        _current_schema_of(meta).get("fields")
+        if meta is not None and meta.get("schemas") else None
+    ) or schema_fields
     bounds_fields = {
         f["name"]: (int(f["id"]), f["type"])
         for f in (bounds_src or [])
@@ -5057,10 +5089,11 @@ def _stage_iceberg_dvs(
         )
         touched = matched.select("__ice_file").distinct()
         old_rows = (
-            spark.read.parquet(*[d.path for d in pos_parquet])
+            spark.read.schema(_POS_DELETE_COLS)
+            .parquet(*[d.path for d in pos_parquet])
             .select(
                 F.col("file_path").alias("orig"),
-                F.col("pos").cast("long").alias("__ice_pos"),
+                F.col("pos").alias("__ice_pos"),
                 F.regexp_replace(
                     F.col("_metadata.file_path"), "^file:/+", "/"
                 ).alias("dfile"),
@@ -5191,10 +5224,9 @@ def _merge_once_iceberg(
 ) -> dict:
     from pyspark.sql import functions as F
 
-    planned_version = _head_version(table_path)
-    meta = _load_metadata(table_path)
+    plan = _plan(table_path)
+    meta, files = plan.meta, plan.files
     part_cols = _partition_spec_fields(meta)
-    files, _deletes = plan_scan(table_path)
     # MANIFEST-BOUNDS SKIPPING for the touched-file search: a data file
     # whose partition value or [lower, upper] range on the first merge
     # key cannot contain any source key is never opened — the Iceberg
@@ -5225,8 +5257,7 @@ def _merge_once_iceberg(
             scan = {"files_scanned": 0, "files_total": len(files)}
         data_entries = _stage_iceberg_data(source, table_path, part_cols)
         snap_id = _commit_or_discard(
-            table_path, part_cols, data_entries, [],
-            expect_version=planned_version,
+            table_path, part_cols, data_entries, [], base=plan,
             schema_fields=_ice_schema_fields(source),
         )
         return {
@@ -5237,18 +5268,17 @@ def _merge_once_iceberg(
     src_keys, tomb_keys, hint = key_sets
     tomb_hint = hint(tomb_keys)
     files_scanned = len(search_files)
-    # Match against LIVE rows — the full reader (metadata schema,
-    # position/equality/DV deletes applied), not raw parquet: matching
-    # already-dead rows re-tombstones them and inflates deleted_rows
-    # (the same defect class ADVICE r9 flagged for UPDATE/DELETE).  The
-    # manifest-bounds skipping above survives as read_iceberg's own
-    # bounds_filter (file-level pruning + a row-level residual that
-    # cannot drop a matchable row, since every source key lies inside
-    # [lo, hi]).
+    # Match against LIVE rows of the plan's searched files — the full
+    # reader (metadata schema, position/equality/DV deletes applied),
+    # not raw parquet: matching already-dead rows re-tombstones them
+    # and inflates deleted_rows (the same defect class ADVICE r9
+    # flagged for UPDATE/DELETE).  The bounds stay a row-level residual
+    # that cannot drop a matchable row, since every source key lies
+    # inside [lo, hi].
     fv = max(2, int(meta.get("format-version", 2)))
-    live = read_iceberg(
-        spark, table_path, bounds_filter=bounds, _row_refs=True,
-        row_lineage=fv >= 3,
+    live = _read_plan(
+        spark, _dc_replace(plan, files=search_files), bounds,
+        _row_refs=True, row_lineage=fv >= 3,
     )
     schema_cols = [c for c in live.columns if c not in _ROW_REF_COLS]
     source = source.select(*schema_cols)
@@ -5267,7 +5297,8 @@ def _merge_once_iceberg(
         # never the data payload.
         matched_tomb = matched_tomb.localCheckpoint(eager=True)
     delete_entries, drop_dv_refs, deleted_rows = _stage_row_deletes(
-        spark, table_path, matched_tomb, fv, files, _deletes, search_files
+        spark, table_path, matched_tomb, fv, files, plan.deletes,
+        search_files,
     )
     if fv >= 3:
         # spec §Row Lineage: an UPDATED row keeps its _row_id (nulls on
@@ -5281,8 +5312,7 @@ def _merge_once_iceberg(
         )
     data_entries = _stage_iceberg_data(source, table_path, part_cols)
     snap_id = _commit_or_discard(
-        table_path, part_cols, data_entries, delete_entries,
-        expect_version=planned_version,
+        table_path, part_cols, data_entries, delete_entries, base=plan,
         # schema from the TABLE columns only — the v3 path's
         # materialized _row_id is a file-level lineage column, never
         # part of the table schema
@@ -5346,10 +5376,9 @@ def _upsert_equality_once(
     spark: SparkSession, source: DataFrame, table_path: str, keys: list,
     attempt: int,
 ) -> dict:
-    planned_version = _head_version(table_path)
-    meta = _load_metadata(table_path)
-    part_cols = _partition_spec_fields(meta)
-    names_by_id = _field_names_by_id(meta)
+    plan = _plan(table_path)
+    part_cols = _partition_spec_fields(plan.meta)
+    names_by_id = _field_names_by_id(plan.meta)
     ids_by_name = {n: i for i, n in names_by_id.items()}
     missing = [k for k in keys if k not in ids_by_name]
     if missing:
@@ -5382,8 +5411,7 @@ def _upsert_equality_once(
     # (b) the source appends as new data files
     data_entries = _stage_iceberg_data(source, table_path, part_cols)
     snap_id = _commit_or_discard(
-        table_path, part_cols, data_entries, delete_entries,
-        expect_version=planned_version,
+        table_path, part_cols, data_entries, delete_entries, base=plan,
         schema_fields=_ice_schema_fields(source),
     )
     return {
@@ -5420,7 +5448,8 @@ def rewrite_data_files(
     shape).  Returns {"snapshot_id", "files_before",
     "delete_files_before", "files_after", "rewritten"}.
     """
-    files, deletes = plan_scan(table_path)
+    plan = _plan(table_path)
+    meta, files, deletes = plan.meta, plan.files, plan.deletes
 
     def _unmaterialized_defaults() -> bool:
         # v3 initial-defaults are read-side debt too (round 11): a file
@@ -5438,14 +5467,7 @@ def rewrite_data_files(
                         t.get("fields", []), prefix + fd["name"] + "."
                     )
 
-        dpaths = list(
-            walk(
-                _current_schema_of(_load_metadata(table_path)).get(
-                    "fields", []
-                ),
-                "",
-            )
-        )
+        dpaths = list(walk(_current_schema_of(meta).get("fields", []), ""))
         if not dpaths:
             return False
         return any(
@@ -5458,7 +5480,7 @@ def rewrite_data_files(
         not deletes
         and (target_files is None or len(files) <= target_files)
         and not _unmaterialized_defaults()
-        and not _default_sort_columns(_load_metadata(table_path))
+        and not _default_sort_columns(meta)
     ):
         return {
             "snapshot_id": None,
@@ -5467,8 +5489,6 @@ def rewrite_data_files(
             "files_after": len(files),
             "rewritten": False,
         }
-    planned_version = _head_version(table_path)
-    meta = _load_metadata(table_path)
     part_cols = _partition_spec_fields(meta)
     fv = max(2, int(meta.get("format-version", 2)))
     # v3 row lineage: compaction MOVES rows unmodified, so BOTH
@@ -5476,7 +5496,7 @@ def rewrite_data_files(
     # (spec §Row Lineage: a carried row keeps its _row_id AND its
     # _last_updated_sequence_number — bumping the latter to the
     # compaction commit would falsely mark every row as just-changed)
-    df = read_iceberg(spark, table_path, row_lineage=fv >= 3)
+    df = _read_plan(spark, plan, row_lineage=fv >= 3)
     sort_cols = _default_sort_columns(meta)
     if zorder_by:
         from ..operators.layout import zorder_key  # noqa: PLC0415
@@ -5510,9 +5530,7 @@ def rewrite_data_files(
         df = df.coalesce(target_files)
     data_entries = _stage_iceberg_data(df, table_path, part_cols)
     snap_id = _commit_or_discard(
-        table_path, part_cols, data_entries, [],
-        expect_version=planned_version,
-        replace=True,
+        table_path, part_cols, data_entries, [], base=plan, replace=True,
         # spec field 140: files written under the declared default
         # order carry its id (zorder is not a declared order)
         sort_order_id=(
@@ -5537,20 +5555,15 @@ def truncate_iceberg(table_path: str) -> dict:
     :func:`expire_snapshots`).  The truncated table reads as zero rows
     under the metadata schema; every prior snapshot stays
     travelable."""
-    files, deletes = plan_scan(table_path)
-    meta = _load_metadata(table_path)
-    part_cols = _partition_spec_fields(meta)
-    planned_version = _head_version(table_path)
+    plan = _plan(table_path)
     snap_id = _commit_snapshot(
-        table_path, part_cols,
-        data_entries=[], delete_entries=[],
-        expect_version=planned_version,
-        replace=True,
+        table_path, _partition_spec_fields(plan.meta),
+        data_entries=[], delete_entries=[], base=plan, replace=True,
     )
     return {
         "snapshot_id": snap_id,
-        "files_removed": len(files),
-        "delete_files_removed": len(deletes),
+        "files_removed": len(plan.files),
+        "delete_files_removed": len(plan.deletes),
     }
 
 
@@ -5566,10 +5579,9 @@ def overwrite_iceberg(
     table's CURRENT column set (any order); schema changes go through
     ``alter_iceberg_schema`` / evolve-append, never silently through an
     overwrite.  Returns the new snapshot id."""
-    meta = _load_metadata(table_path)
-    part_cols = _partition_spec_fields(meta)
-    planned_version = _head_version(table_path)
-    tbl_schema = _spark_schema_from_meta(meta)
+    plan = _plan(table_path)
+    part_cols = _partition_spec_fields(plan.meta)
+    tbl_schema = _spark_schema_from_meta(plan.meta)
     if tbl_schema is not None:
         names = [f.name for f in tbl_schema.fields]
         if sorted(df.columns) != sorted(names):
@@ -5580,9 +5592,7 @@ def overwrite_iceberg(
         df = df.select(*names)
     data_entries = _stage_iceberg_data(df, table_path, part_cols)
     return _commit_or_discard(
-        table_path, part_cols, data_entries, [],
-        expect_version=planned_version,
-        replace=True,
+        table_path, part_cols, data_entries, [], base=plan, replace=True,
     )
 
 
@@ -6012,12 +6022,18 @@ def _carry_commit(
     exclude_orig_paths: frozenset = frozenset(),
     operation: str = "replace",
     force: bool = False,
+    base: _Plan | None = None,
 ) -> dict:
     """Commit a snapshot that CARRIES the current entries into merged
     manifests, optionally EXCLUDING data files (the metadata-only
     DELETE).  Shared engine of :func:`rewrite_manifests` and
-    :func:`delete_iceberg`'s partition fast path."""
-    loaded, meta = _load_versioned(table_path)
+    :func:`delete_iceberg`'s partition fast path, which passes the
+    ``base`` plan it decided on: the commit carries that plan's
+    manifests and claims the version after it."""
+    loaded, meta = (
+        (base.version, base.meta) if base is not None
+        else _load_versioned(table_path)
+    )
     rebase = _rebaser(meta, table_path)
     location = meta.get("location") or table_path.rstrip("/")
     cur_id = meta.get("current-snapshot-id")
@@ -6030,12 +6046,13 @@ def _carry_commit(
         return {"manifests_before": 0, "manifests_after": 0,
                 "snapshot_id": None, "rewritten": False}
 
-    _kv_list = _dv_kv_list  # shared bounds-map converter
-
     groups: dict = {}  # (manifest content, spec_id) -> [entry tuple]
     part_cols_by_spec: dict = {}
     before = 0
-    for mf in _read_manifest_rows(rebase(cur["manifest-list"])):
+    for mf in (
+        base.manifests if base is not None
+        else _read_manifest_rows(rebase(cur["manifest-list"]))
+    ):
         before += 1
         spec_id = int(mf.get("partition_spec_id") or 0)
         mf_seq = int(mf.get("sequence_number") or 0)
@@ -6070,29 +6087,8 @@ def _carry_commit(
                 and dfile.get("referenced_data_file") in exclude_orig_paths
             ):
                 continue  # a DV for a dropped data file is dead weight
-            partition = dfile.get("partition") or {}
             groups.setdefault((mf_content, spec_id), []).append(
-                (
-                    0,  # status EXISTING: carried, not added, by this snap
-                    entry.get("snapshot_id"),
-                    seq,  # EXPLICIT: the merge crosses sequence numbers
-                    (
-                        int(dfile.get("content") or 0),
-                        dfile["file_path"],
-                        str(dfile.get("file_format", "PARQUET")).upper(),
-                        tuple(partition.get(c) for c in part_cols),
-                        int(dfile.get("record_count") or 0),
-                        int(dfile.get("file_size_in_bytes") or 0),
-                        list(dfile.get("equality_ids") or []) or None,
-                        _kv_list(dfile.get("lower_bounds")),
-                        _kv_list(dfile.get("upper_bounds")),
-                        dfile.get("referenced_data_file"),
-                        dfile.get("content_offset"),
-                        dfile.get("content_size_in_bytes"),
-                        fri,
-                        dfile.get("sort_order_id"),
-                    ),
-                )
+                _carried_entry(entry, seq, part_cols, fri)
             )
     if before <= len(groups) and not force:
         return {"manifests_before": before, "manifests_after": before,
@@ -6179,8 +6175,8 @@ def delete_iceberg(
     Returns {"snapshot_id", "rows_deleted", "metadata_only", ...}."""
     from pyspark.sql import functions as F
 
-    meta = _load_metadata(table_path)
-    files, _dels = plan_scan(table_path)
+    plan = _plan(table_path)
+    meta, files, _dels = plan.meta, plan.files, plan.deletes
     if not files:
         return {"snapshot_id": None, "rows_deleted": 0,
                 "metadata_only": True, "files_removed": 0}
@@ -6230,7 +6226,7 @@ def delete_iceberg(
             # it are exactly the live rows of the removed files — and as
             # a DATA-column filter it pushes to the parquet scan,
             # pruning every other file on footer stats
-            live = read_iceberg(spark, table_path)
+            live = _read_plan(spark, plan)
             rows_deleted = int(live.where(F.expr(predicate)).count())
         else:
             rows_deleted = int(sum(f.record_count for f in removed))
@@ -6239,6 +6235,7 @@ def delete_iceberg(
             exclude_orig_paths=frozenset(f.orig_path for f in removed),
             operation="delete",
             force=True,
+            base=plan,
         )
         return {
             "snapshot_id": res["snapshot_id"],
@@ -6247,15 +6244,12 @@ def delete_iceberg(
             "files_removed": len(removed),
         }
     # ---- merge-on-read row path ------------------------------------
-    planned_version = _head_version(table_path)
-    part_cols = part_fields
-
     # Match against LIVE rows — the full reader (metadata schema,
     # external-file partition attach, position + equality deletes
     # applied), not raw parquet: matching already-deleted rows would
     # re-count them and emit redundant position-delete entries
     # (ADVICE r9).
-    live = read_iceberg(spark, table_path, _row_refs=True)
+    live = _read_plan(spark, plan, _row_refs=True)
     fv = max(2, int(meta.get("format-version", 2)))
     delete_entries, drop_dv_refs, deleted_rows = _stage_row_deletes(
         spark, table_path, live.where(F.expr(predicate)), fv, files, _dels
@@ -6264,8 +6258,7 @@ def delete_iceberg(
         return {"snapshot_id": None, "rows_deleted": 0,
                 "metadata_only": False, "delete_files": 0}
     snap_id = _commit_or_discard(
-        table_path, part_cols, [], delete_entries,
-        expect_version=planned_version,
+        table_path, part_fields, [], delete_entries, base=plan,
         drop_dv_refs=drop_dv_refs,
     )
     return {
@@ -6288,17 +6281,14 @@ def update_iceberg(
     "rows_updated", "delete_files", "appended_files"}."""
     from pyspark.sql import functions as F
 
-    meta = _load_metadata(table_path)
     if not set_exprs:
         raise IcebergLiteError("UPDATE needs at least one SET column")
-    files, _dels = plan_scan(table_path)
-    if not files:
+    plan = _plan(table_path)
+    if not plan.files:
         return {"snapshot_id": None, "rows_updated": 0,
                 "delete_files": 0, "appended_files": 0}
-    planned_version = _head_version(table_path)
-    part_cols = _partition_spec_fields(meta)
-
-    fv = max(2, int(meta.get("format-version", 2)))
+    part_cols = _partition_spec_fields(plan.meta)
+    fv = max(2, int(plan.meta.get("format-version", 2)))
     # Match against LIVE rows — the full reader (metadata schema, so
     # SET/WHERE bind to EVOLVED column names; external-file partition
     # attach; position + equality deletes applied), not raw parquet:
@@ -6308,9 +6298,7 @@ def update_iceberg(
     # their _row_id (spec: an updated row preserves its id; its
     # _last_updated_sequence_number is left unmaterialized so it
     # inherits the new file's sequence number).
-    live = read_iceberg(
-        spark, table_path, _row_refs=True, row_lineage=fv >= 3
-    )
+    live = _read_plan(spark, plan, _row_refs=True, row_lineage=fv >= 3)
     schema_cols = [c for c in live.columns if c not in _ROW_REF_COLS]
     unknown = set(set_exprs) - set(schema_cols)
     if unknown:
@@ -6335,15 +6323,14 @@ def update_iceberg(
         *([F.col("_row_id")] if fv >= 3 else []),
     )
     delete_entries, drop_dv_refs, rows_updated = _stage_row_deletes(
-        spark, table_path, matched, fv, files, _dels
+        spark, table_path, matched, fv, plan.files, plan.deletes
     )
     if not delete_entries:
         return {"snapshot_id": None, "rows_updated": 0,
                 "delete_files": 0, "appended_files": 0}
     data_entries = _stage_iceberg_data(updated, table_path, part_cols)
     snap_id = _commit_or_discard(
-        table_path, part_cols, data_entries, delete_entries,
-        expect_version=planned_version,
+        table_path, part_cols, data_entries, delete_entries, base=plan,
         drop_dv_refs=drop_dv_refs,
     )
     return {

@@ -1428,7 +1428,7 @@ def _exec_general_merge(
         delete_keys_df = live.select(*key_cols).limit(0)
     if combined is None:
         # delete-only MERGE: empty replacement set
-        combined = spark.createDataFrame([], live.schema)
+        combined = meta_df(spark, [], live.schema)
     if target.fmt == "delta":
         res = delta_lite.merge_delta(
             spark, combined, target.path, key_cols,

@@ -9,6 +9,7 @@ import json
 import os
 import shutil
 import uuid
+from collections import Counter
 from urllib.parse import unquote
 
 import pytest
@@ -661,3 +662,132 @@ def test_metadata_commit_loses_to_a_commit_after_its_load(
     assert sorted(r["k"] for r in il.read_iceberg(spark, path).collect()) == [
         0, 1,
     ]
+
+
+def _dvs_per_data_file(path):
+    """Deletion vectors of the current snapshot, per data file."""
+    return Counter(
+        d.referenced_data_file for d in il.plan_scan(path)[1]
+        if d.file_format == "PUFFIN"
+    )
+
+
+#: row writers that plan the table, read its live rows and commit
+_ROW_WRITES = {
+    "update": lambda spark, p: il.update_iceberg(
+        spark, p, {"v": "'x'"}, "k = 1"),
+    "delete": lambda spark, p: il.delete_iceberg(spark, p, "k = 1"),
+    "rewrite_data_files": lambda spark, p: il.rewrite_data_files(spark, p),
+}
+
+
+@pytest.mark.parametrize("fv", [2, 3], ids=["v2", "v3"])
+@pytest.mark.parametrize("op", list(_ROW_WRITES))
+def test_row_write_loses_to_a_commit_after_its_plan(
+    spark, tmp_path, monkeypatch, op, fv,
+):
+    """Another writer's DELETE lands right after the operation planned
+    the table: the operation must lose its claim and raise, leaving the
+    table exactly as the other writer left it — one deletion vector per
+    data file, so a later DELETE resurrects no row."""
+    path = str(tmp_path / "t")
+    il.write_iceberg(spark, spark.createDataFrame(_rows(0, 10)).coalesce(1),
+                     path, format_version=fv)
+    il.write_iceberg(spark, spark.createDataFrame(_rows(10, 20)).coalesce(1),
+                     path)
+    il.delete_iceberg(spark, path, "k = 0")
+    real, other = il._plan, []
+
+    def plan(*a, **k):
+        planned = real(*a, **k)
+        if not other:
+            other.append(1)
+            il.delete_iceberg(spark, path, "k = 5")
+            other.append(_tree(path))
+        return planned
+
+    monkeypatch.setattr(il, "_plan", plan)
+    lost = []
+    try:
+        _ROW_WRITES[op](spark, path)
+    except il.ConcurrentIcebergWrite:
+        lost.append(1)
+    monkeypatch.undo()
+    after, dvs = _tree(path), _dvs_per_data_file(path)
+    il.delete_iceberg(spark, path, "k = 7")
+    rows = sorted(tuple(r) for r in il.read_iceberg(spark, path).collect())
+    assert all(n == 1 for n in dvs.values()), dvs
+    assert not {0, 5, 7} & {k for k, _v in rows}, "deleted rows came back"
+    assert lost, "the operation committed on a stale plan"
+    assert after == other[1]
+    assert rows == [(i, f"v{i}") for i in range(1, 20) if i not in (5, 7)]
+
+
+#: row writers touching only the second append's file; MERGE updates
+#: one of its rows and inserts one
+_SECOND_FILE_WRITES = {
+    "merge": lambda spark, p: il.merge_iceberg(
+        spark, spark.createDataFrame([Row(k=21, v="m"), Row(k=40, v="i")]),
+        p, ["k"]),
+    "update": lambda spark, p: il.update_iceberg(
+        spark, p, {"v": "'x'"}, "k = 21"),
+    "delete": lambda spark, p: il.delete_iceberg(spark, p, "k = 22"),
+    "rewrite_data_files": lambda spark, p: il.rewrite_data_files(spark, p),
+}
+
+
+@pytest.mark.parametrize("fv", [2, 3], ids=["v2", "v3"])
+@pytest.mark.parametrize("op", list(_SECOND_FILE_WRITES))
+def test_row_level_metadata_reads(spark, tmp_path, monkeypatch, op, fv):
+    """A row writer loads the table metadata once, reads the snapshot's
+    manifest list once and each manifest once: its read and its commit
+    both work from the one plan."""
+    path = str(tmp_path / "t")
+    il.write_iceberg(spark, spark.createDataFrame(_rows(0, 8)).coalesce(1),
+                     path, format_version=fv)
+    il.write_iceberg(spark, spark.createDataFrame(_rows(20, 28)).coalesce(1),
+                     path)
+    il.delete_iceberg(spark, path, "k = 0")
+    manifests = {
+        os.path.basename(mf["manifest_path"])
+        for mf in il._plan(path).manifests
+    }
+    assert len(manifests) == 3
+    loads, reads = [], []
+    real_load, real_read = il._load_versioned, il._read_manifest_rows
+
+    def load(*a, **k):
+        loads.append(1)
+        return real_load(*a, **k)
+
+    def read(p):
+        reads.append(os.path.basename(p))
+        return real_read(p)
+
+    monkeypatch.setattr(il, "_load_versioned", load)
+    monkeypatch.setattr(il, "_read_manifest_rows", read)
+    res = _SECOND_FILE_WRITES[op](spark, path)
+    monkeypatch.undo()
+    assert res.get("retries", 0) == 0
+    assert len(loads) == 1
+    assert sum(r.startswith("snap-") for r in reads) == 1
+    assert sorted(r for r in reads if not r.startswith("snap-")) == sorted(
+        manifests
+    )
+
+
+def test_truncated_table_reads_as_a_local_relation(spark, tmp_path, fmt):
+    """A table with no live file reads as an empty local relation, which
+    the optimizer folds through joins and unions, not as a scan of an
+    empty Python RDD."""
+    path = str(tmp_path / "t")
+    fmt.append(spark, _kv(spark, [(1.0, "a")]), path)
+    if fmt.name == "delta":
+        dl.truncate_delta(spark, path)
+    else:
+        il.truncate_iceberg(path)
+    df = fmt.read(spark, path)
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == (
+        "LocalRelation"
+    )
+    assert df.columns == ["k", "v"] and df.collect() == []
