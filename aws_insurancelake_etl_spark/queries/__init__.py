@@ -16,14 +16,27 @@ Organization mirrors SURVEY.md §2's operator inventory:
   sessionization, range join, JSON extraction)
 - ``pipeline_ops`` — engine machinery in the gate: full Collect-to-Cleanse
   run, DQDL quarantine split, Structured Streaming windowed aggregation
+
+Many gates have side effects: they write fixture tables under
+``tempfile.mkdtemp()`` directories, start streams into memory sinks,
+register temp views, create tables and databases, and set session conf.
+A harness runs each invocation, its materialization included, inside
+:func:`gate_scope`; everything the gate made is gone after the scope
+exits, so the next gate sees the session and the temp dir as they were.
+A lazy result must therefore be materialized inside the scope: the
+files and views it reads do not outlive it.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import contextlib
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.writer import lakehouse_table_path
 from . import (
     entity,
     events,
@@ -132,3 +145,57 @@ def all_oracles() -> dict[str, str]:
     oracles = {name: merged[name] for name in DRIVER_WINDOW if name in merged}
     oracles.update((k, v) for k, v in merged.items() if k not in oracles)
     return oracles
+
+
+def _catalog(spark: SparkSession) -> tuple[set, set]:
+    """``(tables, databases)`` of the session catalog.  ``SHOW`` commands
+    run eagerly on the driver; ``spark.catalog.listTables()`` would
+    submit Spark jobs to iterate its result."""
+    tables = {tuple(r) for r in spark.sql("SHOW TABLES").collect()}
+    databases = {r[0] for r in spark.sql("SHOW DATABASES").collect()}
+    return tables, databases
+
+
+@contextlib.contextmanager
+def gate_scope(spark: SparkSession) -> Iterator[str]:
+    """Undo on exit whatever one gate invocation changed in ``spark``
+    and on disk: stop the streams it started, drop the temp views,
+    tables and databases (with their lakehouse zones) it created,
+    restore the runtime conf, and remove its temp files.
+    ``tempfile.tempdir`` points at a fresh directory (yielded) for the
+    duration, so the gate's ``tempfile.mkdtemp()`` calls land there.
+    Works by diffing against a snapshot taken on entry; submits no
+    Spark job."""
+    conf = spark.conf.getAll
+    tables, databases = _catalog(spark)
+    streams = {q.id for q in spark.streams.active}
+    outer_tmp = tempfile.tempdir
+    scratch = tempfile.mkdtemp(prefix="gate-scope-")
+    tempfile.tempdir = scratch
+    try:
+        yield scratch
+    finally:
+        try:
+            for query in spark.streams.active:
+                if query.id not in streams:
+                    query.stop()
+            new_tables, new_databases = _catalog(spark)
+            for namespace, name, is_temp in new_tables - tables:
+                if is_temp:
+                    spark.catalog.dropTempView(name)
+                else:
+                    spark.sql(f"DROP TABLE IF EXISTS `{namespace}`.`{name}`")
+            for db in new_databases - databases:
+                spark.sql(f"DROP DATABASE IF EXISTS `{db}` CASCADE")
+                # its Delta/Iceberg zone tables live beside the
+                # database's Spark location, under the same warehouse
+                shutil.rmtree(lakehouse_table_path(spark, db, ""), ignore_errors=True)
+            now = spark.conf.getAll
+            for key in conf.keys() | now.keys():
+                if key not in conf:
+                    spark.conf.unset(key)
+                elif conf[key] != now.get(key):
+                    spark.conf.set(key, conf[key])
+        finally:
+            tempfile.tempdir = outer_tmp
+            shutil.rmtree(scratch, ignore_errors=True)

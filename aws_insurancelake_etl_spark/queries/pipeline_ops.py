@@ -41,7 +41,9 @@ def register(name: str, oracle: str | None = None):
     return wrap
 
 
-import contextlib
+#: keys per streaming state store: enough to amortize a store's fixed
+#: open/commit/maintenance cost per micro-batch (a few MB of state)
+_STREAM_KEYS_PER_STORE = 8192
 
 
 def _stream_state_partitions(spark, keyspace: int | None = None) -> int:
@@ -63,44 +65,21 @@ def _stream_state_partitions(spark, keyspace: int | None = None) -> int:
     kind of domain knowledge a watermark delay encodes); ``None`` means
     unknown and falls back to ``defaultParallelism`` — never a literal
     constant, so an 8-core driver run and a 1000-executor cluster both
-    get a sane width.  ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` remains
-    the explicit override; ``SPARK_GRAFT_STREAM_KEYS_PER_PARTITION``
-    tunes the amortization target (default 8192 keys ≈ a few MB of
-    state per store, far above the per-store fixed cost)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return int(env)
+    get a sane width."""
     par = spark.sparkContext.defaultParallelism
     if keyspace is None:
         return par
-    per = int(os.environ.get("SPARK_GRAFT_STREAM_KEYS_PER_PARTITION", "8192"))
-    return max(1, min(par, -(-int(keyspace) // max(1, per))))
-
-
-@contextlib.contextmanager
-def _stream_state_conf(spark, keyspace: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` to the derived streaming
-    state width (:func:`_stream_state_partitions`) for the duration of
-    a stream's run.  Batch queries self-correct at runtime (AQE
-    coalescing); streaming state does not, hence the explicit width.
-    Safe for the sequential gate harness; concurrent streams sharing a
-    session would need per-query scoping instead (ADVICE r12)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _stream_state_partitions(spark, keyspace),
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return max(1, min(par, -(-int(keyspace) // _STREAM_KEYS_PER_STORE)))
 
 
 def _drain_stream(spark, writer, keyspace: int | None = None):
-    """Start an availableNow stream under keyspace-sized state
-    partitioning (:func:`_stream_state_conf`) and block until it
-    drains.  The conf must span ``start()`` through termination because
-    micro-batch planning happens on the stream thread after start.
+    """Set ``spark.sql.shuffle.partitions`` to the derived streaming
+    state width (:func:`_stream_state_partitions`), start an
+    availableNow stream and block until it drains.  Batch queries
+    self-correct at runtime (AQE coalescing); streaming state does not,
+    hence the explicit width.  The previous width is set back once the
+    stream ends, so a caller without a ``gate_scope`` (and the gate's
+    own returned frame) plans batch shuffles at the session's width.
 
     Retries (up to 2x) a start that dies in "Python worker failed to
     connect back": Spark's driver-side PythonStreamingSourceRunner
@@ -113,7 +92,12 @@ def _drain_stream(spark, writer, keyspace: int | None = None):
     re-raises unchanged."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    with _stream_state_conf(spark, keyspace):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        _stream_state_partitions(spark, keyspace),
+    )
+    try:
         for attempt in range(3):
             query = writer.trigger(availableNow=True).start()
             try:
@@ -128,6 +112,8 @@ def _drain_stream(spark, writer, keyspace: int | None = None):
                 if "failed to connect back" not in msg:
                     raise
         raise AssertionError("unreachable")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 _PIPE_SPEC = {
@@ -1362,12 +1348,18 @@ def stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "value")
     )
     # stateless stream (foreachBatch merge); width feeds the inner
-    # per-batch DML keyed by user (~1.5k at sf0.1)
-    with _stream_state_conf(spark, keyspace=2_048):
-        query = streaming_upsert_totals(
+    # per-batch DML keyed by user (~1.5k at sf0.1), set back after
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        _stream_state_partitions(spark, keyspace=2_048),
+    )
+    try:
+        streaming_upsert_totals(
             stream, table, tempfile.mkdtemp(prefix=f"gate-upsert-ckpt-{run_id}-")
-        )
-        query.awaitTermination()
+        ).awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(table).select(
         "user_id", "n_events", F.col("total_value").cast("double").alias("total_value")
     )
@@ -2583,6 +2575,14 @@ def src_delta_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _session_scratch(spark: SparkSession, prefix: str) -> str:
+    """A new directory that lives as long as the Spark context, for the
+    fixtures memoized per session below: under PySpark's context temp
+    dir, which Spark deletes at shutdown.  A gate's plain
+    ``tempfile.mkdtemp()`` dirs live only as long as its ``gate_scope``."""
+    return tempfile.mkdtemp(prefix=prefix, dir=spark.sparkContext._temp_dir)  # noqa: SLF001
+
+
 #: (session id, sf_dir) -> CDF fixture table path.  The batch and
 #: streamed change-feed gates read the IDENTICAL 4-commit table; the
 #: table is immutable once built, so building it once per session
@@ -2605,7 +2605,7 @@ def _cdf_fixture_table(spark: SparkSession, sf_dir: str) -> str:
         .cast("bigint")
         .alias("price_cents"),
     )
-    tbl = tempfile.mkdtemp(prefix="gate-delta-cdf-") + "/t"
+    tbl = _session_scratch(spark, "gate-delta-cdf-") + "/t"
     delta_lite.write_delta(
         base.where(F.col("o_orderkey") % 4 == 0), tbl,
         configuration={"delta.enableChangeDataFeed": "true"},
@@ -3355,7 +3355,7 @@ def _compaction_fixture_table(spark: SparkSession, sf_dir: str) -> str:
         .cast("bigint")
         .alias("price_cents"),
     )
-    tbl = tempfile.mkdtemp(prefix="gate-iceberg-compact-fx-") + "/t"
+    tbl = _session_scratch(spark, "gate-iceberg-compact-fx-") + "/t"
     iceberg_lite.write_iceberg(
         spark, base.where(F.col("o_orderkey") % 8 == 0).repartition(4), tbl
     )

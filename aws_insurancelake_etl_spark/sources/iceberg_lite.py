@@ -562,6 +562,19 @@ def _field_names_by_id(meta: dict) -> dict:
     return {int(f["id"]): f["name"] for f in schema["fields"]}
 
 
+def _eq_delete_reader(spark: SparkSession, meta: dict, eq_ids, cols):
+    """``spark.read`` for equality-delete files equating ``eq_ids``
+    (named ``cols``), their columns typed from the table schema by
+    field id, so building the read infers no Parquet schema.  A type
+    with no Spark mapping falls back to the files' footers."""
+    ice_types = _field_types_by_id(meta)
+    types = [_spark_type_from_ice(ice_types.get(i)) for i in eq_ids]
+    if any(t is None for t in types):
+        return spark.read
+    return spark.read.schema(", ".join(
+        f"`{c}` {t.simpleString()}" for c, t in zip(cols, types)))
+
+
 def _partition_spec_fields(
     meta: dict, spec_id: int | None = None
 ) -> list[PartitionField]:
@@ -1015,7 +1028,7 @@ def create_ref(
     refs[name] = {"snapshot-id": int(snapshot_id), "type": ref_type}
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    _commit_metadata(table_path, loaded + 1, new_meta)
+    _commit_metadata(table_path, loaded + 1, new_meta, meta)
     return refs[name]
 
 
@@ -1031,7 +1044,7 @@ def drop_ref(table_path: str, name: str) -> None:
     del refs[name]
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    _commit_metadata(table_path, loaded + 1, new_meta)
+    _commit_metadata(table_path, loaded + 1, new_meta, meta)
 
 
 def fast_forward(
@@ -1082,7 +1095,7 @@ def fast_forward(
     if to == "main":
         new_meta["current-snapshot-id"] = src_head
     version = loaded + 1
-    _commit_metadata(table_path, version, new_meta)
+    _commit_metadata(table_path, version, new_meta, meta)
     return {"updated": True, "ref": to, "snapshot_id": src_head,
             "previous_snapshot_id": to_head, "version": version}
 
@@ -1452,7 +1465,8 @@ def read_iceberg_changelog(
                         ),
                     )
                     del_vals = (
-                        spark.read.parquet(*[d.path for d in group])
+                        _eq_delete_reader(spark, meta, eq_ids, cols)
+                        .parquet(*[d.path for d in group])
                         .select(
                             *[F.col(c).alias(f"__eq_{c}") for c in cols],
                             F.regexp_replace(
@@ -2757,9 +2771,9 @@ def _read_plan(
                 ])
                 for d in group
             ]
-            eq_base = spark.read.parquet(
-                *[d.path for d in group]
-            ).select(
+            eq_base = _eq_delete_reader(
+                spark, scope_meta, eq_ids, cols
+            ).parquet(*[d.path for d in group]).select(
                 *[F.col(c).alias(f"__eq_{c}") for c in cols],
                 _norm(F.col("_metadata.file_path")).alias("dfile"),
             )
@@ -4029,7 +4043,9 @@ def _write_manifest(
     )
 
 
-def _try_commit_metadata(table_path: str, version: int, meta: dict) -> bool:
+def _try_commit_metadata(
+    table_path: str, version: int, meta: dict, prior: dict | None
+) -> bool:
     meta_dir = os.path.join(table_path, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
     # spec §Table Metadata history lists (round 11), maintained
@@ -4038,54 +4054,29 @@ def _try_commit_metadata(table_path: str, version: int, meta: dict) -> bool:
     # current-snapshot-id — the list TIMESTAMP AS OF must resolve
     # against (after a rollback, "as of now" is the rolled-back-TO
     # snapshot; creation timestamps alone cannot express that).
+    # ``prior`` is the metadata of v{version - 1} the caller built on
+    # (None on create), so the commit reads no metadata file.
     import time as _lg_time
 
-    meta = dict(meta)
-    prev_versions = _metadata_versions(meta_dir)
+    meta, known = dict(meta), prior or {}
     now_ms = int(_lg_time.time() * 1000)
-    if prev_versions:
-        prev_v = prev_versions[-1]
-        prev_file = os.path.join(meta_dir, f"v{prev_v}.metadata.json")
-        try:
-            with open(prev_file, encoding="utf-8") as fh:
-                prev_meta = json.load(fh)
-        except (OSError, ValueError):
-            prev_meta = {}
-        mlog = list(prev_meta.get("metadata-log") or [])
-        mlog.append(
+    if prior is not None:
+        keep = int((meta.get("properties") or {}).get(
+            "write.metadata.previous-versions-max", 100) or 100)
+        meta["metadata-log"] = [
+            *(prior.get("metadata-log") or []),
             {
-                "timestamp-ms": int(
-                    prev_meta.get("last-updated-ms") or now_ms
-                ),
+                "timestamp-ms": int(prior.get("last-updated-ms") or now_ms),
                 "metadata-file": f"{table_path}/metadata/"
-                f"v{prev_v}.metadata.json",
-            }
-        )
-        keep = int(
-            (meta.get("properties") or {}).get(
-                "write.metadata.previous-versions-max", 100
-            )
-            or 100
-        )
-        meta["metadata-log"] = mlog[-keep:]
-        slog = list(prev_meta.get("snapshot-log") or [])
-        if meta.get("current-snapshot-id") is not None and meta.get(
-            "current-snapshot-id"
-        ) != prev_meta.get("current-snapshot-id"):
-            slog.append(
-                {
-                    "timestamp-ms": now_ms,
-                    "snapshot-id": meta["current-snapshot-id"],
-                }
-            )
+                f"v{version - 1}.metadata.json",
+            },
+        ][-keep:]
+    slog = list(known.get("snapshot-log") or [])
+    current = meta.get("current-snapshot-id")
+    if current is not None and current != known.get("current-snapshot-id"):
+        slog.append({"timestamp-ms": now_ms, "snapshot-id": current})
+    if prior is not None or slog:
         meta["snapshot-log"] = slog
-    elif meta.get("current-snapshot-id") is not None:
-        meta["snapshot-log"] = [
-            {
-                "timestamp-ms": now_ms,
-                "snapshot-id": meta["current-snapshot-id"],
-            }
-        ]
     meta["last-updated-ms"] = now_ms
     target = os.path.join(meta_dir, f"v{version}.metadata.json")
     try:
@@ -4103,14 +4094,17 @@ def _try_commit_metadata(table_path: str, version: int, meta: dict) -> bool:
 
 
 def _commit_metadata(
-    table_path: str, version: int, meta: dict, staged=()
+    table_path: str, version: int, meta: dict, prior: dict | None,
+    staged=(),
 ) -> int:
     """The one Iceberg commit exit: claim ``metadata/v{version}`` for
-    ``meta`` (:func:`_try_commit_metadata`).  Losing the race deletes
-    the ``staged`` files (table-relative manifests and manifest list
-    this commit wrote; no metadata will ever reference them) and raises
-    :class:`ConcurrentIcebergWrite`.  Returns ``version``."""
-    if not _try_commit_metadata(table_path, version, meta):
+    ``meta`` built on ``prior``, the loaded metadata of the version
+    before (None on create; :func:`_try_commit_metadata`).  Losing the
+    race deletes the ``staged`` files (table-relative manifests and
+    manifest list this commit wrote; no metadata will ever reference
+    them) and raises :class:`ConcurrentIcebergWrite`.  Returns
+    ``version``."""
+    if not _try_commit_metadata(table_path, version, meta, prior):
         discard_files(table_path, staged)
         raise ConcurrentIcebergWrite(
             f"metadata v{version} of {table_path} was committed "
@@ -4946,7 +4940,7 @@ def _commit_snapshot(
     refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
     new_meta["refs"] = refs
     return _commit_metadata(
-        table_path, snap_id, new_meta,
+        table_path, snap_id, new_meta, meta,
         staged=_written_metadata(snap_id, new_manifests, ml_rel),
     )
 
@@ -5891,7 +5885,7 @@ def set_iceberg_properties(table_path: str, properties: dict) -> int:
             props[k] = str(v)
     new_meta = dict(meta)
     new_meta["properties"] = props
-    return _commit_metadata(table_path, loaded + 1, new_meta)
+    return _commit_metadata(table_path, loaded + 1, new_meta, meta)
 
 
 def set_sort_order(table_path: str, order: list) -> dict:
@@ -5959,7 +5953,7 @@ def set_sort_order(table_path: str, order: list) -> dict:
     new_meta["sort-orders"] = orders
     new_meta["default-sort-order-id"] = new_id
     version = loaded + 1
-    _commit_metadata(table_path, version, new_meta)
+    _commit_metadata(table_path, version, new_meta, meta)
     return {"order_id": new_id, "version": version}
 
 
@@ -6145,7 +6139,7 @@ def _carry_commit(
     refs["main"] = {"snapshot-id": snap_id, "type": "branch"}
     new_meta["refs"] = refs
     _commit_metadata(
-        table_path, version, new_meta,
+        table_path, version, new_meta, meta,
         staged=_written_metadata(snap_id, new_manifests, ml_rel),
     )
     return {"manifests_before": before, "manifests_after": len(groups),
@@ -6709,7 +6703,7 @@ def alter_iceberg_schema(
     new_meta["last-column-id"] = max(_last_column_id(meta), next_id)
     new_meta.pop("schema", None)  # the v1 single-schema form is stale now
     version = loaded + 1
-    _commit_metadata(table_path, version, new_meta)
+    _commit_metadata(table_path, version, new_meta, meta)
     return {"schema_id": new_sid, "version": version}
 
 
@@ -6742,7 +6736,7 @@ def upgrade_iceberg_format(table_path: str, to_version: int = 3) -> dict:
     new_meta["format-version"] = to_version
     if "next-row-id" not in new_meta:
         new_meta["next-row-id"] = 0
-    _commit_metadata(table_path, loaded + 1, new_meta)
+    _commit_metadata(table_path, loaded + 1, new_meta, meta)
     return {"format_version": to_version, "upgraded": True}
 
 
@@ -6769,7 +6763,7 @@ def rollback_to_snapshot(table_path: str, snapshot_id) -> dict:
     refs["main"] = {"snapshot-id": int(target), "type": "branch"}
     new_meta["refs"] = refs
     version = loaded + 1
-    _commit_metadata(table_path, version, new_meta)
+    _commit_metadata(table_path, version, new_meta, meta)
     return {"previous_snapshot_id": prior, "current_snapshot_id": target,
             "version": version}
 
@@ -6883,7 +6877,7 @@ def expire_snapshots(
     new_meta = dict(meta)
     new_meta["snapshots"] = retained
     # commit before deleting: a lost claim leaves every file in place
-    _commit_metadata(table_path, version, new_meta)
+    _commit_metadata(table_path, version, new_meta, meta)
     deleted = 0
     root = os.path.abspath(table_path) + os.sep
     for path in sorted(dead - live):

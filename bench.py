@@ -5,17 +5,20 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value"
 "queries_normalized", "regressions", "burst_rechecked"}; the same line is
 saved to ``bench_last.json``.
 
-Each query is fully materialized via the no-op sink (all operators execute,
-nothing is collected back to Python).  One warmup pass over every query
-absorbs JVM/codegen startup, then two timed passes keep the minimum per
-query.  Times are normalized by an md5 calibration probe sampled three
-times through the run; a query slower than its baseline on both the
-normalized and raw axes (see ``compute_regressions``) is re-timed once and,
-if still flagged, makes the run exit with status 1.
+Each query is built and fully materialized via the no-op sink (all
+operators execute, nothing is collected back to Python) inside its own
+``gate_scope``, which undoes the gate's session and temp-dir state after
+the clock stops.  One warmup pass over every query absorbs JVM/codegen
+startup, then two timed passes keep the minimum per query.  Times are
+normalized by an md5 calibration probe sampled three times through the
+run; a query slower than its baseline on both the normalized and raw axes
+(see ``compute_regressions``) is re-timed once and, if still flagged,
+makes the run exit with status 1.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -24,7 +27,7 @@ from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from aws_insurancelake_etl_spark.queries import all_queries  # noqa: E402
+from aws_insurancelake_etl_spark.queries import all_queries, gate_scope  # noqa: E402
 from aws_insurancelake_etl_spark.session import build_session  # noqa: E402
 
 # Versioned per-query CALIB-NORMALIZED baselines (seconds at calib_ref
@@ -448,6 +451,26 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def calib_sample() -> float:
+    """Single-thread calibration (md5 of 10^5 short strings): absolute
+    query seconds on a shared VM drift with host load / CPU steal
+    between rounds; dividing by this figure normalizes cross-round
+    comparisons."""
+    start = time.time()
+    for i in range(100_000):
+        hashlib.md5(str(i).encode()).hexdigest()
+    return round(time.time() - start, 4)
+
+
+def timed_gate(spark, fn, sf_dir: str) -> float:
+    """Seconds to build and materialize one gate inside its own
+    :func:`gate_scope`; the clock stops before the scope's cleanup."""
+    with gate_scope(spark):
+        start = time.time()
+        materialize(fn(spark, sf_dir))
+        return round(time.time() - start, 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -455,22 +478,11 @@ def main() -> None:
                           extra_confs={"spark.ui.enabled": "false"})
     queries = all_queries()
 
-    # Single-thread calibration (md5 of 10^5 short strings): absolute query
-    # seconds on a shared VM drift with host load / CPU steal between rounds;
-    # dividing by this figure normalizes cross-round comparisons.  One
-    # sample is itself too noisy (finding 45: 0.0663-0.0887 s between runs
-    # minutes apart = 34%, the same magnitude as the drift it corrects), so
-    # three samples are INTERLEAVED through the run and the MEDIAN used —
-    # an estimate of host speed during the measured window, not at one
-    # instant.
-    import hashlib  # noqa: PLC0415
-
-    def calib_sample() -> float:
-        start = time.time()
-        for i in range(100_000):
-            hashlib.md5(str(i).encode()).hexdigest()
-        return round(time.time() - start, 4)
-
+    # One calib_sample is itself too noisy (finding 45: 0.0663-0.0887 s
+    # between runs minutes apart = 34%, the same magnitude as the drift
+    # it corrects), so three samples are INTERLEAVED through the run and
+    # the MEDIAN used — an estimate of host speed during the measured
+    # window, not at one instant.
     calib_samples = []
 
     # SPARK-SHAPED calibration probe (finding 47's documented blind
@@ -502,7 +514,7 @@ def main() -> None:
     # measures steady state (JIT-compiled codegen, parquet footer caches,
     # broadcast relations) instead of first-run JVM noise.
     for name in HEADLINE:
-        materialize(queries[name](spark, sf_dir))
+        timed_gate(spark, queries[name], sf_dir)
 
     calib_samples.append(calib_sample())
     calib_shuffle_samples.append(calib_shuffle_sample())
@@ -512,9 +524,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     for _ in range(2):
         for name in HEADLINE:
-            start = time.time()
-            materialize(queries[name](spark, sf_dir))
-            elapsed = round(time.time() - start, 3)
+            elapsed = timed_gate(spark, queries[name], sf_dir)
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
 
@@ -543,9 +553,7 @@ def main() -> None:
     if regressions:
         for name in sorted(regressions):
             rechecked.append(name)
-            start = time.time()
-            materialize(queries[name](spark, sf_dir))
-            elapsed = round(time.time() - start, 3)
+            elapsed = timed_gate(spark, queries[name], sf_dir)
             if elapsed < timings[name]:
                 timings[name] = elapsed
                 normalized[name] = round(elapsed * scale, 3)

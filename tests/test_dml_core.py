@@ -776,6 +776,32 @@ def test_row_level_metadata_reads(spark, tmp_path, monkeypatch, op, fv):
     )
 
 
+def test_iceberg_commit_reads_no_prior_metadata(spark, tmp_path, monkeypatch):
+    """A commit builds the metadata and snapshot logs from the metadata
+    its writer already loaded: one UPDATE opens the current
+    ``vN.metadata.json`` once, for its plan."""
+    path = str(tmp_path / "t")
+    il.write_iceberg(spark, spark.createDataFrame(_rows(0, 8)), path)
+    opened = []
+
+    def tracked_open(file, *a, **k):
+        if str(file).endswith(".metadata.json"):
+            opened.append(os.path.basename(str(file)))
+        return open(file, *a, **k)
+
+    monkeypatch.setattr(il, "open", tracked_open, raising=False)
+    il.update_iceberg(spark, path, {"v": "'x'"}, "k = 3")
+    monkeypatch.undo()
+    assert opened == ["v1.metadata.json"]
+    meta = il._load_metadata(path)
+    assert meta["metadata-log"][-1]["metadata-file"].endswith(
+        "/metadata/v1.metadata.json"
+    )
+    assert [e["snapshot-id"] for e in meta["snapshot-log"]] == [
+        s["snapshot-id"] for s in meta["snapshots"]
+    ]
+
+
 def test_truncated_table_reads_as_a_local_relation(spark, tmp_path, fmt):
     """A table with no live file reads as an empty local relation, which
     the optimizer folds through joins and unions, not as a scan of an

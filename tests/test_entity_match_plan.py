@@ -155,9 +155,9 @@ def test_match_build_stays_within_job_budget(spark, count_jobs):
 
 
 def test_em_full_flow_stays_within_job_budget(spark, count_jobs, sf_dir):
-    from aws_insurancelake_etl_spark.queries import all_queries
+    from aws_insurancelake_etl_spark.queries import all_queries, gate_scope
 
-    df = all_queries()["em_full_flow"](spark, sf_dir)
-    assert count_jobs(lambda: df.write.format("noop").mode("overwrite").save()) <= (
-        EM_FULL_FLOW_JOB_BUDGET
-    )
+    with gate_scope(spark):
+        df = all_queries()["em_full_flow"](spark, sf_dir)
+        jobs = count_jobs(lambda: df.write.format("noop").mode("overwrite").save())
+    assert jobs <= EM_FULL_FLOW_JOB_BUDGET

@@ -19,7 +19,7 @@ import tempfile
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from aws_insurancelake_etl_spark.queries import all_queries
+from aws_insurancelake_etl_spark.queries import all_queries, gate_scope
 
 
 def _write_embeddings(tmp: str, sub: str, float_type: pa.DataType) -> str:
@@ -54,8 +54,9 @@ def _write_documents(tmp: str, sub: str, int_type: pa.DataType) -> str:
     return sf_dir
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+def _rows(spark, query, sf_dir):
+    with gate_scope(spark):
+        return sorted(tuple(r) for r in query(spark, sf_dir).collect())
 
 
 def test_embedding_queries_survive_float32_and_float64(spark):
@@ -64,8 +65,8 @@ def test_embedding_queries_survive_float32_and_float64(spark):
         d32 = _write_embeddings(tmp, "f32", pa.float32())
         d64 = _write_embeddings(tmp, "f64", pa.float64())
         for name in ("ann_cosine_topk", "emb_label_norm_stats", "emb_semdedup_keep"):
-            r32 = _rows(queries[name](spark, d32))
-            r64 = _rows(queries[name](spark, d64))
+            r32 = _rows(spark, queries[name], d32)
+            r64 = _rows(spark, queries[name], d64)
             assert r32 == r64, f"{name} differs across embedding encodings"
             assert r32, f"{name} returned no rows on the canary fixture"
 
@@ -76,7 +77,7 @@ def test_document_queries_survive_int32_and_int64_counters(spark):
         d32 = _write_documents(tmp, "i32", pa.int32())
         d64 = _write_documents(tmp, "i64", pa.int64())
         for name in ("docs_lang_rebalance", "docs_source_cap", "text_token_stats"):
-            r32 = _rows(queries[name](spark, d32))
-            r64 = _rows(queries[name](spark, d64))
+            r32 = _rows(spark, queries[name], d32)
+            r64 = _rows(spark, queries[name], d64)
             assert r32 == r64, f"{name} differs across counter encodings"
             assert r32, f"{name} returned no rows on the canary fixture"

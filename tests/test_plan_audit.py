@@ -13,15 +13,16 @@ import re
 
 import pytest
 
-from aws_insurancelake_etl_spark.queries import all_queries
+from aws_insurancelake_etl_spark.queries import all_queries, gate_scope
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def plan_of(spark, name: str) -> str:
-    df = all_queries()[name](spark, SF_DIR)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
+    with gate_scope(spark):
+        df = all_queries()[name](spark, SF_DIR)
+        return df._jdf.queryExecution().explainString(mode)
 
 
 def read_schemas(plan: str) -> list[str]:
@@ -105,8 +106,9 @@ def test_salted_agg_two_stage_shape(spark):
     keys+salt, final over keys) and the salt column never escapes."""
     plan = plan_of(spark, "evt_salted_hotkey_agg")
     assert plan.count("HashAggregate") >= 4
-    df = all_queries()["evt_salted_hotkey_agg"](spark, SF_DIR)
-    assert "__salt" not in df.columns
+    with gate_scope(spark):
+        df = all_queries()["evt_salted_hotkey_agg"](spark, SF_DIR)
+        assert "__salt" not in df.columns
 
 
 def test_q18_aggregates_before_join(spark):
@@ -414,10 +416,7 @@ def test_pc1_projection_is_narrow(spark):
     PC1 projection must be a literal-weight map pass: the returned plan
     (projection over the scan) has no exchange at all beyond the spread
     repartition, and no window."""
-    from aws_insurancelake_etl_spark.queries import all_queries
-    df = all_queries()["emb_pc1_scores"](spark, SF_DIR)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = df._jdf.queryExecution().explainString(mode)
+    plan = plan_of(spark, "emb_pc1_scores")
     assert "Window" not in plan
     assert "HashAggregate" not in plan  # scoring is per-row, not an agg
 

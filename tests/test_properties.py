@@ -412,6 +412,7 @@ def test_funnel_attribution_conserves_value(spark, rows):
     must each also sum to that same total (one winner per purchase)."""
     import datetime
 
+    from aws_insurancelake_etl_spark.queries import gate_scope
     from aws_insurancelake_etl_spark.queries.events import QUERIES
 
     base = datetime.datetime(2024, 1, 1)
@@ -436,7 +437,8 @@ def test_funnel_attribution_conserves_value(spark, rows):
         orig2 = evmod.read_events
         evmod.read_events = lambda spark_, sf_dir_: df
         try:
-            out = QUERIES["evt_funnel_attribution"](spark, "unused").collect()
+            with gate_scope(spark):
+                out = QUERIES["evt_funnel_attribution"](spark, "unused").collect()
         finally:
             evmod.read_events = orig2
     finally:

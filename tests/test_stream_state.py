@@ -1,7 +1,7 @@
 """Pin the streaming state-partition derivation (VERDICT r12 item 4).
 
 ``_stream_state_partitions`` is a pure function of (keyspace hint,
-defaultParallelism, env overrides) — no Spark session needed."""
+defaultParallelism) — no Spark session needed."""
 
 from __future__ import annotations
 
@@ -22,40 +22,23 @@ def _spark(parallelism: int):
     )
 
 
-def test_small_keyspace_gets_one_store(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_KEYS_PER_PARTITION", raising=False)
+def test_small_keyspace_gets_one_store():
     assert _stream_state_partitions(_spark(32), keyspace=5) == 1
 
 
-def test_keyspace_scales_by_amortization_target(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_KEYS_PER_PARTITION", raising=False)
+def test_keyspace_scales_by_amortization_target():
     # ceil(24000 / 8192) = 3
     assert _stream_state_partitions(_spark(32), keyspace=24_000) == 3
     # ceil(131072 / 8192) = 16
     assert _stream_state_partitions(_spark(32), keyspace=131_072) == 16
 
 
-def test_huge_keyspace_clamps_to_parallelism(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_KEYS_PER_PARTITION", raising=False)
+def test_huge_keyspace_clamps_to_parallelism():
     assert _stream_state_partitions(_spark(32), keyspace=10**8) == 32
     assert _stream_state_partitions(_spark(8), keyspace=10**8) == 8
 
 
-def test_unknown_keyspace_tracks_parallelism(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+def test_unknown_keyspace_tracks_parallelism():
     assert _stream_state_partitions(_spark(8), keyspace=None) == 8
     assert _stream_state_partitions(_spark(32), keyspace=None) == 32
 
-
-def test_env_override_wins(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "12")
-    assert _stream_state_partitions(_spark(32), keyspace=5) == 12
-
-
-def test_keys_per_partition_env_tunes_target(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_KEYS_PER_PARTITION", "1000")
-    assert _stream_state_partitions(_spark(32), keyspace=5_000) == 5

@@ -3,7 +3,8 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at the given scale factor, then compares row count, column names,
 and order-insensitive values (columns sorted by name, rows sorted by all
-columns, values normalized to strings).
+columns, values normalized to strings).  Each query runs and is collected
+inside its own ``gate_scope``, so no gate sees state an earlier one left.
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 """
@@ -60,6 +61,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
+    from aws_insurancelake_etl_spark.queries import gate_scope
     from aws_insurancelake_etl_spark.session import build_session
 
     spark = build_session(app_name="oracle-check", master="local[8]",
@@ -81,7 +83,8 @@ def main() -> int:
         ran += 1
         t0 = time.time()
         try:
-            spark_pdf = fn(spark, sf_dir).toPandas()
+            with gate_scope(spark):
+                spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception:
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
             failures.append(name)

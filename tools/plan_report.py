@@ -4,8 +4,9 @@ Usage: python tools/plan_report.py [sf_dir]  (default /root/testdata/sf0.001)
 
 One section per query: the simple-mode physical plan plus a one-line
 tally of scale-relevant operators (exchanges, broadcast/sort-merge joins,
-whole-stage-codegen coverage).  Streaming / side-effecting entries that
-cannot be planned without executing are skipped with a note.
+whole-stage-codegen coverage).  Each query is planned inside its own
+``gate_scope``: side-effecting entries (pipeline writes, streams) execute
+their setup to reach their final read, and the scope undoes it.
 """
 
 from __future__ import annotations
@@ -16,25 +17,8 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from aws_insurancelake_etl_spark.queries import all_queries  # noqa: E402
+from aws_insurancelake_etl_spark.queries import all_queries, gate_scope  # noqa: E402
 from aws_insurancelake_etl_spark.session import build_session  # noqa: E402
-
-# Entries whose construction executes work (pipeline write, streaming query)
-# rather than just building a plan.
-SKIP = {
-    "pipeline_collect_to_cleanse": "executes the full pipeline (writes tables)",
-    "pipeline_cleanse_lakehouse": "executes the full pipeline (writes tables)",
-    "pipeline_cleanse_to_consume": "executes the consume stage (writes tables)",
-    "stream_windowed_counts": "starts a streaming query",
-    "stream_stateful_user_totals": "starts a stateful streaming query",
-    "stream_dedup_replay": "starts a streaming query",
-    "stream_session_windows": "starts a streaming query",
-    "src_xml_roundtrip": "writes the XML drop fixture (executes a job)",
-    "stream_upsert_totals": "starts a streaming query (foreachBatch merges)",
-    "dq_stats_rules": "evaluates the stage aggregation (executes a job)",
-    "sink_partition_clear": "writes a warehouse table twice (executes jobs)",
-    "stream_iceberg_upsert_sink": "starts a streaming query (foreachBatch upserts)",
-}
 
 
 def main() -> None:
@@ -56,11 +40,9 @@ def main() -> None:
     ]
     for name, fn in sorted(all_queries().items()):
         lines.append(f"## {name}")
-        if name in SKIP:
-            lines.append(f"_skipped: {SKIP[name]}_\n")
-            continue
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
+            with gate_scope(spark):
+                plan = fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
         except Exception as err:  # pragma: no cover - report, don't die
             lines.append(f"_plan unavailable: {err}_\n")
             continue
